@@ -217,7 +217,7 @@ def q_minhash_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     # non-distinct shingles: MIN over the multiset equals MIN over the set,
     # so the per-doc distinct's extra exchange buys nothing here — the min
     # aggregate partial-combines map-side either way (one shuffle, not two)
-    sigs = minhash_signatures(_doc_shingles(spark, sf_dir, distinct=False), cfg, family="md5")
+    sigs = minhash_signatures(_doc_shingles(spark, sf_dir, distinct=False), cfg)
     return lsh_bands(sigs, cfg).select(F.col("conv_id").alias("doc_id"), "band_idx", "band_hash")
 
 
@@ -1021,7 +1021,7 @@ def q_transcript_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from deduputil_spark.plans.pipeline import run_pipeline
 
     t = _synth_transcripts(spark)
-    res = run_pipeline(spark, t, DedupConfig(), checkpoint_dir=None, with_exact_dedup=False)
+    res = run_pipeline(spark, t, DedupConfig())
     return res.clusters
 
 

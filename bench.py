@@ -68,7 +68,6 @@ def run_bench(sf_dir: str, cpus: int) -> dict:
 
     import __spark_entry__ as em
     from deduputil_spark.config import DedupConfig
-    from deduputil_spark.plans.pipeline import run_pipeline
     from deduputil_spark.session import get_spark
 
     corpus_path, n_turns = ensure_corpus(sf_dir)
@@ -84,11 +83,11 @@ def run_bench(sf_dir: str, cpus: int) -> dict:
     t = spark.read.parquet(corpus_path)
 
     # headline: full near-dup pipeline (assemble→minhash→lsh→verify→cluster)
-    # in production shape (run_pipeline_lean: no per-stage counts).  One full
+    # in production shape (run_pipeline default: no per-stage counts).  One full
     # warmup run first — cold-JVM JIT otherwise dominates (~2.5× noise).
-    from deduputil_spark.plans.pipeline import run_pipeline_lean
+    from deduputil_spark.plans.pipeline import run_pipeline
 
-    run_pipeline_lean(spark, t, DedupConfig()).clusters.count()
+    run_pipeline(spark, t, DedupConfig()).clusters.count()
     spark.catalog.clearCache()
     # best-of-2 measured runs: host throughput on this VM drifts ±50% across
     # a session (same commit measured 35s and 53s twenty minutes apart), and
@@ -96,7 +95,7 @@ def run_bench(sf_dir: str, cpus: int) -> dict:
     best = None
     for _ in range(2):
         t0 = time.monotonic()
-        res = run_pipeline_lean(spark, t, DedupConfig())
+        res = run_pipeline(spark, t, DedupConfig())
         n_clustered = res.clusters.count()
         elapsed = time.monotonic() - t0
         best = elapsed if best is None or elapsed < best else best
@@ -640,7 +639,7 @@ def run_scaling(sf_dir: str) -> None:
     with open(md, "w") as f:
         f.write(f"""# Scaling evidence — {_sf_name(sf_dir)} ({runs[hi][0]["n_turns"]} turns, seed 42)
 
-Same job (`run_pipeline_lean`, warm, best-of-2 in-JVM runs per leg) at
+Same job (`run_pipeline`, warm, best-of-2 in-JVM runs per leg) at
 local[{lo}] (N) and local[{hi}] (4N), {n_pairs} interleaved pairs, hardware
 probe run in the SAME session before/between/after the legs.
 
@@ -706,8 +705,8 @@ if __name__ == "__main__":
         run_scaling(sf_dir)
     elif os.environ.get("SPARK_GRAFT_BENCH_ONCE"):
         # one leg of the best-of-N artifact: a single fresh-JVM suite run
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
         print(json.dumps(run_bench(sf_dir, cpus)))
     else:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
         print(json.dumps(run_bench_bestof(sf_dir, cpus)))

@@ -11,7 +11,7 @@ Usage:
   python bench_extra.py --cdc               # cdc_exact_dedup stage breakdown
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS
-(default 32) — same contract as bench.py.
+(default: the host CPU count) — same contract as bench.py.
 """
 
 from __future__ import annotations
@@ -26,7 +26,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from bench import BENCH_CONF, ensure_corpus  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
 
 
 def _spark():
@@ -50,7 +50,7 @@ def _noop(df, desc: str) -> float:
 
 
 def run_stages() -> None:
-    """pipeline_cluster broken into its stages (mirrors run_pipeline_lean's
+    """pipeline_cluster broken into its stages (mirrors run_pipeline's default
     persists; per-stage actions shift persist costs onto the stage that
     materializes them — attribution, not an official total)."""
     from deduputil_spark.cache import release_caches, track
@@ -67,9 +67,9 @@ def run_stages() -> None:
     cfg = DedupConfig()
 
     # warm run (JIT) exactly like bench.py
-    from deduputil_spark.plans.pipeline import run_pipeline_lean
+    from deduputil_spark.plans.pipeline import run_pipeline
 
-    run_pipeline_lean(spark, t, cfg).clusters.count()
+    run_pipeline(spark, t, cfg).clusters.count()
     release_caches()
     spark.catalog.clearCache()
 

@@ -1,19 +1,19 @@
 """MinHash signatures + LSH banding.
 
-Two interchangeable hash families:
+Two signature builders:
 
-- "md5"   — minhash_i = MIN(md5(shingle || '#' || i)).  Lexicographic min over
-  a uniform 128-bit hex hash is a valid min-wise permutation approximation,
-  and — crucially — `md5` is bit-identical in Spark and DuckDB, so signatures,
-  band keys, and candidate pairs get EXACT SQL oracles (the correctness gate).
-- "xxhash" — one xxhash64 per shingle, then num_perm universal-hash rehashes
-  ((a_i·h + b_i) mod p) — the fast path (64-bit int ops instead of num_perm
-  md5s per shingle row).
-
-Both are single hash-aggregate shuffles: num_perm MIN() aggregate expressions
-per document (columnar, partial aggregation applies — Catalyst computes
-map-side partial mins before the exchange, so the shuffle carries one
-num_perm-wide row per (doc × partition), NOT per shingle).
+- `minhash_signatures_numpy` — the production path: one-permutation hashing
+  (OPH) over numpy k-gram hashes, computed batch-at-a-time in mapInArrow
+  straight off the Arrow string buffer (narrow, no shingle shuffle).
+- `minhash_signatures` — the "md5" oracle family: minhash_i =
+  MIN(md5(shingle || '#' || i)).  Lexicographic min over a uniform 128-bit
+  hex hash is a valid min-wise permutation approximation, and — crucially —
+  `md5` is bit-identical in Spark and DuckDB, so signatures, band keys, and
+  candidate pairs get EXACT SQL oracles (the correctness gate).  It is a
+  single hash-aggregate shuffle: num_perm MIN() aggregate expressions per
+  document (Catalyst computes map-side partial mins before the exchange, so
+  the shuffle carries one num_perm-wide row per (doc × partition), NOT per
+  shingle).
 
 This two-tier cheap-signature → expensive-verify staging is the distributed
 re-realization of the reference's weak→strong probe
@@ -28,48 +28,22 @@ from pyspark.sql import functions as F
 
 from deduputil_spark.config import DedupConfig
 
-# 2^31-1: keeps a·h+b < 2^62 (Spark 4 runs ANSI mode — long overflow throws).
-# 31-bit minhash space is ample: only relative order matters, and per-pair
-# collision probability 2^-31 is negligible at document shingle-set sizes.
+# 2^31-1: the OPH hash space.  31-bit minhash space is ample: only relative
+# order matters, and per-pair collision probability 2^-31 is negligible at
+# document shingle-set sizes.
 MERSENNE_P = (1 << 31) - 1
 
 
-def _coeffs(num_perm: int, seed: int = 12345) -> tuple[list[int], list[int]]:
-    rng = np.random.default_rng(seed)
-    a = rng.integers(1, MERSENNE_P, size=num_perm, dtype=np.int64).tolist()
-    b = rng.integers(0, MERSENNE_P, size=num_perm, dtype=np.int64).tolist()
-    return a, b
-
-
-def minhash_signatures(
-    shingle_df: DataFrame, cfg: DedupConfig | None = None, family: str = "md5"
-) -> DataFrame:
-    """(conv_id, shingle) -> (conv_id, sig array<string|long>[num_perm]).
-
-    families: "md5" (DuckDB-oracle-exact), "xxhash" (fast path over string
-    shingles), "keys" (fastest: numeric skey column from shingle_keys()).
-    """
+def minhash_signatures(shingle_df: DataFrame, cfg: DedupConfig | None = None) -> DataFrame:
+    """(conv_id, shingle) -> (conv_id, sig array<string>[num_perm]), the md5
+    family that DuckDB reproduces exactly (the oracle signatures)."""
     cfg = cfg or DedupConfig()
     p = cfg.num_perm
-    if family == "md5":
-        base = shingle_df
-        aggs = [
-            F.min(F.md5(F.concat(F.col("shingle"), F.lit(f"#{i}")))).alias(f"h{i}")
-            for i in range(p)
-        ]
-    elif family in ("xxhash", "keys"):
-        a, b = _coeffs(p)
-        src = F.col("skey") if family == "keys" else F.col("shingle")
-        # materialize the base hash as a column so the num_perm aggregates
-        # reuse it instead of re-hashing per permutation
-        base = shingle_df.select("conv_id", F.pmod(F.xxhash64(src), F.lit(MERSENNE_P)).alias("_h"))
-        aggs = [
-            F.min(F.pmod(F.lit(a[i]) * F.col("_h") + F.lit(b[i]), F.lit(MERSENNE_P))).alias(f"h{i}")
-            for i in range(p)
-        ]
-    else:
-        raise ValueError(f"unknown minhash family {family!r}")
-    sig = base.groupBy("conv_id").agg(*aggs)
+    aggs = [
+        F.min(F.md5(F.concat(F.col("shingle"), F.lit(f"#{i}")))).alias(f"h{i}")
+        for i in range(p)
+    ]
+    sig = shingle_df.groupBy("conv_id").agg(*aggs)
     return sig.select("conv_id", F.array(*[F.col(f"h{i}") for i in range(p)]).alias("sig"))
 
 
@@ -267,28 +241,17 @@ def oph_bin_edges(num_perm: int) -> np.ndarray:
 
 
 def minhash_signatures_numpy(
-    docs: DataFrame,
-    cfg: DedupConfig | None = None,
-    text_col: str = "doc_text",
-    seed: int = 12345,
-    scheme: str = "oph",
+    docs: DataFrame, cfg: DedupConfig | None = None, text_col: str = "doc_text"
 ) -> DataFrame:
-    """Vectorized-numpy MinHash over assembled documents (mapInArrow).
+    """Vectorized-numpy OPH MinHash over assembled documents (mapInArrow).
 
     NARROW — no exploded-shingle shuffle at all, and NO Python strings: the
     Arrow string column's UTF-8 values buffer is viewed directly as a numpy
     byte array (`utf8_buffer_view`), tokens are hashed with a vectorized
     byte-level polynomial, k-gram keys are a shifted-add fold, and the
-    signature is either
-
-    - "oph" (default, the scale path): one-permutation hashing — O(set size)
-      per doc instead of O(num_perm × set size); the num_perm× universal
-      rehash matrix was the single largest CPU cost of the whole pipeline
-      (~55% of single-core stage time), and OPH replaces it with two
-      searchsorted calls per doc at equivalent estimator quality (recall and
-      estimate gates in tests/test_similarity.py hold unchanged), or
-    - "kperm": the classic num_perm independent universal rehashes
-      ((a·h+b) mod p, L2-blocked matrix min), kept as the oracle family.
+    signature is one-permutation hashing (`oph_signature`) — O(set size) per
+    doc instead of the O(num_perm × set size) of num_perm independent
+    rehashes, with two searchsorted calls per doc.
 
     The Arrow→pandas string materialization + re-encode that mapInPandas
     forces (one Python str per doc, then .encode back to the same bytes) was
@@ -301,35 +264,17 @@ def minhash_signatures_numpy(
     cfg = cfg or DedupConfig()
     k = cfg.shingle_k
     p = cfg.num_perm
-    rng = np.random.default_rng(seed)
-    A = rng.integers(1, MERSENNE_P, size=p, dtype=np.int64)[:, None]
-    B = rng.integers(0, MERSENNE_P, size=p, dtype=np.int64)[:, None]
     edges = oph_bin_edges(p)
-    if scheme not in ("oph", "kperm"):
-        raise ValueError(f"unknown minhash scheme {scheme!r}")
-
-    BLK = 192  # kperm: num_perm×BLK int64 intermediate ≈ 190 KB — L2-resident
 
     def _signatures(th: np.ndarray, offs: np.ndarray, n: int) -> np.ndarray:
         flat = np.zeros(n * p, dtype=np.int64)
         for i in range(n):
-            if scheme == "oph":
-                # multiset suffices: the min-per-bin of OPH is insensitive to
-                # duplicate values, so the per-doc np.unique (a second sort)
-                # is skipped — bit-identical signature, ~1.4× the doc loop
-                u = _kgram_fold(th[offs[i] : offs[i + 1]], k) % MERSENNE_P
-                u.sort()  # mod MERSENNE_P breaks the kgram sort order
-                flat[i * p : (i + 1) * p] = oph_signature(u, p, edges)
-                continue
-            u = _kgrams_from_hashes(th[offs[i] : offs[i + 1]], k) % MERSENNE_P
-            if len(u) == 0:
-                continue  # already zeros
-            sig = np.full(p, MERSENNE_P, dtype=np.int64)
-            for s in range(0, len(u), BLK):
-                blk = u[s : s + BLK]
-                cand = (A * blk[None, :] + B) % MERSENNE_P
-                np.minimum(sig, cand.min(axis=1), out=sig)
-            flat[i * p : (i + 1) * p] = sig
+            # multiset suffices: the min-per-bin of OPH is insensitive to
+            # duplicate values, so the per-doc np.unique (a second sort)
+            # is skipped — bit-identical signature, ~1.4× the doc loop
+            u = _kgram_fold(th[offs[i] : offs[i + 1]], k) % MERSENNE_P
+            u.sort()  # mod MERSENNE_P breaks the kgram sort order
+            flat[i * p : (i + 1) * p] = oph_signature(u, p, edges)
         return flat
 
     def sig_batches(batches):

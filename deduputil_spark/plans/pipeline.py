@@ -1,15 +1,23 @@
-"""The flagship plan: transcripts → near-duplicate clusters, resumable.
+"""The flagship plan: transcripts → near-duplicate clusters.
 
-Stage graph (each stage = one checkpoint table + one metrics row):
+Stage graph:
 
-  assemble → chunk → blocks/meta (exact dedup)
-                  ↘ shingle → minhash → bands → candidates → verify → clusters
+  assemble → minhash (numpy OPH) → bands → candidates → verify → clusters
 
-Checkpointing (north rule: "every stage checkpoints per-partition lineage and
-metrics … so the pipeline resumes mid-run"): a stage whose checkpoint exists
-with the SAME config hash is read back, not recomputed — kill the driver after
-stage k, rerun, and stages 1..k are loaded while k+1.. continue.  Metrics rows
-record stage, rows_out, wall_ms, config_hash, partitions.
+One function, `run_pipeline`, builds it in two modes:
+
+- default (`checkpoint_dir=None`): one lazy plan with only the persists
+  correctness requires — docs feeds three consumers, the compact signature
+  table feeds both band consumers, candidate pairs feed the verify joins and
+  verified pairs feed the CC fixpoint.  No `count()` jobs, no metrics rows.
+- checkpointed: the same layers, each written under
+  `<checkpoint_dir>/<stage>_<config hash>` and read back.  A stage whose
+  table exists with the SAME config hash is read back, not recomputed — kill
+  the driver after stage k, rerun, and stages 1..k are loaded while k+1..
+  continue.  Each stage records a `StageMetric` (stage, rows_out counted on
+  the table just written, wall_ms, partitions, config_hash, resumed).  With
+  `max_pair_degree` set, the raw and capped candidate sets are separate
+  stages and a `degree_cap_dropped` row records the difference.
 """
 
 from __future__ import annotations
@@ -17,7 +25,7 @@ from __future__ import annotations
 import json
 import os
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -26,13 +34,10 @@ from deduputil_spark.cache import track
 from deduputil_spark.config import DedupConfig
 from deduputil_spark.io import read_table, table_exists, write_table
 from deduputil_spark.operators.assemble import assemble_documents
-from deduputil_spark.operators.chunk import chunk_documents
 from deduputil_spark.operators.cluster import connected_components
-from deduputil_spark.operators.dedup import build_block_store, build_file_meta
-from deduputil_spark.operators.lsh import candidate_pairs
-from deduputil_spark.operators.minhash import lsh_bands, minhash_signatures, minhash_signatures_numpy
-from deduputil_spark.operators.shingle import shingle_keys, shingles
-from deduputil_spark.operators.verify import jaccard_verify, jaccard_verify_docs
+from deduputil_spark.operators.lsh import candidate_pairs, cap_pair_degree
+from deduputil_spark.operators.minhash import lsh_bands, minhash_signatures_numpy
+from deduputil_spark.operators.verify import jaccard_verify_docs
 
 
 @dataclass
@@ -49,13 +54,12 @@ class StageMetric:
 class PipelineResult:
     clusters: DataFrame
     verified_pairs: DataFrame
-    blocks: DataFrame
-    file_meta: DataFrame
     metrics: list[StageMetric] = field(default_factory=list)
 
 
 class Runner:
-    """Checkpoint-aware stage runner."""
+    """Checkpoint-aware stage runner.  Without a checkpoint dir a stage is
+    only persisted (tracked, cache.py) and metered not at all."""
 
     def __init__(self, spark: SparkSession, cfg, checkpoint_dir: str | None):
         # cfg is duck-typed: anything with config_hash() (DedupConfig, _SuffixCfg)
@@ -66,31 +70,23 @@ class Runner:
         if checkpoint_dir:
             os.makedirs(checkpoint_dir, exist_ok=True)
 
-    def _loc(self, stage: str) -> str:
-        return os.path.join(self.dir, f"{stage}_{self.cfg.config_hash()}")
-
-    def run(self, stage: str, build, count_rows: bool = True) -> DataFrame:
+    def run(self, stage: str, build) -> DataFrame:
+        if not self.dir:
+            # no checkpoint table -> persist, or every downstream consumer
+            # recomputes the entire upstream lineage
+            return track(build())
         t0 = time.monotonic()
-        resumed = False
-        if self.dir and table_exists(self.spark, self._loc(stage)):
-            df = read_table(self.spark, self._loc(stage))
-            resumed = True
-        else:
-            df = build()
-            if self.dir:
-                write_table(df, self._loc(stage))
-                df = read_table(self.spark, self._loc(stage))
-            else:
-                # no checkpoint table -> persist, or every downstream stage
-                # (and this count) recomputes the entire upstream lineage
-                df = track(df)
-        rows = df.count() if count_rows else -1
+        loc = os.path.join(self.dir, f"{stage}_{self.cfg.config_hash()}")
+        resumed = table_exists(self.spark, loc)
+        if not resumed:
+            write_table(build(), loc)
+        df = read_table(self.spark, loc)
         self.metrics.append(
             StageMetric(
                 stage=stage,
-                rows_out=rows,
+                rows_out=df.count(),
                 wall_ms=int((time.monotonic() - t0) * 1000),
-                partitions=df.rdd.getNumPartitions() if count_rows else -1,
+                partitions=df.rdd.getNumPartitions(),
                 config_hash=self.cfg.config_hash(),
                 resumed=resumed,
             )
@@ -106,113 +102,65 @@ class Runner:
                 f.write(json.dumps(m.__dict__) + "\n")
 
 
-def run_pipeline_lean(
-    spark: SparkSession,
-    transcripts: DataFrame,
-    cfg: DedupConfig | None = None,
-) -> PipelineResult:
-    """Production dataflow shape: no per-stage counts/checkpoints — one lazy
-    plan with only the persists correctness requires (docs feeds 3 consumers,
-    candidate pairs feed 3 joins, verified feeds the CC fixpoint).  This is
-    what runs when you just want clusters written to a table; the metered
-    `run_pipeline` is for resumable checkpointed runs."""
-    cfg = cfg or DedupConfig()
-    docs = track(assemble_documents(transcripts))
-    # persist the COMPACT signature table (one row/doc) instead of the
-    # bands×-bigger exploded band table; bands re-derive from the cache with
-    # one JVM explode per consumer (see candidate_pairs persist_bands)
-    sigs = track(minhash_signatures_numpy(docs, cfg))
-    bands = lsh_bands(sigs, cfg, band_key="xxhash")  # no per-band string build
-    cands = track(candidate_pairs(bands, cfg, persist_bands=False))
-    verified = track(jaccard_verify_docs(cands, docs, cfg.shingle_k, threshold=cfg.jaccard_threshold))
-    clusters = connected_components(
-        verified.select("conv_a", "conv_b"), cfg.max_cc_iterations,
-        all_vertices=docs.select("conv_id"),
-    )
-    return PipelineResult(clusters=clusters, verified_pairs=verified, blocks=None, file_meta=None)
-
-
 def run_pipeline(
     spark: SparkSession,
     transcripts: DataFrame,
     cfg: DedupConfig | None = None,
     checkpoint_dir: str | None = None,
-    minhash_family: str = "xxhash",
-    with_exact_dedup: bool = True,
 ) -> PipelineResult:
+    """Near-duplicate clusters of `transcripts`; see the module docstring for
+    the default and checkpointed modes."""
     cfg = cfg or DedupConfig()
     r = Runner(spark, cfg, checkpoint_dir)
 
     docs = r.run("assemble", lambda: assemble_documents(transcripts))
-    track(docs)
-
-    if with_exact_dedup:
-        chunks = r.run("chunks", lambda: chunk_documents(docs, cfg))
-        blocks = r.run("blocks", lambda: build_block_store(chunks))
-        meta = r.run("file_meta", lambda: build_file_meta(chunks, blocks))
-    else:
-        chunks = blocks = meta = None
-
-    # Signature path choices (fast→oracle-exact):
-    #  - "numpy": vectorized mapInPandas minhash, NO exploded-shingle shuffle
-    #    at all (the scale default);
-    #  - "keys"/"xxhash": relational minhash over a lazy narrow shingle map
-    #    (min-over-multiset ⇒ no distinct() shuffle needed);
-    #  - "md5": bit-identical to the DuckDB oracle (correctness runs).
-    if minhash_family == "numpy":
-        sigs = r.run("minhash", lambda: minhash_signatures_numpy(docs, cfg))
-    else:
-        if minhash_family == "keys":
-            sh = shingle_keys(docs, cfg.shingle_k)
-        else:
-            sh = shingles(docs, cfg.shingle_k, distinct=False)
-        sigs = r.run("minhash", lambda: minhash_signatures(sh, cfg, family=minhash_family))
-    bands = r.run("bands", lambda: lsh_bands(sigs, cfg))
-    if cfg.max_pair_degree is None:
-        cands = r.run("candidates", lambda: candidate_pairs(bands, cfg))
-    else:
-        # degree cap ON: meter the raw and capped candidate sets as separate
-        # stages and emit the dropped-edge count as its own metrics row —
-        # thinning is never silent (the contract lsh.cap_pair_degree promises)
-        from dataclasses import replace as _replace
-
-        from deduputil_spark.operators.lsh import cap_pair_degree
-
-        raw = r.run("candidates_raw", lambda: candidate_pairs(bands, _replace(cfg, max_pair_degree=None)))
+    # keep the COMPACT signature table (one row/doc), not the bands×-bigger
+    # exploded band table: bands re-derive from it with one JVM explode per
+    # consumer (see candidate_pairs persist_bands)
+    sigs = r.run("minhash", lambda: minhash_signatures_numpy(docs, cfg))
+    bands = lsh_bands(sigs, cfg, band_key="xxhash")  # no per-band string build
+    if checkpoint_dir and cfg.max_pair_degree is not None:
+        # meter the raw and capped candidate sets as separate stages and emit
+        # the dropped-edge count as its own metrics row — thinning is never
+        # silent (the contract lsh.cap_pair_degree promises)
+        uncapped = replace(cfg, max_pair_degree=None)
+        raw = r.run("candidates_raw", lambda: candidate_pairs(bands, uncapped, persist_bands=False))
         cands = r.run("candidates", lambda: cap_pair_degree(raw, cfg.max_pair_degree))
-        raw_n, cap_n = r.metrics[-2].rows_out, r.metrics[-1].rows_out
         r.metrics.append(
             StageMetric(
                 stage="degree_cap_dropped",
-                rows_out=raw_n - cap_n,
+                rows_out=r.metrics[-2].rows_out - r.metrics[-1].rows_out,
                 wall_ms=0,
                 partitions=-1,
                 config_hash=cfg.config_hash(),
                 resumed=False,
             )
         )
+    else:
+        cands = r.run("candidates", lambda: candidate_pairs(bands, cfg, persist_bands=False))
     # verify prunes DOCS before exploding shingles: cost scales with the
     # candidate set, not the corpus
     verified = r.run(
         "verified",
         lambda: jaccard_verify_docs(cands, docs, cfg.shingle_k, threshold=cfg.jaccard_threshold),
     )
-    clusters = r.run(
-        "clusters",
-        lambda: connected_components(
+
+    def cluster() -> DataFrame:
+        return connected_components(
             verified.select("conv_a", "conv_b"),
             cfg.max_cc_iterations,
             all_vertices=docs.select("conv_id"),
-        ),
-    )
+        )
+
+    # the default plan leaves clusters lazy: the caller's action is its only consumer
+    clusters = r.run("clusters", cluster) if checkpoint_dir else cluster()
     r.dump_metrics()
-    return PipelineResult(
-        clusters=clusters,
-        verified_pairs=verified,
-        blocks=blocks,
-        file_meta=meta,
-        metrics=r.metrics,
-    )
+    return PipelineResult(clusters=clusters, verified_pairs=verified, metrics=r.metrics)
+
+
+# perfbench/workloads.py (the frozen benchmark) still imports the old name of
+# the default plan; it is the same function.
+run_pipeline_lean = run_pipeline
 
 
 @dataclass
@@ -245,9 +193,10 @@ def run_exact_substring(
     text_col: str = "text",
 ) -> ExactSubstringResult:
     """The exact-substring dedup plan (Lee et al. ExactSubstr): corpus-wide
-    duplicated spans → cleaned corpus, as two resumable metered stages
-    (same Runner/checkpoint semantics as `run_pipeline`: kill after the
-    spans stage, rerun, and the spans table is read back, not recomputed).
+    duplicated spans → cleaned corpus, as two stages with the same
+    Runner/checkpoint semantics as `run_pipeline`: with `checkpoint_dir` they
+    are metered and resumable (kill after the spans stage, rerun, and the
+    spans table is read back, not recomputed), without it only persisted.
     `method="rolling"` is the scale path (8 bytes/position on the wire,
     exact gram re-verification)."""
     from deduputil_spark.operators.suffixarray import duplicated_spans, strip_duplicated_spans

@@ -24,10 +24,10 @@ def main() -> None:
     spark = SparkSession.builder.appName("deduputil-neardup").getOrCreate()
     # imported AFTER the session exists so --py-files distribution applies
     from deduputil_spark.config import DedupConfig
-    from deduputil_spark.plans.pipeline import run_pipeline_lean
+    from deduputil_spark.plans.pipeline import run_pipeline
 
     transcripts = spark.read.parquet(src)
-    res = run_pipeline_lean(spark, transcripts, DedupConfig())
+    res = run_pipeline(spark, transcripts, DedupConfig())
     res.clusters.write.mode("overwrite").parquet(f"{out}/clusters")
     res.verified_pairs.write.mode("overwrite").parquet(f"{out}/verified_pairs")
     n = spark.read.parquet(f"{out}/clusters").count()

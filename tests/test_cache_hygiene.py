@@ -11,7 +11,7 @@ from deduputil_spark.cache import release_caches
 from deduputil_spark.config import DedupConfig
 from deduputil_spark.operators.ann import cosine_topk, embedding_near_pairs
 from deduputil_spark.operators.assemble import assemble_documents
-from deduputil_spark.plans.pipeline import run_pipeline_lean
+from deduputil_spark.plans.pipeline import run_pipeline
 
 
 def _n_persistent_rdds(spark) -> int:
@@ -28,11 +28,11 @@ def _baseline(spark, transcripts) -> int:
 
 
 def test_no_persisted_rdds_after_release(spark, transcripts):
-    """The lean pipeline persists docs/cands/verified internally; after the
+    """The default pipeline persists docs/sigs/cands/verified internally; after the
     caller materializes and releases, the count returns to baseline."""
     base = _baseline(spark, transcripts)
 
-    res = run_pipeline_lean(spark, transcripts, DedupConfig())
+    res = run_pipeline(spark, transcripts, DedupConfig())
     res.clusters.count()
     assert _n_persistent_rdds(spark) > base  # tracked persists are live mid-query
 

@@ -9,11 +9,17 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from deduputil_spark.cache import release_caches
 from deduputil_spark.config import DedupConfig
 from deduputil_spark.operators.assemble import assemble_documents
 from deduputil_spark.operators.cluster import connected_components
 from deduputil_spark.operators.lsh import bucket_skew_report, candidate_pairs
-from deduputil_spark.operators.minhash import lsh_bands, minhash_jaccard_estimate, minhash_signatures
+from deduputil_spark.operators.minhash import (
+    lsh_bands,
+    minhash_jaccard_estimate,
+    minhash_signatures,
+    minhash_signatures_numpy,
+)
 from deduputil_spark.operators.shingle import shingles
 from deduputil_spark.operators.simhash import simhash_candidates, simhash_signatures
 from deduputil_spark.operators.substring import containment_candidates, verify_substring
@@ -33,9 +39,19 @@ def shingle_df(docs):
     return shingles(docs, CFG.shingle_k).cache()
 
 
-@pytest.fixture(scope="module", params=["xxhash", "md5"])
+@pytest.fixture(scope="module", params=["oph", "md5"])
 def family(request):
     return request.param
+
+
+def sign(family, docs, shingle_df, cfg):
+    """(signatures, bands) under `family`: "md5" is the DuckDB oracle family,
+    "oph" the numpy OPH signatures + xxhash band keys the pipeline ships."""
+    if family == "md5":
+        sigs = minhash_signatures(shingle_df, cfg)
+        return sigs, lsh_bands(sigs, cfg)
+    sigs = minhash_signatures_numpy(docs, cfg)
+    return sigs, lsh_bands(sigs, cfg, band_key="xxhash")
 
 
 def brute_force_jaccard(shingle_df, threshold):
@@ -57,10 +73,10 @@ def brute_force_jaccard(shingle_df, threshold):
     )
 
 
-def test_minhash_estimates_jaccard(spark, shingle_df, family):
+def test_minhash_estimates_jaccard(spark, docs, shingle_df, family):
     """Signature agreement ≈ true Jaccard within ε on true-positive pairs."""
     truth = brute_force_jaccard(shingle_df, 0.5).cache()
-    sigs = minhash_signatures(shingle_df, CFG, family=family)
+    sigs, _ = sign(family, docs, shingle_df, CFG)
     est = minhash_jaccard_estimate(sigs, truth.select("conv_a", "conv_b"))
     joined = truth.join(est, ["conv_a", "conv_b"]).collect()
     assert len(joined) > 0
@@ -68,19 +84,19 @@ def test_minhash_estimates_jaccard(spark, shingle_df, family):
         assert abs(r["jaccard"] - r["est_jaccard"]) < 0.15, r
 
 
-def test_lsh_recall_vs_brute_force(spark, shingle_df, family):
+def test_lsh_recall_vs_brute_force(spark, docs, shingle_df, family):
     """LSH candidates must cover ≥99% of true pairs above threshold."""
     truth = {(r["conv_a"], r["conv_b"]) for r in brute_force_jaccard(shingle_df, CFG.jaccard_threshold).collect()}
     assert truth, "corpus must contain planted high-jaccard pairs"
-    sigs = minhash_signatures(shingle_df, CFG, family=family)
-    cands = {(r["conv_a"], r["conv_b"]) for r in candidate_pairs(lsh_bands(sigs, CFG), CFG).collect()}
+    _, bands = sign(family, docs, shingle_df, CFG)
+    cands = {(r["conv_a"], r["conv_b"]) for r in candidate_pairs(bands, CFG).collect()}
     missed = truth - cands
     recall = 1 - len(missed) / len(truth)
     assert recall >= 0.99, f"LSH recall {recall}: missed {sorted(missed)[:5]}"
 
 
 def test_pipeline_recall_and_collision_separation(spark, transcripts, corpus, shingle_df):
-    res = run_pipeline(spark, transcripts, CFG, checkpoint_dir=None)
+    res = run_pipeline(spark, transcripts, CFG)
     clusters = res.clusters.cache()
     truth = spark.createDataFrame(corpus.truth_pairs)
     # the gate (FIXTURES.md): recall over planted pairs whose TRUE Jaccard
@@ -98,6 +114,27 @@ def test_pipeline_recall_and_collision_separation(spark, transcripts, corpus, sh
     lb = clusters.select(F.col("conv_id").alias("conv_b"), F.col("cluster_id").alias("cb"))
     merged = coll.join(la, "conv_a").join(lb, "conv_b").filter(F.col("ca") == F.col("cb")).count()
     assert merged == 0
+
+
+def test_default_run_launches_no_extra_jobs(spark, transcripts):
+    """The default (uncheckpointed) plan runs no count() jobs and writes no
+    metrics: the pipeline plus one noop write of its clusters launches at
+    most the 26 Spark jobs the plan needed before the checkpointed path was
+    folded into the same function."""
+    transcripts.count()  # the cached fixture materializes outside the group
+    release_caches()  # earlier tests' tracked persists must not serve this run
+    sc = spark.sparkContext
+    group = "default-run-job-count"
+    sc.setJobGroup(group, "run_pipeline default plan")
+    try:
+        res = run_pipeline(spark, transcripts, CFG)
+        res.clusters.write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        release_caches()
+    assert res.metrics == []
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < n_jobs <= 26, n_jobs
 
 
 @pytest.mark.parametrize("driver_threshold", [2_000_000, 0])  # driver + distributed paths
@@ -141,6 +178,9 @@ def test_checkpoint_resume(spark, transcripts):
         r1 = run_pipeline(spark, transcripts, CFG, checkpoint_dir=d)
         c1 = sorted((r["conv_id"], r["cluster_id"]) for r in r1.clusters.collect())
         assert not any(m.resumed for m in r1.metrics)
+        # checkpointing wraps the same layers: the default plan agrees
+        c0 = run_pipeline(spark, transcripts, CFG).clusters.collect()
+        assert sorted((r["conv_id"], r["cluster_id"]) for r in c0) == c1
         r2 = run_pipeline(spark, transcripts, CFG, checkpoint_dir=d)
         c2 = sorted((r["conv_id"], r["cluster_id"]) for r in r2.clusters.collect())
         assert all(m.resumed for m in r2.metrics), [m for m in r2.metrics if not m.resumed]
@@ -159,9 +199,7 @@ def test_hot_bucket_salting_preserves_recall(spark, shingle_df):
     # 12 identical docs -> every band is one bucket of size 12 (>> cap=3)
     text = " ".join(f"tok{i}" for i in range(50))
     docs = spark.createDataFrame([(f"h{i:02d}", text) for i in range(12)], "conv_id string, doc_text string")
-    sh = shingles(docs, cfg_hot.shingle_k)
-    sigs = minhash_signatures(sh, cfg_hot, family="xxhash")
-    bands = lsh_bands(sigs, cfg_hot)
+    bands = lsh_bands(minhash_signatures_numpy(docs, cfg_hot), cfg_hot, band_key="xxhash")
     rep = bucket_skew_report(bands, cfg_hot).collect()[0]
     assert rep["hot_buckets"] > 0, "identical docs must form hot buckets"
     cands = {(r["conv_a"], r["conv_b"]) for r in candidate_pairs(bands, cfg_hot).collect()}
@@ -175,9 +213,9 @@ def test_hot_bucket_salting_preserves_recall(spark, shingle_df):
     assert len(labels) == 12 and len(set(labels.values())) == 1, labels
 
 
-def test_skew_report_sees_hot_boilerplate(spark, shingle_df):
-    sigs = minhash_signatures(shingle_df, CFG, family="xxhash")
-    rep = bucket_skew_report(lsh_bands(sigs, CFG), CFG).collect()[0]
+def test_skew_report_sees_hot_boilerplate(spark, docs, shingle_df):
+    _, bands = sign("oph", docs, shingle_df, CFG)
+    rep = bucket_skew_report(bands, CFG).collect()[0]
     assert rep["n_buckets"] > 0
     assert rep["max_bucket"] >= 1
 
@@ -230,7 +268,7 @@ def test_oph_signature_estimator_quality():
     short = np.unique(rng.integers(0, MERSENNE_P, 9))
     s = oph_signature(short, k, edges)
     assert len(s) == k and (s < MERSENNE_P).all()
-    # empty doc convention matches kperm: all zeros
+    # empty doc convention: all zeros
     assert (oph_signature(np.zeros(0, dtype=np.int64), k, edges) == 0).all()
 
 
@@ -252,7 +290,7 @@ def test_star_cc_on_path_graph(spark):
     assert rounds <= 16, f"star alternation took {rounds} rounds on a 10k chain (want O(log n))"
 
 
-def test_lsh_band_parameter_frontier(spark, shingle_df):
+def test_lsh_band_parameter_frontier(spark, docs, shingle_df):
     """b×r sweep at num_perm=128: recall (vs brute-force J≥0.7 truth) and
     candidate volume for (64,2), (32,4), (16,8).  The default (32,4) must sit
     on the frontier: ≥0.99 recall with fewer candidates than (64,2)."""
@@ -264,11 +302,8 @@ def test_lsh_band_parameter_frontier(spark, shingle_df):
     stats = {}
     for bands, rows in [(64, 2), (32, 4), (16, 8)]:
         cfg = DedupConfig(lsh_bands=bands, lsh_rows=rows)
-        sigs = minhash_signatures(shingle_df, cfg, family="xxhash")
-        cands = {
-            (r["conv_a"], r["conv_b"])
-            for r in candidate_pairs(lsh_bands(sigs, cfg), cfg).collect()
-        }
+        _, band_df = sign("oph", docs, shingle_df, cfg)
+        cands = {(r["conv_a"], r["conv_b"]) for r in candidate_pairs(band_df, cfg).collect()}
         recall = len(truth & cands) / len(truth)
         stats[(bands, rows)] = (recall, len(cands))
     rec_default, n_default = stats[(32, 4)]
@@ -333,14 +368,12 @@ def test_cap_pair_degree_thins_hot_docs_deterministically(spark):
     assert DedupConfig(max_pair_degree=123).max_pair_degree == 123
 
 
-def test_degree_cap_dropped_edges_metered(spark, transcripts):
-    """VERDICT r3 #8: with max_pair_degree set, run_pipeline emits a
-    `degree_cap_dropped` metrics row equal to raw-minus-capped candidate
-    counts — thinning is observable, never silent."""
-    from deduputil_spark.plans.pipeline import run_pipeline
-
+def test_degree_cap_dropped_edges_metered(spark, transcripts, tmp_path):
+    """VERDICT r3 #8: with max_pair_degree set, a checkpointed run_pipeline
+    emits a `degree_cap_dropped` metrics row equal to raw-minus-capped
+    candidate counts — thinning is observable, never silent."""
     cfg = DedupConfig(max_pair_degree=3)
-    res = run_pipeline(spark, transcripts, cfg, checkpoint_dir=None, with_exact_dedup=False)
+    res = run_pipeline(spark, transcripts, cfg, checkpoint_dir=str(tmp_path))
     by_stage = {m.stage: m for m in res.metrics}
     assert "candidates_raw" in by_stage and "candidates" in by_stage
     assert "degree_cap_dropped" in by_stage
