@@ -1,14 +1,14 @@
 #!/usr/bin/env python
 """Round-6 optimization instrumentation (NOT the official bench — bench.py is
 frozen for measurement; this file exists so guide §1 measurement — noop-sink
-isolation, per-stage pipeline breakdown, explain capture — has a home).
+isolation and explain capture — has a home).
 
 Usage:
-  python bench_extra.py --stages            # pipeline_cluster stage breakdown
   python bench_extra.py --queries a,b,c     # time driver queries (count parity + noop)
   python bench_extra.py --explain a,b,c     # write plans/r06/<q><suffix>.txt
       [--suffix _before|_after]             #   (default _before)
-  python bench_extra.py --cdc               # cdc_exact_dedup stage breakdown
+
+Per-layer pipeline timings come from `perfbench/run.py --trace 1`.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS
 (default: the host CPU count) — same contract as bench.py.
@@ -23,7 +23,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from bench import BENCH_CONF, ensure_corpus  # noqa: E402
+from bench import BENCH_CONF  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
@@ -47,88 +47,6 @@ def _noop(df, desc: str) -> float:
     el = time.monotonic() - t0
     df.sparkSession.sparkContext.setJobDescription(None)
     return round(el, 3)
-
-
-def run_stages() -> None:
-    """pipeline_cluster broken into its stages (mirrors run_pipeline's default
-    persists; per-stage actions shift persist costs onto the stage that
-    materializes them — attribution, not an official total)."""
-    from deduputil_spark.cache import release_caches, track
-    from deduputil_spark.config import DedupConfig
-    from deduputil_spark.operators.assemble import assemble_documents
-    from deduputil_spark.operators.cluster import connected_components
-    from deduputil_spark.operators.lsh import candidate_pairs
-    from deduputil_spark.operators.minhash import lsh_bands, minhash_signatures_numpy
-    from deduputil_spark.operators.verify import jaccard_verify_docs
-
-    corpus_path, n_turns = ensure_corpus(SF_DIR)
-    spark = _spark()
-    t = spark.read.parquet(corpus_path)
-    cfg = DedupConfig()
-
-    # warm run (JIT) exactly like bench.py
-    from deduputil_spark.plans.pipeline import run_pipeline
-
-    run_pipeline(spark, t, cfg).clusters.count()
-    release_caches()
-    spark.catalog.clearCache()
-
-    out: dict[str, float] = {}
-    t_all = time.monotonic()
-    docs = track(assemble_documents(t))
-    out["assemble"] = _noop(docs, "stage: assemble")
-    sigs = minhash_signatures_numpy(docs, cfg)
-    bands = lsh_bands(sigs, cfg, band_key="xxhash")
-    cands = track(candidate_pairs(bands, cfg))
-    out["minhash+bands+cands"] = _noop(cands, "stage: minhash+bands+cands")
-    verified = track(jaccard_verify_docs(cands, docs, cfg.shingle_k, threshold=cfg.jaccard_threshold))
-    out["verify"] = _noop(verified, "stage: verify")
-    t0 = time.monotonic()
-    spark.sparkContext.setJobDescription("stage: cc")
-    clusters = connected_components(
-        verified.select("conv_a", "conv_b"), cfg.max_cc_iterations,
-        all_vertices=docs.select("conv_id"),
-    )
-    n = clusters.count()
-    out["cc+count"] = round(time.monotonic() - t0, 3)
-    out["total"] = round(time.monotonic() - t_all, 3)
-    out["n_clustered"] = n
-    release_caches()
-    spark.stop()
-    print(json.dumps(out))
-
-
-def run_cdc() -> None:
-    """cdc_exact_dedup broken into assemble / chunk / block-store stages."""
-    from deduputil_spark.cache import release_caches, track
-    from deduputil_spark.config import DedupConfig
-    from deduputil_spark.operators.assemble import assemble_documents
-    from deduputil_spark.operators.chunk import chunk_documents
-    from deduputil_spark.operators.dedup import build_block_store
-
-    corpus_path, _ = ensure_corpus(SF_DIR)
-    spark = _spark()
-    t = spark.read.parquet(corpus_path)
-    cfg = DedupConfig()
-    # warm
-    build_block_store(chunk_documents(assemble_documents(t), cfg)).count()
-    spark.catalog.clearCache()
-
-    out: dict[str, float] = {}
-    t_all = time.monotonic()
-    docs = track(assemble_documents(t))
-    out["assemble"] = _noop(docs, "cdc: assemble")
-    chunks = track(chunk_documents(docs, cfg))
-    out["chunk"] = _noop(chunks, "cdc: chunk")
-    t0 = time.monotonic()
-    spark.sparkContext.setJobDescription("cdc: block_store")
-    n = build_block_store(chunks).count()
-    out["block_store+count"] = round(time.monotonic() - t0, 3)
-    out["total"] = round(time.monotonic() - t_all, 3)
-    out["n_blocks"] = n
-    release_caches()
-    spark.stop()
-    print(json.dumps(out))
 
 
 def run_queries(names: list[str]) -> None:
@@ -173,11 +91,7 @@ def run_explain(names: list[str], suffix: str) -> None:
 
 if __name__ == "__main__":
     args = sys.argv[1:]
-    if "--stages" in args:
-        run_stages()
-    elif "--cdc" in args:
-        run_cdc()
-    elif "--queries" in args:
+    if "--queries" in args:
         run_queries(args[args.index("--queries") + 1].split(","))
     elif "--explain" in args:
         sfx = args[args.index("--suffix") + 1] if "--suffix" in args else "_before"

@@ -19,6 +19,7 @@ localCheckpoints to cut lineage (SURVEY.md §4 custom-work item 2).
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -190,12 +191,13 @@ def _driver_union_find(pairs: DataFrame, all_vertices: DataFrame | None) -> Data
             # union by canonical min so roots stay the min conv_id
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
             parent[hi] = lo
-    spark = pairs.sparkSession
-    rows = [(v, find(v)) for v in list(parent)]
-    if rows:
-        labels = spark.createDataFrame(rows, "conv_id string, cluster_id string")
-    else:
-        labels = spark.createDataFrame([], "conv_id string, cluster_id string")
+    verts = list(parent)
+    # an Arrow createDataFrame(pandas) stays in the JVM; a list of rows would
+    # become a pickled Python RDD and start a pool of Python workers for it
+    labels = pairs.sparkSession.createDataFrame(
+        pd.DataFrame({"conv_id": verts, "cluster_id": [find(v) for v in verts]}, dtype=object),
+        "conv_id string, cluster_id string",
+    )
     if all_vertices is not None:
         labels = (
             all_vertices.select("conv_id")

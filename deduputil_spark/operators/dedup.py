@@ -23,6 +23,8 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -49,14 +51,12 @@ def assign_dense_ids(
     )
     parted = parted.localCheckpoint(eager=True)  # freeze partitioning for both passes
     counts = {r["_part"]: r["cnt"] for r in parted.groupBy("_part").agg(F.count(F.lit(1)).alias("cnt")).collect()}
-    offsets = {}
-    acc = 0
-    for p in sorted(counts):
-        offsets[p] = acc
-        acc += counts[p]
-    spark = df.sparkSession
-    offset_df = spark.createDataFrame(
-        [(int(p), int(o)) for p, o in offsets.items()], "part int, _offset bigint"
+    parts = sorted(counts)
+    sizes = np.array([counts[p] for p in parts], dtype=np.int64)
+    # Arrow createDataFrame(pandas): no pickled Python RDD for the offsets
+    offset_df = df.sparkSession.createDataFrame(
+        pd.DataFrame({"part": np.array(parts, dtype=np.int32), "_offset": np.cumsum(sizes) - sizes}),
+        "part int, _offset bigint",
     )
     w = Window.partitionBy("_part").orderBy(*order_cols)
     return (

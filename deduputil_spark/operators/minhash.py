@@ -4,7 +4,9 @@ Two signature builders:
 
 - `minhash_signatures_numpy` — the production path: one-permutation hashing
   (OPH) over numpy k-gram hashes, computed batch-at-a-time in mapInArrow
-  straight off the Arrow string buffer (narrow, no shingle shuffle).
+  straight off the Arrow string buffer (narrow, no shingle shuffle).  Each
+  output row also carries the doc's sorted unique k-gram keys (`kset`), the
+  set the Jaccard verifier joins, so no later layer re-reads the text.
 - `minhash_signatures` — the "md5" oracle family: minhash_i =
   MIN(md5(shingle || '#' || i)).  Lexicographic min over a uniform 128-bit
   hex hash is a valid min-wise permutation approximation, and — crucially —
@@ -47,13 +49,14 @@ def minhash_signatures(shingle_df: DataFrame, cfg: DedupConfig | None = None) ->
     return sig.select("conv_id", F.array(*[F.col(f"h{i}") for i in range(p)]).alias("sig"))
 
 
-_SIG_SCHEMA = "conv_id string, sig array<bigint>"
+_SIG_SCHEMA = "conv_id string, sig array<bigint>, kset array<bigint>"
 KGRAM_P = (1 << 57) - 13
 
 
 def _kgram_fold(th: np.ndarray, k: int) -> np.ndarray:
-    """K-gram keys (polynomial fold) of a doc's token-hash array — MULTISET,
-    one key per window, duplicates kept."""
+    """K-gram keys (polynomial fold) of ONE doc's token-hash array — MULTISET,
+    one key per window, duplicates kept.  The scalar definition that
+    `batch_kgram_sets` reproduces for a whole batch."""
     if len(th) == 0:
         return np.zeros(0, dtype=np.int64)
     if len(th) >= k:
@@ -67,9 +70,32 @@ def _kgram_fold(th: np.ndarray, k: int) -> np.ndarray:
     return kg
 
 
-def _kgrams_from_hashes(th: np.ndarray, k: int) -> np.ndarray:
-    """Unique k-gram keys from a doc's token-hash array (polynomial fold)."""
-    return np.unique(_kgram_fold(th, k))
+def batch_kgram_sets(th: np.ndarray, offs: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray]:
+    """Every doc's sorted UNIQUE k-gram keys for a whole batch.
+
+    `th`/`offs` are `token_hashes_from_buffer`'s flat token hashes and per-doc
+    token offsets.  One Horner fold runs over the flat array; a doc's windows
+    are the slice of it that starts and ends inside the doc, so windows that
+    cross a doc boundary are never read.  A doc with fewer than k tokens gets
+    one key, the fold of all its tokens (`_kgram_fold`).  Each doc's slice is
+    then deduplicated with its own np.unique: a value sort of a few thousand
+    keys, measured 2× faster than one batch-wide argsort on (doc, key).
+    Returns (flat keys, per-doc offsets of length n_docs+1): the Arrow
+    ListArray layout.  Same keys as `np.unique(_kgram_fold(doc_th, k))` per
+    doc, bit for bit."""
+    n_win = max(len(th) - k + 1, 0)
+    kg = th[:n_win].copy()
+    for j in range(1, k):
+        np.multiply(kg, 31, out=kg)
+        np.add(kg, th[j : n_win + j], out=kg)
+        np.mod(kg, KGRAM_P, out=kg)
+    sets = [
+        np.unique(kg[a : b - k + 1] if b - a >= k else _kgram_fold(th[a:b], k))
+        for a, b in zip(offs[:-1].tolist(), offs[1:].tolist())
+    ]
+    bounds = np.zeros(len(sets) + 1, dtype=np.int64)
+    np.cumsum(np.fromiter(map(len, sets), dtype=np.int64, count=len(sets)), out=bounds[1:])
+    return (np.concatenate(sets) if sets else np.zeros(0, dtype=np.int64)), bounds
 
 
 # ASCII whitespace lookup for the byte-level tokenizer.  Deliberate, documented
@@ -203,11 +229,32 @@ def utf8_buffer_view(arr) -> tuple[np.ndarray, np.ndarray] | None:
 
 
 def doc_kgram_hashes(text: str, k: int) -> np.ndarray:
-    """Unique k-gram hash keys of one document (single-doc convenience;
-    batch paths use batch_token_hashes + _kgrams_from_hashes directly).
-    Shared set definition for numpy minhash AND the array Jaccard verifier."""
+    """Unique k-gram hash keys of one document (single-doc convenience; batch
+    paths use `batch_kgram_sets`).  The set definition shared by the numpy
+    signatures, their k-gram sets and the Jaccard verifier."""
     th, _ = batch_token_hashes([text])
-    return _kgrams_from_hashes(th, k)
+    return np.unique(_kgram_fold(th, k))
+
+
+def arrow_token_hashes(txt) -> tuple[np.ndarray, np.ndarray]:
+    """`token_hashes_from_buffer` over an Arrow string column, zero-copy off
+    its UTF-8 buffer; exotic layouts fall back through Python strings."""
+    view = utf8_buffer_view(txt)
+    if view is not None:
+        return token_hashes_from_buffer(*view)
+    return batch_token_hashes([t if t is not None else "" for t in txt.to_pylist()])
+
+
+def list_array(flat: np.ndarray, bounds: np.ndarray):
+    """Arrow list<int64> column from flat values and per-row offsets."""
+    import pyarrow as pa
+
+    # int32 list offsets silently wrap past 2^31 total entries; a batch that
+    # large would already have exhausted memory, but fail loudly rather than
+    # build corrupt offsets (ADVICE r3)
+    if bounds[-1] >= (1 << 31):
+        raise ValueError(f"batch overflows int32 list offsets ({int(bounds[-1])} entries)")
+    return pa.ListArray.from_arrays(bounds.astype(np.int32), pa.array(flat, type=pa.int64()))
 
 
 def oph_signature(u: np.ndarray, num_perm: int, edges: np.ndarray) -> np.ndarray:
@@ -240,18 +287,50 @@ def oph_bin_edges(num_perm: int) -> np.ndarray:
     return (np.arange(1, num_perm) * ((MERSENNE_P // num_perm) + 1)).astype(np.int64)
 
 
+def batch_oph_signatures(keys: np.ndarray, bounds: np.ndarray, num_perm: int) -> np.ndarray:
+    """`oph_signature` of every doc of a batch at once, from `batch_kgram_sets`
+    output (keys, per-doc offsets) -> flat (n_docs × num_perm) int64.
+
+    No sort: each key mod MERSENNE_P lands in cell doc·num_perm + bin, and
+    one unbuffered `np.minimum.at` takes the min per cell.  Rotation
+    densification then runs over the (n_docs, num_perm) matrix: a reversed
+    running min of the non-empty bin indices gives each bin the next
+    non-empty bin, wrapping to the row's first one.  A doc without k-grams
+    gets the all-zero signature, as in `oph_signature`."""
+    n = len(bounds) - 1
+    u = keys % MERSENNE_P
+    width = MERSENNE_P // num_perm + 1  # the bin width of oph_bin_edges
+    cell = np.repeat(np.arange(n, dtype=np.int64) * num_perm, np.diff(bounds)) + u // width
+    sig = np.full(n * num_perm, MERSENNE_P, dtype=np.int64)  # > any value mod MERSENNE_P
+    np.minimum.at(sig, cell, u)
+    sig = sig.reshape(n, num_perm)
+    col = np.where(sig < MERSENNE_P, np.arange(num_perm), num_perm)
+    nxt = np.minimum.accumulate(col[:, ::-1], axis=1)[:, ::-1]
+    first = nxt[:, :1]
+    nxt = np.where(nxt == num_perm, first, nxt)
+    sig = np.take_along_axis(sig, np.minimum(nxt, num_perm - 1), axis=1)
+    sig[first[:, 0] == num_perm] = 0
+    return sig.ravel()
+
+
 def minhash_signatures_numpy(
     docs: DataFrame, cfg: DedupConfig | None = None, text_col: str = "doc_text"
 ) -> DataFrame:
-    """Vectorized-numpy OPH MinHash over assembled documents (mapInArrow).
+    """(conv_id, doc text) -> (conv_id, sig array<bigint>[num_perm],
+    kset array<bigint>): vectorized-numpy OPH MinHash over assembled
+    documents, plus each doc's sorted unique k-gram keys (mapInArrow).
 
     NARROW — no exploded-shingle shuffle at all, and NO Python strings: the
     Arrow string column's UTF-8 values buffer is viewed directly as a numpy
     byte array (`utf8_buffer_view`), tokens are hashed with a vectorized
-    byte-level polynomial, k-gram keys are a shifted-add fold, and the
-    signature is one-permutation hashing (`oph_signature`) — O(set size) per
-    doc instead of the O(num_perm × set size) of num_perm independent
-    rehashes, with two searchsorted calls per doc.
+    byte-level polynomial, and `batch_kgram_sets` folds and dedups the k-gram
+    keys of the whole batch.  `kset` is that set — what the Jaccard verifier
+    joins, so a doc's text crosses into Python once per pipeline run.  The
+    signature is one-permutation hashing of the set mod MERSENNE_P
+    (`batch_oph_signatures`, = `oph_signature` per doc): O(set size) instead
+    of the O(num_perm × set size) of num_perm independent rehashes.  OPH's
+    min per bin ignores duplicates, so it equals the signature of the k-gram
+    multiset.
 
     The Arrow→pandas string materialization + re-encode that mapInPandas
     forces (one Python str per doc, then .encode back to the same bytes) was
@@ -264,36 +343,16 @@ def minhash_signatures_numpy(
     cfg = cfg or DedupConfig()
     k = cfg.shingle_k
     p = cfg.num_perm
-    edges = oph_bin_edges(p)
-
-    def _signatures(th: np.ndarray, offs: np.ndarray, n: int) -> np.ndarray:
-        flat = np.zeros(n * p, dtype=np.int64)
-        for i in range(n):
-            # multiset suffices: the min-per-bin of OPH is insensitive to
-            # duplicate values, so the per-doc np.unique (a second sort)
-            # is skipped — bit-identical signature, ~1.4× the doc loop
-            u = _kgram_fold(th[offs[i] : offs[i + 1]], k) % MERSENNE_P
-            u.sort()  # mod MERSENNE_P breaks the kgram sort order
-            flat[i * p : (i + 1) * p] = oph_signature(u, p, edges)
-        return flat
 
     def sig_batches(batches):
         for batch in batches:
             names = batch.schema.names
             cid = batch.column(names.index("conv_id"))
-            txt = batch.column(names.index(text_col))
-            view = utf8_buffer_view(txt)
-            if view is not None:
-                th, offs = token_hashes_from_buffer(*view)
-            else:  # exotic arrow layout: fall back through Python strings
-                th, offs = batch_token_hashes([t if t is not None else "" for t in txt.to_pylist()])
-            flat = _signatures(th, offs, len(txt))
-            if len(txt) * p >= (1 << 31):  # int32 list offsets would wrap (ADVICE r3)
-                raise ValueError(f"signature batch overflows int32 list offsets ({len(txt)} docs × {p})")
-            sig = pa.ListArray.from_arrays(
-                np.arange(0, (len(txt) + 1) * p, p, dtype=np.int32), pa.array(flat, type=pa.int64())
+            keys, bounds = batch_kgram_sets(*arrow_token_hashes(batch.column(names.index(text_col))), k)
+            sig = list_array(batch_oph_signatures(keys, bounds, p), np.arange(0, (batch.num_rows + 1) * p, p))
+            yield pa.RecordBatch.from_arrays(
+                [cid.cast(pa.string()), sig, list_array(keys, bounds)], names=["conv_id", "sig", "kset"]
             )
-            yield pa.RecordBatch.from_arrays([cid.cast(pa.string()), sig], names=["conv_id", "sig"])
 
     return docs.select("conv_id", text_col).mapInArrow(sig_batches, schema=_SIG_SCHEMA)
 

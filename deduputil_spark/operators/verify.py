@@ -2,8 +2,10 @@
 
 Three verifiers, mirroring the reference's similarity semantics:
 
-- `jaccard_verify` — exact set Jaccard over shingles, relational (join on
-  shingle equality + set-size aggregate).  This is the pipeline gate.
+- exact set Jaccard over k-grams: `jaccard_verify_sets` (the pipeline's
+  verify, JVM array_intersect over the k-gram sets the signature layer
+  emits), `jaccard_verify_docs` (the same core for callers holding doc
+  text) and `jaccard_verify` (relational, over string shingles).
 - `bsim_similarity` — the reference's weighted block-frequency formula
   sim = 2·Σ len·min(n1,n2) / Σ len·(n1+n2)  (/root/reference/src/bsim.c:277-294)
   over chunk-md5 multisets, relational.
@@ -31,14 +33,9 @@ _KSET_SCHEMA = "conv_id string, kset array<bigint>"
 
 def _kgram_sets(docs: DataFrame, k: int, text_col: str = "doc_text") -> DataFrame:
     """(conv_id, kset array<long>) — per-doc UNIQUE k-gram hash set, one row
-    per doc (numpy via mapInArrow, zero-copy off the Arrow UTF-8 buffer; same
-    set definition as the numpy minhash)."""
-    from deduputil_spark.operators.minhash import (
-        _kgrams_from_hashes,
-        batch_token_hashes,
-        token_hashes_from_buffer,
-        utf8_buffer_view,
-    )
+    per doc (numpy via mapInArrow, zero-copy off the Arrow UTF-8 buffer; the
+    same `batch_kgram_sets` the numpy minhash emits its kset column with)."""
+    from deduputil_spark.operators.minhash import arrow_token_hashes, batch_kgram_sets, list_array
 
     def run(batches):
         import pyarrow as pa
@@ -46,52 +43,22 @@ def _kgram_sets(docs: DataFrame, k: int, text_col: str = "doc_text") -> DataFram
         for batch in batches:
             names = batch.schema.names
             cid = batch.column(names.index("conv_id"))
-            txt = batch.column(names.index(text_col))
-            view = utf8_buffer_view(txt)
-            if view is not None:
-                th, offs = token_hashes_from_buffer(*view)
-            else:
-                th, offs = batch_token_hashes([t if t is not None else "" for t in txt.to_pylist()])
-            sets = [_kgrams_from_hashes(th[offs[i] : offs[i + 1]], k) for i in range(len(txt))]
-            bounds = np.zeros(len(sets) + 1, dtype=np.int64)
-            np.cumsum(np.fromiter(map(len, sets), dtype=np.int64, count=len(sets)), out=bounds[1:])
-            flat = np.concatenate(sets) if sets else np.zeros(0, dtype=np.int64)
-            # int32 list offsets silently wrap past 2^31 total entries; a batch
-            # that large would already have exhausted memory, but fail loudly
-            # rather than build corrupt offsets (ADVICE r3)
-            if bounds[-1] >= (1 << 31):
-                raise ValueError(f"kset batch overflows int32 list offsets ({int(bounds[-1])} entries)")
-            kset = pa.ListArray.from_arrays(bounds.astype(np.int32), pa.array(flat, type=pa.int64()))
+            kset = list_array(*batch_kgram_sets(*arrow_token_hashes(batch.column(names.index(text_col))), k))
             yield pa.RecordBatch.from_arrays([cid.cast(pa.string()), kset], names=["conv_id", "kset"])
 
     return docs.select("conv_id", text_col).mapInArrow(run, schema=_KSET_SCHEMA)
 
 
-def jaccard_verify_docs(
-    pairs: DataFrame,
-    docs: DataFrame,
-    k: int = 5,
-    threshold: float | None = None,
-) -> DataFrame:
-    """Exact Jaccard verify with NO exploded-shingle shuffle.
+def jaccard_verify_sets(pairs: DataFrame, ksets: DataFrame, threshold: float | None = None) -> DataFrame:
+    """(conv_a, conv_b) × (conv_id, kset) -> (conv_a, conv_b, jaccard), in the
+    JVM only.
 
-    Candidate docs are pruned (semi-join; AQE broadcasts when small) BEFORE any tokenization,
-    each candidate doc becomes ONE row carrying its k-gram hash set as an
-    array, and |A∩B| is a JVM array_intersect per pair — so verification
-    shuffles O(candidate_docs · set_size) longs once, and never touches
-    non-candidate documents."""
-    # no .distinct() on members: LEFT SEMI dedups by construction, so the
-    # distinct's extra exchange+aggregate bought nothing (one stage saved)
-    members = (
-        pairs.select(F.col("conv_a").alias("conv_id"))
-        .unionByName(pairs.select(F.col("conv_b").alias("conv_id")))
-    )
-    # no forced broadcast: distinct pair members can reach tens of millions at
-    # corpus scale — let AQE pick broadcast vs shuffled semi-join by size
-    cand_docs = docs.join(members, "conv_id", "left_semi")
-    # persist feeds both join sides of the same returned plan; registered with
-    # cache.track so the caller releases it after materializing (see cache.py)
-    ksets = track(_kgram_sets(cand_docs, k))
+    `ksets` holds one row per doc with its sorted unique k-gram keys — the
+    `kset` column of `minhash_signatures_numpy` in the pipeline.  |A∩B| is a
+    JVM array_intersect per pair and |A∪B| = |A|+|B|-|A∩B|, so verification
+    shuffles O(candidate_docs · set_size) longs and runs no Python.  Both
+    join sides read `ksets`: pass a persisted frame (the pipeline's sign
+    table is one) or its plan runs once per side."""
     a = ksets.select(F.col("conv_id").alias("conv_a"), F.col("kset").alias("ka"))
     b = ksets.select(F.col("conv_id").alias("conv_b"), F.col("kset").alias("kb"))
     out = (
@@ -112,6 +79,28 @@ def jaccard_verify_docs(
     if threshold is not None:
         out = out.filter(F.col("jaccard") >= threshold)
     return out
+
+
+def jaccard_verify_docs(
+    pairs: DataFrame,
+    docs: DataFrame,
+    k: int = 5,
+    threshold: float | None = None,
+) -> DataFrame:
+    """`jaccard_verify_sets` for callers that hold document text, not k-gram
+    sets: candidate docs are pruned (semi-join; AQE broadcasts when small)
+    BEFORE tokenization, and only they get a k-gram set (`_kgram_sets`)."""
+    # no .distinct() on members: LEFT SEMI dedups by construction
+    members = (
+        pairs.select(F.col("conv_a").alias("conv_id"))
+        .unionByName(pairs.select(F.col("conv_b").alias("conv_id")))
+    )
+    # no forced broadcast: distinct pair members can reach tens of millions at
+    # corpus scale — let AQE pick broadcast vs shuffled semi-join by size
+    cand_docs = docs.join(members, "conv_id", "left_semi")
+    # persist feeds both join sides of the same returned plan; registered with
+    # cache.track so the caller releases it after materializing (see cache.py)
+    return jaccard_verify_sets(pairs, track(_kgram_sets(cand_docs, k)), threshold)
 
 
 def jaccard_verify(

@@ -2,22 +2,27 @@
 
 Stage graph:
 
-  assemble → minhash (numpy OPH) → bands → candidates → verify → clusters
+  assemble → sign (numpy OPH + k-gram sets) → bands → candidates → verify → clusters
 
 One function, `run_pipeline`, builds it in two modes:
 
 - default (`checkpoint_dir=None`): one lazy plan with only the persists
-  correctness requires — docs feeds three consumers, the compact signature
-  table feeds both band consumers, candidate pairs feed the verify joins and
-  verified pairs feed the CC fixpoint.  No `count()` jobs, no metrics rows.
+  correctness requires — the compact sign table (conv_id, sig, kset) feeds
+  both band consumers, the verify joins and the CC vertex list; candidate
+  pairs feed the verify joins and verified pairs feed the CC fixpoint.  The
+  assembled docs are not persisted: the sign mapInArrow is their only
+  consumer, so each doc's text crosses into Python once.  Verify joins the
+  persisted k-gram sets in the JVM (`jaccard_verify_sets`).  No `count()`
+  jobs, no metrics rows.
 - checkpointed: the same layers, each written under
-  `<checkpoint_dir>/<stage>_<config hash>` and read back.  A stage whose
-  table exists with the SAME config hash is read back, not recomputed — kill
-  the driver after stage k, rerun, and stages 1..k are loaded while k+1..
-  continue.  Each stage records a `StageMetric` (stage, rows_out counted on
-  the table just written, wall_ms, partitions, config_hash, resumed).  With
-  `max_pair_degree` set, the raw and capped candidate sets are separate
-  stages and a `degree_cap_dropped` row records the difference.
+  `<checkpoint_dir>/<stage>_<config hash>` and read back (assemble is a stage
+  of its own here).  A stage whose table exists with the SAME config hash is
+  read back, not recomputed — kill the driver after stage k, rerun, and
+  stages 1..k are loaded while k+1.. continue.  Each stage records a
+  `StageMetric` (stage, rows_out counted on the table just written, wall_ms,
+  partitions, config_hash, resumed).  With `max_pair_degree` set, the raw
+  and capped candidate sets are separate stages and a `degree_cap_dropped`
+  row records the difference.
 """
 
 from __future__ import annotations
@@ -37,7 +42,7 @@ from deduputil_spark.operators.assemble import assemble_documents
 from deduputil_spark.operators.cluster import connected_components
 from deduputil_spark.operators.lsh import candidate_pairs, cap_pair_degree
 from deduputil_spark.operators.minhash import lsh_bands, minhash_signatures_numpy
-from deduputil_spark.operators.verify import jaccard_verify_docs
+from deduputil_spark.operators.verify import jaccard_verify_sets
 
 
 @dataclass
@@ -113,11 +118,15 @@ def run_pipeline(
     cfg = cfg or DedupConfig()
     r = Runner(spark, cfg, checkpoint_dir)
 
-    docs = r.run("assemble", lambda: assemble_documents(transcripts))
-    # keep the COMPACT signature table (one row/doc), not the bands×-bigger
+    if checkpoint_dir:
+        docs = r.run("assemble", lambda: assemble_documents(transcripts))
+    else:  # only the sign mapInArrow reads docs: nothing to persist
+        docs = assemble_documents(transcripts)
+    # keep the COMPACT sign table (one row/doc), not the bands×-bigger
     # exploded band table: bands re-derive from it with one JVM explode per
-    # consumer (see candidate_pairs persist_bands)
-    sigs = r.run("minhash", lambda: minhash_signatures_numpy(docs, cfg))
+    # consumer (see candidate_pairs persist_bands).  Its kset column is what
+    # verify joins, so verify never re-reads or re-tokenizes text.
+    sigs = r.run("sign", lambda: minhash_signatures_numpy(docs, cfg))
     bands = lsh_bands(sigs, cfg, band_key="xxhash")  # no per-band string build
     if checkpoint_dir and cfg.max_pair_degree is not None:
         # meter the raw and capped candidate sets as separate stages and emit
@@ -138,18 +147,16 @@ def run_pipeline(
         )
     else:
         cands = r.run("candidates", lambda: candidate_pairs(bands, cfg, persist_bands=False))
-    # verify prunes DOCS before exploding shingles: cost scales with the
-    # candidate set, not the corpus
     verified = r.run(
         "verified",
-        lambda: jaccard_verify_docs(cands, docs, cfg.shingle_k, threshold=cfg.jaccard_threshold),
+        lambda: jaccard_verify_sets(cands, sigs.select("conv_id", "kset"), cfg.jaccard_threshold),
     )
 
     def cluster() -> DataFrame:
         return connected_components(
             verified.select("conv_a", "conv_b"),
             cfg.max_cc_iterations,
-            all_vertices=docs.select("conv_id"),
+            all_vertices=sigs.select("conv_id"),
         )
 
     # the default plan leaves clusters lazy: the caller's action is its only consumer

@@ -28,7 +28,7 @@ def _baseline(spark, transcripts) -> int:
 
 
 def test_no_persisted_rdds_after_release(spark, transcripts):
-    """The default pipeline persists docs/sigs/cands/verified internally; after the
+    """The default pipeline persists sigs/cands/verified internally; after the
     caller materializes and releases, the count returns to baseline."""
     base = _baseline(spark, transcripts)
 
@@ -37,7 +37,7 @@ def test_no_persisted_rdds_after_release(spark, transcripts):
     assert _n_persistent_rdds(spark) > base  # tracked persists are live mid-query
 
     released = release_caches()
-    assert released >= 3  # docs + cands + verified at minimum
+    assert released >= 3  # sigs + cands + verified at minimum
     assert _n_persistent_rdds(spark) == base
 
 

@@ -6,7 +6,10 @@ from __future__ import annotations
 
 import tempfile
 
+import numpy as np
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from deduputil_spark.cache import release_caches
@@ -15,15 +18,22 @@ from deduputil_spark.operators.assemble import assemble_documents
 from deduputil_spark.operators.cluster import connected_components
 from deduputil_spark.operators.lsh import bucket_skew_report, candidate_pairs
 from deduputil_spark.operators.minhash import (
+    MERSENNE_P,
+    batch_kgram_sets,
+    batch_oph_signatures,
+    batch_token_hashes,
+    doc_kgram_hashes,
     lsh_bands,
     minhash_jaccard_estimate,
     minhash_signatures,
     minhash_signatures_numpy,
+    oph_bin_edges,
+    oph_signature,
 )
 from deduputil_spark.operators.shingle import shingles
 from deduputil_spark.operators.simhash import simhash_candidates, simhash_signatures
 from deduputil_spark.operators.substring import containment_candidates, verify_substring
-from deduputil_spark.operators.verify import jaccard_verify
+from deduputil_spark.operators.verify import jaccard_verify, jaccard_verify_docs, jaccard_verify_sets
 from deduputil_spark.plans.pipeline import pair_recall, run_pipeline
 
 CFG = DedupConfig()
@@ -119,8 +129,8 @@ def test_pipeline_recall_and_collision_separation(spark, transcripts, corpus, sh
 def test_default_run_launches_no_extra_jobs(spark, transcripts):
     """The default (uncheckpointed) plan runs no count() jobs and writes no
     metrics: the pipeline plus one noop write of its clusters launches at
-    most the 26 Spark jobs the plan needed before the checkpointed path was
-    folded into the same function."""
+    most 20 Spark jobs (measured 20 once verify joined the sign layer's
+    k-gram sets instead of re-tokenizing docs; 26 before)."""
     transcripts.count()  # the cached fixture materializes outside the group
     release_caches()  # earlier tests' tracked persists must not serve this run
     sc = spark.sparkContext
@@ -134,7 +144,63 @@ def test_default_run_launches_no_extra_jobs(spark, transcripts):
         release_caches()
     assert res.metrics == []
     n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert 0 < n_jobs <= 26, n_jobs
+    assert 0 < n_jobs <= 20, n_jobs
+
+
+def test_sign_layer_outputs_match_scalar_definitions(spark, docs):
+    """The sign mapInArrow's kset is each doc's `doc_kgram_hashes`, and its
+    sig is the single-doc `oph_signature` of that set mod MERSENNE_P (OPH
+    ignores duplicates, so this is also the k-gram multiset's signature) —
+    for every corpus doc plus an empty and a whitespace-only doc."""
+    extra = spark.createDataFrame([("~empty", ""), ("~blank", " \t\n\r ")], "conv_id string, doc_text string")
+    texts = docs.select("conv_id", "doc_text").unionByName(extra)
+    want = {r["conv_id"]: r["doc_text"] for r in texts.collect()}
+    edges = oph_bin_edges(CFG.num_perm)
+    rows = minhash_signatures_numpy(texts, CFG).collect()
+    assert sorted(r["conv_id"] for r in rows) == sorted(want)
+    for r in rows:
+        ref = doc_kgram_hashes(want[r["conv_id"]], CFG.shingle_k)
+        assert np.array_equal(np.array(r["kset"], dtype=np.int64), ref), r["conv_id"]
+        sig = oph_signature(np.sort(ref % MERSENNE_P), CFG.num_perm, edges)
+        assert np.array_equal(np.array(r["sig"], dtype=np.int64), sig), r["conv_id"]
+
+
+def test_verified_pairs_match_text_verify(spark, transcripts, docs):
+    """The pipeline's verify joins the sign layer's k-gram sets; its verified
+    pairs, jaccard values included, equal re-tokenizing the candidate docs
+    (`jaccard_verify_docs`) on the same candidates."""
+    release_caches()
+    sigs = minhash_signatures_numpy(docs, CFG).cache()
+    try:
+        got = sorted(tuple(r) for r in run_pipeline(spark, transcripts, CFG).verified_pairs.collect())
+        cands = candidate_pairs(lsh_bands(sigs, CFG, band_key="xxhash"), CFG, persist_bands=False)
+        from_text = jaccard_verify_docs(cands, docs, CFG.shingle_k, threshold=CFG.jaccard_threshold)
+        from_sets = jaccard_verify_sets(cands, sigs.select("conv_id", "kset"), CFG.jaccard_threshold)
+        want = sorted(tuple(r) for r in from_text.collect())
+        assert got and got == want
+        assert sorted(tuple(r) for r in from_sets.collect()) == want
+    finally:
+        sigs.unpersist()
+        release_caches()
+
+
+@settings(max_examples=40, deadline=None)
+@given(
+    texts=st.lists(st.text(alphabet="ab c\t\né", max_size=40), max_size=12),
+    k=st.integers(1, 6),
+    num_perm=st.sampled_from([4, 16, 128]),
+)
+def test_batch_kernels_match_single_doc_kernels(texts, k, num_perm):
+    """Spark-free: the batch k-gram sets and batch OPH equal the single-doc
+    kernels on arbitrary batches (empty, short and whitespace-only docs)."""
+    keys, bounds = batch_kgram_sets(*batch_token_hashes(texts), k)
+    sigs = batch_oph_signatures(keys, bounds, num_perm).reshape(len(texts), num_perm)
+    edges = oph_bin_edges(num_perm)
+    assert len(bounds) == len(texts) + 1
+    for i, t in enumerate(texts):
+        ref = doc_kgram_hashes(t, k)
+        assert np.array_equal(keys[bounds[i] : bounds[i + 1]], ref)
+        assert np.array_equal(sigs[i], oph_signature(np.sort(ref % MERSENNE_P), num_perm, edges))
 
 
 @pytest.mark.parametrize("driver_threshold", [2_000_000, 0])  # driver + distributed paths
@@ -171,6 +237,11 @@ def test_connected_components_vs_union_find(spark, driver_threshold):
         want = min(members)
         for m in members:
             assert got[m] == want, (m, got[m], want)
+    # no edges: every vertex comes back as its own singleton (an empty labels frame)
+    no_edges = spark.createDataFrame([], "conv_a string, conv_b string")
+    verts = spark.createDataFrame([(f"v{i:03d}",) for i in range(5)], "conv_id string")
+    alone = connected_components(no_edges, max_iterations=50, all_vertices=verts, driver_threshold=driver_threshold)
+    assert {r["conv_id"]: r["cluster_id"] for r in alone.collect()} == {f"v{i:03d}": f"v{i:03d}" for i in range(5)}
 
 
 def test_checkpoint_resume(spark, transcripts):
@@ -246,10 +317,6 @@ def test_oph_signature_estimator_quality():
     """OPH signatures (the scale scheme): agreement fraction is an unbiased
     Jaccard estimator (mean bias < 0.02 over 40 seeded set pairs) and exact
     for identical sets; densification keeps short docs banding-safe."""
-    import numpy as np
-
-    from deduputil_spark.operators.minhash import MERSENNE_P, oph_bin_edges, oph_signature
-
     k = CFG.num_perm
     edges = oph_bin_edges(k)
     rng = np.random.default_rng(5)
