@@ -872,22 +872,22 @@ SELECT user_id, CAST(sum(new_sess) AS BIGINT) AS n_sessions, count(*) AS n_event
 
 
 # ---------------------------------------------------------------------------
-# Distributed suffix-array pass (north-rule: exact-substring dupes)
+# Suffix-array pass (north-rule: exact-substring dupes)
 # ---------------------------------------------------------------------------
 
-SUFFIX_L = 15  # non-power-of-two: exercises the SA final-combine step
+SUFFIX_L = 15  # gram length shared by the three suffix queries and their oracles
 
 
 def q_suffix_dup_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Every character position whose length-L substring occurs >=2 times
-    anywhere in the corpus, via the REAL L-truncated prefix-doubling suffix
-    array (Larsson-Sadakane rounds of rank-pair re-ranking — no hashing
-    involved on the Spark side).  The DuckDB oracle recomputes duplicated
-    positions directly from the gram text, so a hash match certifies the
-    distributed SA's equality classes position-for-position."""
+    anywhere in the corpus — the equality classes of the L-truncated suffix
+    array — via the rolling-hash path (8-byte L-gram hashes grouped, each
+    candidate group re-checked against the gram text).  The DuckDB oracle
+    recomputes duplicated positions directly from the gram text, so a hash
+    match certifies the classes position-for-position."""
     from deduputil_spark.operators.suffixarray import duplicated_positions
 
-    return duplicated_positions(_docs(spark, sf_dir), SUFFIX_L, method="sa").select(
+    return duplicated_positions(_docs(spark, sf_dir), SUFFIX_L).select(
         "doc_id", F.col("pos").cast("int").alias("pos")
     )
 

@@ -1,16 +1,13 @@
 """Iterative connected components over verified duplicate pairs.
 
-Two distributed algorithms (no GraphFrames dependency), one driver fast path:
-
-- "star" (default): small-star/large-star alternation — the alternating-star
-  algorithm of Kiveris et al., "Connected Components in MapReduce and
-  Beyond" (SOCC 2014).  Converges in O(log n) rounds even on chain/path
-  graphs, where plain label propagation needs O(diameter).  Each half-round
-  is one aggregate + one join; no per-node adjacency lists are ever
-  materialized (mega-components stay safe).
-- "minlabel": min-label propagation (each iteration joins labels across the
-  edge list and takes the elementwise min) — O(diameter) rounds; kept as the
-  cross-check implementation.
+A driver union-find fast path, and one distributed algorithm (no
+GraphFrames dependency) for edge lists too big for the driver:
+small-star/large-star alternation — the alternating-star algorithm of
+Kiveris et al., "Connected Components in MapReduce and Beyond" (SOCC 2014).
+It converges in O(log n) rounds even on chain/path graphs, where plain label
+propagation needs O(diameter).  Each half-round is one aggregate + one join;
+no per-node adjacency lists are ever materialized (mega-components stay
+safe).
 
 Cluster ids are canonical — min(conv_id) in the component — so results are
 deterministic under any parallelism (SURVEY.md §7.4.4).  Every round
@@ -29,7 +26,6 @@ def connected_components(
     max_iterations: int = 20,
     all_vertices: DataFrame | None = None,
     driver_threshold: int = 2_000_000,
-    algorithm: str = "star",
 ) -> DataFrame:
     """pairs(conv_a, conv_b) -> (conv_id, cluster_id).
 
@@ -38,20 +34,15 @@ def connected_components(
 
     Hybrid execution: below `driver_threshold` edges the component graph fits
     trivially on the driver — path-compressed union-find there beats N Spark
-    jobs of fixed overhead by 10-30×.  Above it, the distributed loop runs
-    (`algorithm`: "star" O(log n) rounds, or "minlabel" O(diameter)).
+    jobs of fixed overhead by 10-30×.  Above it, the distributed star loop
+    runs in O(log n) rounds.
     Verified duplicate edges are a sliver of corpus size even at 10^12 turns,
     but the distributed path keeps the pipeline total when they aren't.
     """
     n_edges = pairs.count()
     if n_edges <= driver_threshold:
         return _driver_union_find(pairs, all_vertices)
-    if algorithm == "star":
-        labels, _ = _star_components(pairs, max_iterations)
-    elif algorithm == "minlabel":
-        labels = _minlabel_components(pairs, max_iterations)
-    else:
-        raise ValueError(f"unknown cc algorithm {algorithm!r}")
+    labels, _ = _star_components(pairs, max_iterations)
     if all_vertices is not None:
         labels = (
             all_vertices.select("conv_id")
@@ -126,45 +117,6 @@ def _star_components(pairs: DataFrame, max_iterations: int) -> tuple[DataFrame, 
         .withColumn("cluster_id", F.coalesce("cluster_id", F.col("conv_id")))
     )
     return labels, rounds
-
-
-def _minlabel_components(pairs: DataFrame, max_iterations: int) -> DataFrame:
-    edges = (
-        pairs.select(F.col("conv_a").alias("src"), F.col("conv_b").alias("dst"))
-        .unionByName(pairs.select(F.col("conv_b").alias("src"), F.col("conv_a").alias("dst")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    labels = (
-        edges.select(F.col("src").alias("conv_id")).distinct()
-        .withColumn("cluster_id", F.col("conv_id"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_iterations):
-        nbr_min = (
-            edges.join(labels.withColumnRenamed("conv_id", "src"), "src")
-            .groupBy("dst")
-            .agg(F.min("cluster_id").alias("nbr_min"))
-            .withColumnRenamed("dst", "conv_id")
-        )
-        new_labels = (
-            labels.join(nbr_min, "conv_id", "left")
-            .select(
-                "conv_id",
-                F.least(F.col("cluster_id"), F.coalesce("nbr_min", F.col("cluster_id"))).alias(
-                    "new_cluster_id"
-                ),
-                "cluster_id",
-            )
-        )
-        changed = new_labels.filter(F.col("new_cluster_id") != F.col("cluster_id")).count()
-        labels = (
-            new_labels.select("conv_id", F.col("new_cluster_id").alias("cluster_id"))
-            .localCheckpoint(eager=True)
-        )
-        if changed == 0:
-            break
-    return labels
 
 
 def _driver_union_find(pairs: DataFrame, all_vertices: DataFrame | None) -> DataFrame:

@@ -26,8 +26,8 @@ def shingles(docs: DataFrame, k: int = 5, text_col: str = "doc_text", distinct: 
     MinHash only needs the multiset (min over multiset == min over set), so
     the signature path NEVER shuffles the exploded shingle table — at corpus
     scale that shuffle (billions of rows) would dominate the whole pipeline.
-    Set-semantics consumers (exact Jaccard) deduplicate AFTER pruning to the
-    candidate convs (see verify.jaccard_verify).
+    Set-semantics consumers deduplicate AFTER pruning to the rows they need
+    (the default ``distinct=True`` does it here).
     """
     k = int(k)
     toks = F.split(F.trim(F.col(text_col)), r"\s+")

@@ -1,44 +1,36 @@
-"""Distributed suffix-array pass for exact-substring duplicates.
+"""Exact-substring duplicates: the suffix-array pass over L-grams.
 
 The north rule names "a distributed suffix-array pass for exact-substring
 dupes" — the Lee et al. (2021, "Deduplicating Training Data Makes Language
 Models Better") semantics: find every position whose length-L substring
 occurs at two or more positions anywhere in the corpus, and merge those
 positions into duplicated spans (the text you would strip from a training
-set).  Reference parity: this is the corpus-wide generalization of the
-reference's fixed/content-defined block-hash duplicate lookup
-(/root/reference/src/dedup.c:329-395) to EVERY character offset instead of
-chunk boundaries.
+set).  Positions sharing an L-gram are exactly the equality classes of the
+L-truncated suffix array; both paths below compute those classes without
+building the array.  Reference parity: this is the corpus-wide
+generalization of deduputil's block-hash duplicate lookup (src/dedup.c:
+329-395, probe a hashtable with the chunk hash, compare the bytes on a hit)
+to EVERY character offset instead of chunk boundaries.
 
-Three interchangeable paths, cross-checked in tests:
+Two interchangeable paths, cross-checked in tests:
 
-- ``method="sa"`` — a real distributed suffix array, L-truncated
-  prefix doubling (Larsson–Sadakane): log2(L) rounds, each one
-  ``(rank[p], rank[p+d])`` self-join + tie-aware range-partitioned dense
-  re-rank (`assign_dense_ranks` — NO global window anywhere).  After
-  doubling to d = 2^floor(log2 L), a final ``(rank_d[p], rank_d[p+L-d])``
-  combine makes non-power-of-two L exact.  Positions sharing a final key
-  have byte-identical first L characters — the truncated suffix-array
-  equality classes.
-- ``method="rolling"`` — the 100-TB scale path: per-document vectorized
-  mod-2^64 polynomial rolling hash (uint64 wraparound prefix sums over
-  UTF-32 codepoints, odd base => invertible), so the corpus-wide exchange
-  carries 8-byte hashes instead of L-char grams; candidate groups are
-  re-verified against the actual gram so hash collisions cannot produce
-  false duplicates.
-- ``method="direct"`` — substring + groupBy(gram), the oracle-parity
-  reference (shuffles O(L) bytes per position; small-scale only).
+- ``method="rolling"`` (default) — the scale path, the same shape as the
+  reference lookup: per-document vectorized mod-2^64 polynomial rolling
+  hash (uint64 wraparound prefix sums over UTF-32 codepoints, odd base =>
+  invertible), so the corpus-wide exchange carries 8-byte hashes instead
+  of L-char grams; candidate groups are re-verified against the actual
+  gram so hash collisions cannot produce false duplicates.
+- ``method="direct"`` — substring + groupBy(gram), the reference the tests
+  compare against (shuffles O(L) bytes per position; small-scale only).
 
 Positions are CHARACTER offsets (0-based), matching SQL ``substr``
 semantics for any unicode text.
 
-SCALE NOTES: every path materializes O(total_chars) position rows — that is
-inherent to suffix-array semantics, not an implementation choice; the knobs
-that matter are bytes-per-position on the wire (8 for rolling / ~2×8 for the
-sa ranks vs L for direct) and the absence of global sorts (dense re-ranks
-are the same two-pass range-partitioned scheme as dedup.assign_dense_ids).
-Per-doc numpy work is cache-resident (docs are KBs) — no batch-global temps
-(see BENCH/BASELINE.md round-4 allocator note).
+SCALE NOTES: both paths materialize O(total_chars) position rows — that is
+inherent to suffix-array semantics, not an implementation choice; the knob
+that matters is bytes-per-position on the wire (8 for rolling vs L for
+direct).  Per-doc numpy work is cache-resident (docs are KBs) — no
+batch-global temps (see BENCH/BASELINE.md round-4 allocator note).
 """
 
 from __future__ import annotations
@@ -49,26 +41,10 @@ from pyspark.sql import functions as F
 # odd 64-bit base -> invertible mod 2^64; value is arbitrary but fixed
 _B = 0x9E3779B97F4A7C15 | 1
 _BINV = pow(_B, -1, 1 << 64)
-_MASK64 = (1 << 64) - 1
 
 # ---------------------------------------------------------------------------
-# shared plumbing
+# direct path (the reference the tests compare against)
 # ---------------------------------------------------------------------------
-
-def doc_positions(
-    docs: DataFrame, L: int, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """-> (id, pos) for every character position that starts a full L-gram
-    (pos in 0 .. len-L).  Narrow map; no shuffle."""
-    return docs.select(
-        F.col(id_col).alias(id_col),
-        F.explode(
-            F.when(
-                F.length(text_col) >= L,
-                F.sequence(F.lit(0), F.length(text_col) - L),
-            ).otherwise(F.array().cast("array<int>"))
-        ).alias("pos"),
-    )
 
 def lgrams_direct(
     docs: DataFrame, L: int, id_col: str = "doc_id", text_col: str = "text"
@@ -226,173 +202,7 @@ def lgram_hashes(
     return docs.select(id_col, text_col).mapInArrow(batches, out_schema)
 
 # ---------------------------------------------------------------------------
-# tie-aware scalable dense ranking (the suffix-array re-rank primitive)
-# ---------------------------------------------------------------------------
-
-def _unpersist_checkpoint(df: DataFrame) -> None:
-    """Release the executor-storage blocks pinned by an EAGER
-    ``localCheckpoint`` result once nothing references it anymore.
-
-    ``DataFrame.unpersist`` only talks to the cache manager, which knows
-    nothing about checkpoint RDDs — the pinned data lives in the RDD wrapped
-    by the plan's ``LogicalRDD`` node, reachable through py4j.  Best-effort:
-    a plan-shape surprise degrades to the old keep-until-session-end
-    behavior, never to an error."""
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
-        pass
-
-def assign_dense_ranks(
-    df: DataFrame,
-    key_cols: list[str],
-    rank_col: str = "rank",
-    num_partitions: int | None = None,
-    release_into: list[DataFrame] | None = None,
-) -> DataFrame:
-    """Tie-aware dense rank over `key_cols`, scalably: equal keys get EQUAL
-    rank (unlike dedup.assign_dense_ids, which numbers rows).  Two-pass:
-    range-partition by key (equal keys co-locate), per-partition dense_rank
-    window, driver-broadcast offsets = cumulative count of DISTINCT keys in
-    preceding partitions.  No global window.
-
-    PRECONDITION: `key_cols` must be non-null in every row.  The offset pass
-    counts countDistinct(*keys), which skips rows with any NULL key, while
-    dense_rank ranks them — nullable keys would silently overlap global
-    ranks.  All in-repo callers satisfy this by construction (characters,
-    ranks, -1 sentinels)."""
-    nparts = num_partitions or max(df.sparkSession.sparkContext.defaultParallelism, 8)
-    keys = [F.col(c) for c in key_cols]
-    parted = (
-        df.repartitionByRange(nparts, *keys)
-        .withColumn("_part", F.spark_partition_id())
-        .localCheckpoint(eager=True)  # freeze partitioning for both passes
-    )
-    if release_into is not None:
-        # hand the caller the checkpointed frame so it can release the pinned
-        # blocks (`_unpersist_checkpoint`) once a later round supersedes them
-        release_into.append(parted)
-    counts = {
-        r["_part"]: r["nd"]
-        for r in parted.groupBy("_part").agg(F.countDistinct(*keys).alias("nd")).collect()
-    }
-    offsets, acc = {}, 0
-    for p in sorted(counts):
-        offsets[p] = acc
-        acc += counts[p]
-    offset_df = df.sparkSession.createDataFrame(
-        [(int(p), int(o)) for p, o in offsets.items()], "part int, _offset bigint"
-    )
-    w = Window.partitionBy("_part").orderBy(*key_cols)
-    return (
-        parted.withColumn("_dr", F.dense_rank().over(w))
-        .join(F.broadcast(offset_df), F.col("_part") == F.col("part"), "inner")
-        .withColumn(rank_col, (F.col("_offset") + F.col("_dr") - 1).cast("long"))
-        .drop("_part", "_dr", "part", "_offset")
-    )
-
-# ---------------------------------------------------------------------------
-# the suffix-array path: L-truncated prefix doubling
-# ---------------------------------------------------------------------------
-
-#: `truncated_suffix_ranks` cost guard: the prefix-doubling path explodes one
-#: row per CHARACTER and each of its ~log2(L)+1 rounds pins an eager
-#: localCheckpoint of that O(total_chars) frame in executor storage until the
-#: consuming action completes (localCheckpoint is also not fault-tolerant —
-#: executor loss fails the job).  It is the exactness/parity path; `rolling`
-#: is the scale path.  Same loud-guard contract as the brute ANN paths.
-SA_MAX_CHARS = 50_000_000
-
-def truncated_suffix_ranks(
-    docs: DataFrame,
-    L: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_chars: int | None = SA_MAX_CHARS,
-) -> DataFrame:
-    """-> (id, pos, key1, key2) for every full-L-gram position, where two
-    positions share (key1, key2) iff their first L characters are identical
-    — the equality classes of the L-truncated suffix array.
-
-    Prefix doubling: rank_1 = dense rank of the single character; round d
-    re-ranks (rank_d[p], rank_d[p+d]) until 2d > L; the final key pair is
-    (rank_d[p], rank_d[p + L - d]) which covers [p, p+L) exactly for any L.
-    Suffix ends rank as -1 sentinels (consistent: a short suffix never
-    equals a longer one's prefix class at full L because final positions
-    are filtered to pos <= len-L).
-
-    MEMORY/FAULT PROFILE: every doubling round eagerly localCheckpoints the
-    full O(total_chars) positions frame and the final plan references every
-    round's checkpoint, so ~log2(L)+1 copies stay pinned until the consuming
-    action finishes; localCheckpoint is not fault-tolerant.  Guarded by
-    `max_chars` (default SA_MAX_CHARS) — pass ``max_chars=None`` or a larger
-    bound to override; use ``method="rolling"`` for corpus scale."""
-    L = int(L)
-    if L < 1:
-        raise ValueError("L must be >= 1")
-    if max_chars is not None:
-        total_chars = docs.agg(
-            F.coalesce(F.sum(F.length(text_col)), F.lit(0)).alias("n")
-        ).collect()[0]["n"]
-        if total_chars > max_chars:
-            raise ValueError(
-                f"truncated_suffix_ranks: corpus has {total_chars:,} chars > "
-                f"max_chars={max_chars:,}; the sa path explodes one row per "
-                "character and pins ~log2(L)+1 checkpointed copies — use "
-                "method='rolling' at this scale, or pass max_chars=None/"
-                "a larger bound to override deliberately"
-            )
-    # all suffix positions 0..len-1 (shorter-than-L suffixes participate as
-    # join targets for the rank chains of full-L positions)
-    pos = docs.select(
-        F.col(id_col).alias(id_col),
-        F.posexplode(F.split(F.col(text_col), "")).alias("pos", "ch"),
-    ).filter(F.length("ch") > 0)
-    # rank_1: dense rank of the character. Alphabet is bounded -> tiny frame.
-    prev_ckpts: list[DataFrame] = []  # checkpoints the NEXT round supersedes
-    alphabet = assign_dense_ranks(
-        pos.select("ch").distinct(), ["ch"], "rank", release_into=prev_ckpts
-    )
-    cur = pos.join(F.broadcast(alphabet), "ch").select(id_col, "pos", "rank")
-    d = 1
-    while 2 * d <= L:
-        shifted = cur.select(
-            F.col(id_col),
-            (F.col("pos") - d).alias("pos"),
-            F.col("rank").alias("rank2"),
-        )
-        joined = (
-            cur.join(shifted, [id_col, "pos"], "left")
-            .withColumn("rank2", F.coalesce("rank2", F.lit(-1)))
-        )
-        round_ckpts: list[DataFrame] = []
-        cur = assign_dense_ranks(
-            joined, ["rank", "rank2"], "rank_new", release_into=round_ckpts
-        ).select(id_col, "pos", F.col("rank_new").alias("rank"))
-        # this round's EAGER checkpoint has materialized everything derived
-        # from the previous round's checkpoint — release those pinned blocks
-        # now, so the loop holds ~2 O(total_chars) copies instead of
-        # accumulating log2(L)+1 of them until the consuming action finishes
-        # (VERDICT r5 #4 / ADVICE r5)
-        for old in prev_ckpts:
-            _unpersist_checkpoint(old)
-        prev_ckpts = round_ckpts
-        d *= 2
-    # final non-pow2 combine: key over [p, p+L) = (rank_d[p], rank_d[p+L-d])
-    full = doc_positions(docs, L, id_col, text_col)
-    keyed = full.join(cur.select(id_col, "pos", F.col("rank").alias("key1")), [id_col, "pos"])
-    if d < L:
-        off = L - d
-        shifted = cur.select(
-            F.col(id_col), (F.col("pos") - off).alias("pos"), F.col("rank").alias("key2")
-        )
-        keyed = keyed.join(shifted, [id_col, "pos"])
-    else:
-        keyed = keyed.withColumn("key2", F.lit(0).cast("long"))
-    return keyed.select(id_col, "pos", "key1", "key2")
-
-# ---------------------------------------------------------------------------
-# duplicated positions / spans (all methods)
+# duplicated positions / spans (both methods)
 # ---------------------------------------------------------------------------
 
 def _dup_keys(df: DataFrame, *key_cols: str) -> DataFrame:
@@ -453,7 +263,7 @@ def duplicated_positions(
     """-> (id, pos): every position whose L-gram occurs >= 2 times anywhere
     in the corpus (cross-doc or same-doc at a different offset).
 
-    All three methods share the skew-safe dup-group filter (`_dup_keys` +
+    Both methods share the skew-safe dup-group filter (`_dup_keys` +
     semi-join): no Window over a corpus-frequency-distributed key anywhere,
     so a hot gram cannot pin one task (VERDICT r4 #1), and the rolling path's
     big exchange shrinks to dup candidates only (VERDICT r4 #2) — most
@@ -492,13 +302,6 @@ def duplicated_positions(
         return _filter_dup_groups(with_gram, "gram", key_bytes=4 * L).select(
             id_col, "pos"
         )
-    if method == "sa":
-        # the keyed frame's lineage (log L prefix-doubling rounds) is expensive;
-        # checkpoint it so the filter's two join sides don't re-run the rounds
-        ranks = truncated_suffix_ranks(docs, L, id_col, text_col).localCheckpoint(
-            eager=False
-        )
-        return _filter_dup_groups(ranks, "key1", "key2").select(id_col, "pos")
     raise ValueError(f"unknown method {method!r}")
 
 def duplicated_spans(

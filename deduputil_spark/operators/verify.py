@@ -4,15 +4,17 @@ Three verifiers, mirroring the reference's similarity semantics:
 
 - exact set Jaccard over k-grams: `jaccard_verify_sets` (the pipeline's
   verify, JVM array_intersect over the k-gram sets the signature layer
-  emits), `jaccard_verify_docs` (the same core for callers holding doc
-  text) and `jaccard_verify` (relational, over string shingles).
+  emits) and `jaccard_verify_docs` (the same core for callers holding doc
+  text).
 - `bsim_similarity` — the reference's weighted block-frequency formula
   sim = 2·Σ len·min(n1,n2) / Σ len·(n1+n2)  (/root/reference/src/bsim.c:277-294)
   over chunk-md5 multisets, relational.
-- `lcs_similarity` — the reference's ordered LCS similarity
-  (/root/reference/src/bsim.c:177-275): O(n·m) DP over the two documents'
-  chunk-hash sequences, run ONLY on surviving candidate pairs via a
-  vectorized-batch pandas UDF (quadratic work must never touch the corpus).
+- `lcs_verify_components` — the reference's ordered LCS similarity
+  (deduputil src/bsim.c:177-275) as integer components
+  (lcs_bytes, union_bytes), sim = 2·lcs_bytes / union_bytes: O(n·m) DP over
+  the two documents' chunk-hash sequences, run ONLY on surviving candidate
+  pairs via a vectorized-batch pandas UDF (quadratic work must never touch
+  the corpus).
 """
 
 from __future__ import annotations
@@ -103,64 +105,6 @@ def jaccard_verify_docs(
     return jaccard_verify_sets(pairs, track(_kgram_sets(cand_docs, k)), threshold)
 
 
-def jaccard_verify(
-    pairs: DataFrame, shingle_df: DataFrame, threshold: float | None = None
-) -> DataFrame:
-    """(conv_a, conv_b) × (conv_id, shingle) -> (conv_a, conv_b, jaccard).
-
-    |A∩B| via join on shingle; |A∪B| = |A|+|B|-|A∩B|.  Filter at `threshold`.
-
-    SCALE: the shingle table is first SEMI-PRUNED to convs that appear in a
-    candidate pair (semi-join — pairs are small next to the corpus, AQE
-    broadcasts when they fit), and only then deduplicated.  Verification cost therefore scales with the
-    candidate set, never with the corpus.  `shingle_df` may be the raw
-    (non-distinct) narrow shingle map.
-    """
-    members = (
-        pairs.select(F.col("conv_a").alias("conv_id"))
-        .unionByName(pairs.select(F.col("conv_b").alias("conv_id")))
-    )  # no .distinct(): the LEFT SEMI below dedups by construction
-    # persist: pruned feeds sizes + both join sides; without it the prune +
-    # distinct shuffle re-executes three times.  Shingles are reduced to
-    # 64-bit xxhash keys first — the distinct + equi-joins then shuffle longs
-    # instead of ~50-char strings (collision odds 2^-64·|set|² are negligible
-    # for set-size arithmetic).
-    # semi-prune without a forced broadcast (unbounded cardinality; AQE decides)
-    pruned = track(
-        shingle_df.join(members, "conv_id", "left_semi")
-        .select("conv_id", F.xxhash64("shingle").alias("shingle"))
-        .distinct()
-    )
-    return _jaccard_on_sets(pairs, pruned, threshold)
-
-
-def _jaccard_on_sets(pairs: DataFrame, pruned: DataFrame, threshold: float | None) -> DataFrame:
-    """Shared core: (conv_id, shingle) DISTINCT sets -> pair Jaccard."""
-    sizes = pruned.groupBy("conv_id").agg(F.count(F.lit(1)).alias("n"))
-    sa = pruned.select(F.col("conv_id").alias("conv_a"), "shingle")
-    sb = pruned.select(F.col("conv_id").alias("conv_b"), "shingle")
-    inter = (
-        pairs.join(sa, "conv_a")
-        .join(sb, ["conv_b", "shingle"])
-        .groupBy("conv_a", "conv_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    out = (
-        pairs.join(inter, ["conv_a", "conv_b"], "left")
-        .fillna(0, subset=["inter"])
-        .join(sizes.select(F.col("conv_id").alias("conv_a"), F.col("n").alias("na")), "conv_a")
-        .join(sizes.select(F.col("conv_id").alias("conv_b"), F.col("n").alias("nb")), "conv_b")
-        .select(
-            "conv_a",
-            "conv_b",
-            (F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))).alias("jaccard"),
-        )
-    )
-    if threshold is not None:
-        out = out.filter(F.col("jaccard") >= threshold)
-    return out
-
-
 def bsim_components(pairs: DataFrame, chunks: DataFrame) -> DataFrame:
     """Reference bsim J1 as INTEGER-EXACT components per pair:
     (w_inter = Σ len·min(n_a, n_b), wsum = Σ_a len·n_a + Σ_b len·n_b);
@@ -206,21 +150,7 @@ def bsim_similarity(pairs: DataFrame, chunks: DataFrame) -> DataFrame:
     )
 
 
-_LCS_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_a", T.StringType()),
-        T.StructField("conv_b", T.StringType()),
-        T.StructField("lcs_sim", T.DoubleType()),
-    ]
-)
-
-
 _DIAG, _UP, _LEFT = 2, 1, 0
-
-
-def _lcs_weighted(seq_a: np.ndarray, len_a: np.ndarray, seq_b: np.ndarray, len_b: np.ndarray) -> float:
-    lcs_bytes, sim_union = _lcs_components(seq_a, len_a, seq_b, len_b)
-    return (2.0 * lcs_bytes / sim_union) if sim_union else 0.0
 
 
 def _lcs_components(
@@ -315,29 +245,9 @@ def lcs_verify_components(pairs_with_seqs: DataFrame) -> DataFrame:
     return pairs_with_seqs.mapInPandas(run, schema=_LCS_COMPONENT_SCHEMA)
 
 
-def lcs_verify(pairs_with_seqs: DataFrame) -> DataFrame:
-    """pairs(conv_a, conv_b, seq_a array<str>, lens_a array<int>, seq_b, lens_b)
-    -> (conv_a, conv_b, lcs_sim).  Pandas-batched; only run post-LSH."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            sims = []
-            for ra, rla, rb, rlb in zip(pdf["seq_a"], pdf["lens_a"], pdf["seq_b"], pdf["lens_b"]):
-                sa = np.asarray(ra, dtype=object)
-                sb = np.asarray(rb, dtype=object)
-                la = np.asarray(rla, dtype=np.int64)
-                lb = np.asarray(rlb, dtype=np.int64)
-                sims.append(_lcs_weighted(sa, la, sb, lb))
-            yield pd.DataFrame(
-                {"conv_a": pdf["conv_a"], "conv_b": pdf["conv_b"], "lcs_sim": sims}
-            )
-
-    return pairs_with_seqs.mapInPandas(run, schema=_LCS_SCHEMA)
-
-
 def pair_chunk_sequences(pairs: DataFrame, chunks: DataFrame) -> DataFrame:
     """Attach ordered chunk-md5 sequences + lengths to each pair (input to
-    `lcs_verify`)."""
+    `lcs_verify_components`)."""
     seqs = (
         chunks.filter(~F.col("is_tail"))
         .groupBy("conv_id")

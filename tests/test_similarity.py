@@ -33,7 +33,7 @@ from deduputil_spark.operators.minhash import (
 from deduputil_spark.operators.shingle import shingles
 from deduputil_spark.operators.simhash import simhash_candidates, simhash_signatures
 from deduputil_spark.operators.substring import containment_candidates, verify_substring
-from deduputil_spark.operators.verify import jaccard_verify, jaccard_verify_docs, jaccard_verify_sets
+from deduputil_spark.operators.verify import jaccard_verify_docs, jaccard_verify_sets
 from deduputil_spark.plans.pipeline import pair_recall, run_pipeline
 
 CFG = DedupConfig()
@@ -112,9 +112,14 @@ def test_pipeline_recall_and_collision_separation(spark, transcripts, corpus, sh
     # the gate (FIXTURES.md): recall over planted pairs whose TRUE Jaccard
     # clears the verify threshold (5%-edit pairs sit at J≈0.63 < 0.7 by design)
     planted = truth.filter(F.col("kind") != "collision_nonpair").select("conv_a", "conv_b")
-    strong = jaccard_verify(planted, shingle_df, threshold=CFG.jaccard_threshold).select(
-        "conv_a", "conv_b"
-    ).withColumn("kind", F.lit("planted"))
+    # brute force orients pairs conv_a < conv_b; planted pairs may be either way
+    eligible = brute_force_jaccard(shingle_df, CFG.jaccard_threshold).select("conv_a", "conv_b")
+    flipped = eligible.select(F.col("conv_b").alias("conv_a"), F.col("conv_a").alias("conv_b"))
+    strong = (
+        planted.join(eligible, ["conv_a", "conv_b"], "left_semi")
+        .unionByName(planted.join(flipped, ["conv_a", "conv_b"], "left_semi"))
+        .withColumn("kind", F.lit("planted"))
+    )
     assert strong.count() > 0
     rec = pair_recall(clusters, strong)
     assert rec >= 0.99, f"planted-pair recall {rec}"

@@ -1,7 +1,7 @@
-"""Distributed suffix-array pass (operators/suffixarray.py): all three
-methods (sa / rolling / direct) vs a Python brute force, cross-method
-equivalence, unicode char-position semantics, non-power-of-two L, span
-merging, and the tie-aware dense-rank primitive."""
+"""Exact-substring pass (operators/suffixarray.py): both methods (rolling /
+direct) vs a Python brute force, cross-method equivalence, unicode
+char-position semantics, exactness at the gram length L, span merging and
+stripping."""
 
 from __future__ import annotations
 
@@ -11,12 +11,10 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from deduputil_spark.operators.suffixarray import (
-    assign_dense_ranks,
     duplicated_positions,
     duplicated_spans,
     lgram_hashes,
     strip_duplicated_spans,
-    truncated_suffix_ranks,
 )
 
 DOCS = [
@@ -50,8 +48,8 @@ def docs_df(spark):
     return spark.createDataFrame(DOCS, "doc_id int, text string").cache()
 
 
-@pytest.mark.parametrize("method", ["direct", "rolling", "sa"])
-@pytest.mark.parametrize("L", [3, 5, 8])  # 5 exercises the non-pow2 final combine
+@pytest.mark.parametrize("method", ["direct", "rolling"])
+@pytest.mark.parametrize("L", [3, 5, 8])
 def test_duplicated_positions_vs_brute(docs_df, method, L):
     exp = brute_dup_positions(DOCS, L)
     got = {(r.doc_id, r.pos) for r in duplicated_positions(docs_df, L, method).collect()}
@@ -65,7 +63,7 @@ def test_unicode_char_positions(spark):
     df = spark.createDataFrame(docs, "doc_id int, text string")
     exp = brute_dup_positions(docs, 3)
     assert exp  # the planted repeat exists
-    for method in ("direct", "rolling", "sa"):
+    for method in ("direct", "rolling"):
         got = {(r.doc_id, r.pos) for r in duplicated_positions(df, 3, method).collect()}
         assert got == exp, method
 
@@ -75,11 +73,11 @@ def test_unicode_char_positions(spark):
     texts=st.lists(st.text(alphabet="abc", min_size=0, max_size=40), min_size=1, max_size=6),
     L=st.integers(min_value=2, max_value=6),
 )
-def test_property_three_methods_match_brute(spark, texts, L):
+def test_property_methods_match_brute(spark, texts, L):
     docs = list(enumerate(texts))
     df = spark.createDataFrame(docs, "doc_id int, text string")
     exp = brute_dup_positions(docs, L)
-    for method in ("direct", "rolling", "sa"):
+    for method in ("direct", "rolling"):
         got = {(r.doc_id, r.pos) for r in duplicated_positions(df, L, method).collect()}
         assert got == exp, (method, texts, L)
 
@@ -113,15 +111,16 @@ def test_spans_merge_and_split(spark):
     assert spans == exp_spans
 
 
-def test_sa_truncation_exact_at_L(spark):
+def test_truncation_exact_at_L(spark):
     # two grams equal in first 5 chars, diverging at char 6: duplicated at
-    # L=5, NOT at L=6 — catches over-doubling (pow2 overshoot) bugs.
+    # L=5, NOT at L=6 — a gram must be compared over exactly L characters.
     docs = [(1, "abcdeXqq"), (2, "abcdeYqq")]
     df = spark.createDataFrame(docs, "doc_id int, text string")
-    got5 = {(r.doc_id, r.pos) for r in duplicated_positions(df, 5, "sa").collect()}
-    assert got5 == {(1, 0), (2, 0)}
-    got6 = {(r.doc_id, r.pos) for r in duplicated_positions(df, 6, "sa").collect()}
-    assert got6 == set()
+    for method in ("rolling", "direct"):
+        got5 = {(r.doc_id, r.pos) for r in duplicated_positions(df, 5, method).collect()}
+        assert got5 == {(1, 0), (2, 0)}, method
+        got6 = {(r.doc_id, r.pos) for r in duplicated_positions(df, 6, method).collect()}
+        assert got6 == set(), method
 
 
 def test_rolling_hash_no_false_negatives_on_runs(spark):
@@ -147,34 +146,6 @@ def test_lgram_hashes_equal_iff_gram_equal(spark):
             assert grams[g] == r.h
         grams[g] = r.h
     assert len(rows) == len(text) - 5 + 1
-
-
-def test_assign_dense_ranks_tie_aware(spark):
-    df = spark.createDataFrame(
-        [(3, "c"), (1, "a"), (2, "b"), (1, "a"), (3, "a"), (1, "z")], "k1 int, k2 string"
-    )
-    out = assign_dense_ranks(df, ["k1", "k2"], "r").collect()
-    by_key = {}
-    ranks = set()
-    for row in out:
-        key = (row.k1, row.k2)
-        if key in by_key:
-            assert by_key[key] == row.r  # equal keys -> equal rank
-        by_key[key] = row.r
-        ranks.add(row.r)
-    # dense: ranks are exactly 0..n_distinct-1, ordered like the keys
-    assert ranks == set(range(5))
-    ordered = sorted(by_key)
-    assert [by_key[k] for k in ordered] == list(range(5))
-
-
-def test_truncated_ranks_group_by_prefix(spark):
-    docs = [(1, "prefixAAA"), (2, "prefixBBB"), (3, "othertext")]
-    df = spark.createDataFrame(docs, "doc_id int, text string")
-    ranks = truncated_suffix_ranks(df, 6).filter(F.col("pos") == 0).collect()
-    keys = {r.doc_id: (r.key1, r.key2) for r in ranks}
-    assert keys[1] == keys[2]  # same first 6 chars
-    assert keys[3] != keys[1]
 
 
 def brute_clean(docs: list[tuple[int, str]], L: int) -> dict[int, str]:
@@ -236,7 +207,7 @@ def test_all_unique_corpus_empty(spark):
     df = spark.createDataFrame(
         [(1, "abcdefgh"), (2, "ijklmnop")], "doc_id int, text string"
     )
-    for method in ("direct", "rolling", "sa"):
+    for method in ("direct", "rolling"):
         assert duplicated_positions(df, 4, method).count() == 0
 
 
@@ -278,19 +249,12 @@ def test_mega_gram_skew_plan_and_correctness(spark):
     assert got == len(exp_sample)
 
 
-def test_sa_max_chars_guard(spark):
-    df = spark.createDataFrame([(1, "x" * 100)], "doc_id int, text string")
-    with pytest.raises(ValueError, match="max_chars"):
-        truncated_suffix_ranks(df, 4, max_chars=50)
-    # override works
-    assert truncated_suffix_ranks(df, 4, max_chars=None).count() == 97
-
-
 def test_rolling_parity_sf01_driver_table(spark):
     """VERDICT r4 #7: certify the SCALE path (rolling) at the largest local
     test size — sf0.1 documents (~1.5M chars), against the same DuckDB
     direct-gram oracle the driver uses for suffix_dup_positions (which runs
-    the sa method at sf0.01).  Exact set equality, position-for-position."""
+    the same rolling method at sf0.001 and sf0.01).  Exact set equality,
+    position-for-position."""
     import duckdb
 
     import __spark_entry__ as em
@@ -306,27 +270,4 @@ def test_rolling_parity_sf01_driver_table(spark):
         f"CREATE VIEW documents AS SELECT * FROM read_parquet('{sf_dir}/documents.parquet')"
     )
     exp = set(con.sql(em.SQL_SUFFIX_DUP_POSITIONS).fetchall())
-    assert got == exp
-
-
-def test_sa_round_checkpoints_released(spark):
-    """Superseded prefix-doubling round checkpoints must be unpersisted as the
-    loop advances (VERDICT r5 #4): after the consuming action, only the LAST
-    round's checkpoint (+ the ranks/dup-key checkpoints of the filter) may
-    remain pinned — not one per round."""
-    docs = spark.createDataFrame(
-        [(i, ("abcdefgh" * 4)[j:] + f"tail{i}") for i, j in enumerate([0, 1, 2, 3])],
-        "doc_id int, text string",
-    )
-    jsc = spark.sparkContext._jsc.sc()
-    before = jsc.getPersistentRDDs().size()
-    # L=8 -> alphabet rank + doubling rounds d=1,2,4 (three in-loop
-    # checkpoints); un-released, the diff would be >= 5
-    got = {(r.doc_id, r.pos) for r in duplicated_positions(docs, 8, method="sa").collect()}
-    after = jsc.getPersistentRDDs().size()
-    assert after - before <= 3, f"pinned {after - before} RDDs after sa action"
-    exp = {
-        (r.doc_id, r.pos)
-        for r in duplicated_positions(docs, 8, method="direct").collect()
-    }
     assert got == exp

@@ -12,9 +12,9 @@ from deduputil_spark.config import DedupConfig
 from deduputil_spark.operators.assemble import assemble_documents
 from deduputil_spark.operators.chunk import chunk_documents
 from deduputil_spark.operators.verify import (
-    _lcs_weighted,
+    _lcs_components,
     bsim_similarity,
-    lcs_verify,
+    lcs_verify_components,
     pair_chunk_sequences,
 )
 
@@ -74,7 +74,8 @@ def test_lcs_vectorized_matches_scalar_transliteration(trial):
     seq_b = np.array([rng.choice(alphabet) for _ in range(m)], dtype=object)
     len_a = np.array([rng.randrange(1, 100) for _ in range(n)], dtype=np.int64)
     len_b = np.array([rng.randrange(1, 100) for _ in range(m)], dtype=np.int64)
-    got = _lcs_weighted(seq_a, len_a, seq_b, len_b)
+    lcs_bytes, union_bytes = _lcs_components(seq_a, len_a, seq_b, len_b)
+    got = 2.0 * lcs_bytes / union_bytes if union_bytes else 0.0
     want = _lcs_scalar(list(seq_a), list(len_a), list(seq_b), list(len_b))
     assert got == pytest.approx(want), (trial, got, want)
 
@@ -82,7 +83,8 @@ def test_lcs_vectorized_matches_scalar_transliteration(trial):
 def test_lcs_identical_sequences():
     seq = np.array(["a", "b", "c"], dtype=object)
     lens = np.array([10, 20, 30], dtype=np.int64)
-    assert _lcs_weighted(seq, lens, seq, lens) == pytest.approx(1.0)
+    lcs_bytes, union_bytes = _lcs_components(seq, lens, seq, lens)
+    assert 2 * lcs_bytes == union_bytes == 120
 
 
 def test_bsim_and_lcs_on_spark(spark, transcripts, corpus):
@@ -100,11 +102,11 @@ def test_bsim_and_lcs_on_spark(spark, transcripts, corpus):
     for r in bs.collect():
         assert r["bsim"] == pytest.approx(1.0), r
     seqs = pair_chunk_sequences(pairs, chunks)
-    lcs = lcs_verify(seqs)
-    rows = lcs.collect()
+    rows = lcs_verify_components(seqs).collect()
     assert rows, "exact pairs must have chunk sequences"
     for r in rows:
-        assert r["lcs_sim"] == pytest.approx(1.0), r
+        # lcs_sim = 2·lcs_bytes/union_bytes == 1.0, checked in integers
+        assert 2 * r["lcs_bytes"] == r["union_bytes"] > 0, r
 
 
 def test_lcs_weighted_certified_on_real_cdc_chunks(spark):
@@ -112,8 +114,6 @@ def test_lcs_weighted_certified_on_real_cdc_chunks(spark):
     sf0.001 documents with mixed-length CDC chunks, the distributed
     lcs_verify_components must equal the scalar bsim.c transliteration for
     every pair — near-dup pairs (same-text groups) AND unrelated pairs."""
-    from deduputil_spark.operators.verify import lcs_verify_components
-
     docs = (
         spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
         .select(F.col("doc_id").cast("string").alias("conv_id"), F.col("text").alias("doc_text"))
