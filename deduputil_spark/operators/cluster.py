@@ -17,7 +17,7 @@ localCheckpoints to cut lineage (SURVEY.md §4 custom-work item 2).
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -38,10 +38,14 @@ def connected_components(
     runs in O(log n) rounds.
     Verified duplicate edges are a sliver of corpus size even at 10^12 turns,
     but the distributed path keeps the pipeline total when they aren't.
+    One bounded Arrow collect both decides the path and fetches the driver
+    path's edges: a single Spark job, not a count() and then a collect.
     """
-    n_edges = pairs.count()
-    if n_edges <= driver_threshold:
-        return _driver_union_find(pairs, all_vertices)
+    # toLocalIterator would launch a job per partition sequentially (64
+    # mini-jobs ≈ 4 s of scheduler round-trips at local[32])
+    edges = pairs.select("conv_a", "conv_b").limit(driver_threshold + 1).toPandas()
+    if len(edges) <= driver_threshold:
+        return _driver_union_find(pairs.sparkSession, edges, all_vertices)
     labels, _ = _star_components(pairs, max_iterations)
     if all_vertices is not None:
         labels = (
@@ -119,9 +123,10 @@ def _star_components(pairs: DataFrame, max_iterations: int) -> tuple[DataFrame, 
     return labels, rounds
 
 
-def _driver_union_find(pairs: DataFrame, all_vertices: DataFrame | None) -> DataFrame:
-    """Small-graph fast path: collect edges, union-find with path compression,
-    canonical min-id roots; singletons joined back distributed."""
+def _driver_union_find(spark: SparkSession, edges: pd.DataFrame, all_vertices: DataFrame | None) -> DataFrame:
+    """Small-graph fast path: union-find with path compression over the
+    collected edges, canonical min-id roots; singletons joined back
+    distributed."""
     parent: dict[str, str] = {}
 
     def find(x: str) -> str:
@@ -133,11 +138,7 @@ def _driver_union_find(pairs: DataFrame, all_vertices: DataFrame | None) -> Data
             parent[x], x = root, parent[x]
         return root
 
-    # ONE Arrow collect: toLocalIterator launches a job per partition
-    # sequentially (64 mini-jobs ≈ 4 s of scheduler round-trips at local[32])
-    # and this path is already bounded by driver_threshold edges
-    pdf = pairs.select("conv_a", "conv_b").toPandas()
-    for a, b in zip(pdf["conv_a"], pdf["conv_b"]):
+    for a, b in zip(edges["conv_a"], edges["conv_b"]):
         ra, rb = find(a), find(b)
         if ra != rb:
             # union by canonical min so roots stay the min conv_id
@@ -146,7 +147,7 @@ def _driver_union_find(pairs: DataFrame, all_vertices: DataFrame | None) -> Data
     verts = list(parent)
     # an Arrow createDataFrame(pandas) stays in the JVM; a list of rows would
     # become a pickled Python RDD and start a pool of Python workers for it
-    labels = pairs.sparkSession.createDataFrame(
+    labels = spark.createDataFrame(
         pd.DataFrame({"conv_id": verts, "cluster_id": [find(v) for v in verts]}, dtype=object),
         "conv_id string, cluster_id string",
     )

@@ -10,6 +10,8 @@ writes clusters + verified pairs to `<output_dir>` — no repo checkout needed
 on executors; the zip ships the package.  On a real cluster, swap --master
 for YARN/K8s and the paths for object-store URIs; everything else is
 identical (the session builder only sets master when given one).
+It builds its own session, so workers run Spark's default daemon, not
+`session.get_spark`'s `deduputil_spark._daemon`.
 """
 
 from __future__ import annotations

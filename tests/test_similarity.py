@@ -18,7 +18,9 @@ from deduputil_spark.operators.assemble import assemble_documents
 from deduputil_spark.operators.cluster import connected_components
 from deduputil_spark.operators.lsh import bucket_skew_report, candidate_pairs
 from deduputil_spark.operators.minhash import (
+    KGRAM_P,
     MERSENNE_P,
+    arrow_token_hashes,
     batch_kgram_sets,
     batch_oph_signatures,
     batch_token_hashes,
@@ -29,6 +31,8 @@ from deduputil_spark.operators.minhash import (
     minhash_signatures_numpy,
     oph_bin_edges,
     oph_signature,
+    token_hashes_from_buffer,
+    utf8_buffer_view,
 )
 from deduputil_spark.operators.shingle import shingles
 from deduputil_spark.operators.simhash import simhash_candidates, simhash_signatures
@@ -134,8 +138,9 @@ def test_pipeline_recall_and_collision_separation(spark, transcripts, corpus, sh
 def test_default_run_launches_no_extra_jobs(spark, transcripts):
     """The default (uncheckpointed) plan runs no count() jobs and writes no
     metrics: the pipeline plus one noop write of its clusters launches at
-    most 20 Spark jobs (measured 20 once verify joined the sign layer's
-    k-gram sets instead of re-tokenizing docs; 26 before)."""
+    most 18 Spark jobs (measured 18 once connected components decided its
+    path and fetched the driver path's edges in one bounded collect; 20
+    before, and 26 before verify joined the sign layer's k-gram sets)."""
     transcripts.count()  # the cached fixture materializes outside the group
     release_caches()  # earlier tests' tracked persists must not serve this run
     sc = spark.sparkContext
@@ -149,7 +154,7 @@ def test_default_run_launches_no_extra_jobs(spark, transcripts):
         release_caches()
     assert res.metrics == []
     n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert 0 < n_jobs <= 20, n_jobs
+    assert 0 < n_jobs <= 18, n_jobs
 
 
 def test_sign_layer_outputs_match_scalar_definitions(spark, docs):
@@ -206,6 +211,67 @@ def test_batch_kernels_match_single_doc_kernels(texts, k, num_perm):
         ref = doc_kgram_hashes(t, k)
         assert np.array_equal(keys[bounds[i] : bounds[i + 1]], ref)
         assert np.array_equal(sigs[i], oph_signature(np.sort(ref % MERSENNE_P), num_perm, edges))
+
+
+def _token_hashes_model(text: str | None) -> list[int]:
+    """Independent scalar model of the byte tokenizer: split the UTF-8 bytes
+    on the six ASCII whitespace bytes (`bytes.split`), fold each token's
+    first 32 bytes, then mix in its full length."""
+    out = []
+    for tok in (text or "").encode("utf-8", "surrogatepass").split():
+        h = 0
+        for b in tok[:32]:
+            h = (h * 31 + b) % KGRAM_P
+        out.append((h * 31 + len(tok)) % KGRAM_P)
+    return out
+
+
+_WS = " \t\n\r\x0b\x0c"
+# U+00A0 and U+3000 are token bytes here (the documented divergence from
+# str.split); NUL, 2-byte é and 3-byte CJK exercise the byte fold
+_TOKEN_CHARS = "ab\x00é中文\u00a0\u3000"
+_doc = st.one_of(
+    st.text(alphabet=_WS + _TOKEN_CHARS, max_size=60),
+    # long tokens: up to 50 chars of up to 3 bytes, far past the 32-byte fold cap
+    st.lists(st.tuples(st.text(_WS, max_size=3), st.text(_TOKEN_CHARS, min_size=1, max_size=50)), max_size=6)
+    .map(lambda parts: "".join(sep + tok for sep, tok in parts)),
+)
+
+
+def _assert_matches_model(texts, h, offsets):
+    assert len(offsets) == len(texts) + 1
+    for i, t in enumerate(texts):
+        assert h[offsets[i] : offsets[i + 1]].tolist() == _token_hashes_model(t), t
+
+
+@settings(max_examples=200, deadline=None)
+@given(texts=st.lists(_doc, max_size=10))
+def test_token_hashes_from_buffer_match_scalar_model(texts):
+    """Spark-free: the vectorized tokenizer over a back-to-back UTF-8 buffer
+    equals the scalar model doc by doc (empty and whitespace-only docs, NUL,
+    U+00A0, CJK, tokens longer than 32 bytes)."""
+    enc = [t.encode("utf-8", "surrogatepass") for t in texts]
+    bounds = np.concatenate(([0], np.cumsum([len(e) for e in enc], dtype=np.int64)))
+    _assert_matches_model(texts, *token_hashes_from_buffer(np.frombuffer(b"".join(enc), dtype=np.uint8), bounds))
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    before=st.lists(_doc, max_size=3),
+    texts=st.lists(st.one_of(_doc, st.none()), max_size=10),
+    after=st.lists(_doc, max_size=3),
+    large=st.booleans(),
+)
+def test_arrow_token_hashes_match_scalar_model(before, texts, after, large):
+    """Spark-free: `arrow_token_hashes` on a sliced Arrow string array (a
+    non-zero offset whenever `before` is non-empty; nulls are empty docs)
+    takes the zero-copy buffer path and equals the scalar model."""
+    import pyarrow as pa
+
+    arr = pa.array(before + texts + after, type=pa.large_string() if large else pa.string())
+    arr = arr.slice(len(before), len(texts))
+    assert utf8_buffer_view(arr) is not None
+    _assert_matches_model(texts, *arrow_token_hashes(arr))
 
 
 @pytest.mark.parametrize("driver_threshold", [2_000_000, 0])  # driver + distributed paths
