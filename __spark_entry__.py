@@ -257,11 +257,15 @@ def q_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Jaccard verify on LSH candidates — integer-exact (inter, union).
 
     NOT persisted deliberately: sh's three uses (sizes + both join sides) are
-    identical canonical subtrees, so Catalyst's ReuseExchange already computes
-    the distinct-shingle exchange once — an explicit persist was measured
-    SLOWER (adds a columnar-cache write and bypasses exchange reuse:
-    ~6 s → ~10 s at sf0.1)."""
-    sh = _doc_shingles(spark, sf_dir)
+    identical canonical subtrees, so Catalyst's ReuseExchange computes the
+    distinct-shingle exchange once — an explicit persist was measured SLOWER
+    (adds a columnar-cache write and bypasses exchange reuse: ~6 s → ~10 s at
+    sf0.1).  The explicit null filter is what keeps the three subtrees equal:
+    without it the optimizer infers `isnotnull(shingle)` on the two join sides
+    only, and the sizes side shuffles the shingles a second time.  It cannot
+    change a row: a null shingle comes only from a null text, that doc has no
+    other shingle, and a null never matches in the shingle join anyway."""
+    sh = _doc_shingles(spark, sf_dir).filter(F.col("shingle").isNotNull())
     pairs = q_lsh_candidates(spark, sf_dir)
     sizes = sh.groupBy("conv_id").agg(F.count(F.lit(1)).alias("n"))
     sa = sh.select(F.col("conv_id").alias("doc_a"), "shingle")
@@ -473,25 +477,11 @@ WHERE i.inter * 10 >= s.na * 8
 
 def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Word 3-gram Jaccard near-dup pairs (direct, non-LSH) — integer-exact."""
-    from deduputil_spark.operators.shingle import shingles
+    from deduputil_spark.operators.textstats import ngram_jaccard_pairs
 
     docs = _docs(spark, sf_dir).select(F.col("doc_id").cast("string").alias("conv_id"), F.col("text").alias("doc_text"))
-    sh = shingles(docs, NGRAM_N)
-    sizes = sh.groupBy("conv_id").agg(F.count(F.lit(1)).alias("n"))
-    a = sh.select(F.col("conv_id").alias("doc_a"), "shingle")
-    b = sh.select(F.col("conv_id").alias("doc_b"), "shingle")
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    return (
-        inter.join(sizes.select(F.col("conv_id").alias("doc_a"), F.col("n").alias("na")), "doc_a")
-        .join(sizes.select(F.col("conv_id").alias("doc_b"), F.col("n").alias("nb")), "doc_b")
-        .select("doc_a", "doc_b", "inter", (F.col("na") + F.col("nb") - F.col("inter")).alias("uni"))
-        .filter(F.col("inter") * 2 >= F.col("uni"))  # jaccard >= 0.5
-    )
+    pairs = ngram_jaccard_pairs(docs, NGRAM_N)
+    return pairs.filter(F.col("inter") * 2 >= F.col("uni"))  # jaccard >= 0.5
 
 
 SQL_NGRAM_JACCARD = f"""

@@ -14,7 +14,7 @@ from __future__ import annotations
 
 import hashlib
 import json
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass
 
 
 @dataclass(frozen=True)
@@ -35,7 +35,6 @@ class DedupConfig:
     num_perm: int = 128             # MinHash permutations
     lsh_bands: int = 32             # bands
     lsh_rows: int = 4               # rows per band (bands*rows == num_perm)
-    simhash_bits: int = 64
 
     # --- verify / cluster ---
     jaccard_threshold: float = 0.7
@@ -75,5 +74,3 @@ class DedupConfig:
         payload = json.dumps(asdict(self), sort_keys=True).encode()
         return hashlib.sha256(payload).hexdigest()[:12]
 
-
-DEFAULT_CONFIG = DedupConfig()

@@ -46,10 +46,6 @@ def _norm(a):
     )
 
 
-def with_norm(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    return emb.withColumn("_norm", _norm(F.col(vec_col)))
-
-
 def srp_planes(n_planes: int, dim: int, seed: int) -> np.ndarray:
     """Deterministic hyperplane matrix (n_planes × dim) for SRP bucketing.
     Shared by the Spark operators and the SQL-oracle generator so both engines
@@ -61,17 +57,6 @@ def srp_planes(n_planes: int, dim: int, seed: int) -> np.ndarray:
 def table_seed(seed: int, table: int) -> int:
     """Per-table plane seed (stable scheme shared with the SQL oracle)."""
     return seed + 7919 * table
-
-
-def _srp_bucket_col(vec_col: str, planes: np.ndarray):
-    """Bucket id column: plane 0 is the most significant bit (JVM fold form,
-    kept for `srp_signatures` API compatibility and as the semantics spec)."""
-    bucket = None
-    for row in planes:
-        lit_plane = F.array(*[F.lit(float(x)) for x in row])
-        bit = (_dot(F.col(vec_col), lit_plane) >= 0).cast("long")
-        bucket = bit if bucket is None else bucket * 2 + bit
-    return bucket
 
 
 def _srp_multi_buckets(
@@ -89,9 +74,10 @@ def _srp_multi_buckets(
 
     This is the scale form of the signature step: one narrow map over the
     corpus instead of n_tables×n_planes chained fold expressions in codegen.
-    Bit semantics match `_srp_bucket_col` exactly (sign of the double dot;
-    the summation-order difference is ~1e-12 against dot magnitudes ≥1e-5 on
-    any non-degenerate data, and oracle parity tests pin it)."""
+    Bit semantics: bit = sign of the double dot, plane 0 the most
+    significant bit, exactly as the SQL oracle folds it (the summation-order
+    difference is ~1e-12 against dot magnitudes ≥1e-5 on any non-degenerate
+    data, and oracle parity tests pin it)."""
     import pandas as pd
 
     all_planes = np.vstack(
@@ -155,19 +141,6 @@ def cosine_topk(
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "cos", "rank")
     )
-
-
-def srp_signatures(
-    emb: DataFrame,
-    n_planes: int = 16,
-    seed: int = 7,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-) -> DataFrame:
-    """Sign-random-projection bucket id per vector (one n_planes-bit bucket)."""
-    bucket = _srp_bucket_col(vec_col, srp_planes(n_planes, dim, seed))
-    return emb.select(F.col(id_col), F.col(vec_col), bucket.alias("srp_bucket"))
 
 
 def lsh_bucketed_topk(

@@ -3,7 +3,7 @@
 Two paths:
 
 - `chunk_documents` — the real thing: byte-exact FSP/CDC chunking via
-  `mapInPandas` with the golden-validated numpy cut walk
+  `mapInArrow` with the golden-validated numpy cut walk
   (deduputil_spark.functions.hashes; validated cut-for-cut against the
   compiled reference binary — /root/reference/src/dedup.c:402-546,716-764).
   Emits BinaryType chunks (the reference chunks bytes, and UTF-8 slicing at
@@ -23,10 +23,8 @@ shuffle; Arrow batch size bounds UDF memory.  Chunk rows carry
 
 from __future__ import annotations
 
-import hashlib
 import zlib
 from collections.abc import Iterator
-from typing import TYPE_CHECKING
 
 import numpy as np
 import pandas as pd
@@ -36,9 +34,6 @@ from pyspark.sql import types as T
 
 from deduputil_spark.config import DedupConfig
 from deduputil_spark.functions.hashes import cdc_cuts_fast, fsp_cuts, sb_spans
-
-if TYPE_CHECKING:
-    pass
 
 CHUNK_SCHEMA = T.StructType(
     [
@@ -63,6 +58,8 @@ def _adler32_np(data: bytes) -> int:
 
 
 def _chunk_one(cid: str, data: bytes, cfg: DedupConfig) -> Iterator[tuple]:
+    """One document's CHUNK_SCHEMA rows by the readable scalar walk: the
+    reference `_batch_chunk_walk` is tested against, chunk for chunk."""
     if cfg.chunk_algo == "fsp":
         cuts = fsp_cuts(len(data), cfg.block_size)
     elif cfg.chunk_algo == "sb":
@@ -95,25 +92,6 @@ def _chunk_one(cid: str, data: bytes, cfg: DedupConfig) -> Iterator[tuple]:
     # the tail row is ALWAYS emitted (possibly empty) so reconstruction and
     # per-doc accounting never lose a document with zero chunks
     yield (cid, idx, tail, len(tail), _adler32_np(tail), True)
-
-
-def make_chunker(cfg: DedupConfig, text_col: str = "doc_text"):
-    """mapInPandas function: docs(conv_id, doc_text, ...) -> CHUNK_SCHEMA rows.
-
-    Kept as the readable scalar-walk form (tests diff it against the Arrow
-    path); production `chunk_documents` uses `make_arrow_chunker`."""
-
-    def chunker(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[tuple] = []
-            for cid, text in zip(pdf["conv_id"], pdf[text_col]):
-                data = text.encode("utf-8") if isinstance(text, str) else bytes(text)
-                rows.extend(_chunk_one(cid, data, cfg))
-            yield pd.DataFrame(
-                rows, columns=["conv_id", "chunk_idx", "chunk_bytes", "chunk_len", "weak32", "is_tail"]
-            )
-
-    return chunker
 
 
 def _batch_chunk_walk(
@@ -328,20 +306,6 @@ def chunk_fsp_sql(docs: DataFrame, block_size: int = 4096) -> DataFrame:
     return full.unionByName(tail).withColumn("md5", F.md5(F.col("chunk_text")))
 
 
-def reference_chunk_counts(texts: list[str], cfg: DedupConfig) -> dict[str, int]:
-    """Driver-side oracle helper for tests: chunk counts via the pure walk."""
-    out = {}
-    for i, t in enumerate(texts):
-        data = t.encode("utf-8")
-        if cfg.chunk_algo == "fsp":
-            out[str(i)] = len(fsp_cuts(len(data), cfg.block_size))
-        else:
-            out[str(i)] = len(cdc_cuts_fast(data, cfg.block_size, cfg.block_min_size,
-                                            cfg.block_max_size, cfg.block_win_size,
-                                            cfg.cdc_r, cfg.cut_hash))
-    return out
-
-
 def compress_chunk_blocks(chunks: DataFrame, level: int = 6) -> DataFrame:
     """F4 full `-z` semantics: zlib each NON-TAIL chunk and REKEY the store on
     the compressed bytes — md5(zlib(chunk)), chunk_len = compressed length —
@@ -358,7 +322,6 @@ def compress_chunk_blocks(chunks: DataFrame, level: int = 6) -> DataFrame:
 
     SCALE: per-block Python (Arrow-batched pandas UDF) on the chunk map side —
     narrow, no extra shuffle; the md5/length rekey stays JVM-side."""
-    import pandas as pd
 
     @F.pandas_udf("binary")
     def _zc(s: pd.Series) -> pd.Series:
@@ -386,7 +349,3 @@ def zlib_block(data: bytes, level: int = 6) -> bytes:
     binary-built `-z` package in tests/test_cut_hash_golden.py)."""
     return zlib.compress(data, level)
 
-
-def md5_hex(data: bytes) -> str:
-    """Python-side MD5 (matches Spark F.md5 and the reference md5_2_str)."""
-    return hashlib.md5(data).hexdigest()

@@ -159,6 +159,3 @@ def _driver_union_find(spark: SparkSession, edges: pd.DataFrame, all_vertices: D
         )
     return labels
 
-
-def cluster_sizes(labels: DataFrame) -> DataFrame:
-    return labels.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("size"))

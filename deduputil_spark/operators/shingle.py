@@ -45,19 +45,3 @@ def shingles(docs: DataFrame, k: int = 5, text_col: str = "doc_text", distinct: 
     )
     return out.distinct() if distinct else out
 
-
-def shingles_sql(table: str, k: int = 5, text_col: str = "doc_text", id_col: str = "conv_id") -> str:
-    """DuckDB-equivalent SQL for `shingles` (oracle builder)."""
-    return f"""
-    SELECT DISTINCT {id_col} AS conv_id,
-      CASE WHEN len(toks) >= {k}
-           THEN array_to_string(toks[i+1 : i+{k}], ' ')
-           ELSE array_to_string(toks, ' ') END AS shingle
-    FROM (
-      SELECT {id_col}, regexp_split_to_array(trim({text_col}), '\\s+') AS toks FROM {table}
-    ), LATERAL (
-      SELECT unnest(CASE WHEN len(toks) >= {k}
-                         THEN range(0, len(toks) - {k} + 1)
-                         ELSE [0] END) AS i
-    )
-    """

@@ -1,13 +1,15 @@
 """Text-analysis operators for training-data pipelines (driver-graded extras):
-language-ID heuristic, quality scoring, token counting, document
-fingerprinting.  All pure Spark SQL expressions (JVM/codegen; no UDFs) and all
-expressible 1:1 in DuckDB for exact oracles.
+language-ID heuristic, document fingerprinting, word n-gram Jaccard pairs.
+All pure Spark SQL expressions (JVM/codegen; no UDFs) and all expressible
+1:1 in DuckDB for exact oracles.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from deduputil_spark.operators.shingle import shingles
 
 # tiny high-frequency stopword lists per language (heuristic language ID)
 _LANG_STOPWORDS = {
@@ -23,40 +25,6 @@ def _stopword_hits(text_col: str, words: list[str]):
     arr = ", ".join(f"'{w}'" for w in words)
     return F.expr(
         f"size(filter(split(lower(trim({text_col})), '\\\\s+'), t -> array_contains(array({arr}), t)))"
-    )
-
-
-def token_stats(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Token count, char count, avg token length, punctuation ratio,
-    stopword ratio — the quality-scoring feature row."""
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-    n_tok = F.size(toks)
-    return docs.select(
-        F.col(id_col),
-        n_tok.cast("int").alias("n_tokens"),
-        F.length(text_col).cast("int").alias("n_chars_calc"),
-        F.round(F.length(text_col) / n_tok, 4).alias("avg_token_len"),
-        F.round(
-            (F.length(text_col) - F.length(F.regexp_replace(F.col(text_col), r"[^\w\s]", "")))
-            / F.length(text_col),
-            4,
-        ).alias("punct_ratio"),
-        F.round(_stopword_hits(text_col, _LANG_STOPWORDS["en"]) / n_tok, 4).alias("stopword_ratio_en"),
-    )
-
-
-def quality_score(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Composite 0-1 quality score: length band + stopword presence − punct
-    excess (the standard cheap pre-filter for web corpora)."""
-    st = token_stats(docs, id_col, text_col)
-    return st.select(
-        id_col,
-        F.round(
-            F.when(F.col("n_tokens") >= 20, 0.4).otherwise(F.col("n_tokens") / 50.0)
-            + F.least(F.col("stopword_ratio_en") * 3.0, F.lit(0.4))
-            + F.greatest(F.lit(0.2) - F.col("punct_ratio"), F.lit(0.0)),
-            4,
-        ).alias("quality"),
     )
 
 
@@ -90,16 +58,12 @@ def doc_fingerprint(docs: DataFrame, id_col: str = "doc_id", text_col: str = "te
     return docs.select(F.col(id_col), F.array_min(grams).alias("fingerprint"))
 
 
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    n: int = 3,
-    threshold: float = 0.5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_df: int = 50_000,
-) -> DataFrame:
-    """Word n-gram Jaccard near-dup pairs — the direct (non-LSH) dedup path
-    for small-to-medium corpora; fully relational.
+def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, max_df: int = 50_000) -> DataFrame:
+    """docs(conv_id, doc_text) -> (doc_a, doc_b, inter, uni) — INTEGER
+    components of word n-gram Jaccard = inter / uni for every pair (doc_a <
+    doc_b) sharing an n-gram: the direct (non-LSH) dedup path for
+    small-to-medium corpora, fully relational.  Callers cut on the integers
+    (`inter * 2 >= uni` is Jaccard ≥ 0.5, exactly).
 
     Hot-shingle cap (same pattern as substring.containment_components /
     lsh.py bucket caps): a shingle present in > max_df documents generates
@@ -108,40 +72,20 @@ def ngram_jaccard_pairs(
     stays exact over that universe, and when nothing exceeds the cap (any
     sane cap at oracle sf) the result is bit-identical to the uncapped form.
     """
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
-    sh = (
-        docs.select(
-            F.col(id_col).alias("doc"),
-            F.explode(
-                F.when(
-                    F.size(toks) >= n,
-                    F.transform(
-                        F.sequence(F.lit(0), F.size(toks) - n),
-                        lambda i: F.array_join(F.slice(toks, i + 1, n), " "),
-                    ),
-                ).otherwise(F.array(F.array_join(toks, " ")))
-            ).alias("g"),
-        )
-        .distinct()
-    )
-    hot = sh.groupBy("g").agg(F.count(F.lit(1)).alias("df")).filter(F.col("df") > max_df)
-    sh = sh.join(hot.select("g"), "g", "left_anti")
-    sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("nsz"))
-    a = sh.select(F.col("doc").alias("doc_a"), "g")
-    b = sh.select(F.col("doc").alias("doc_b"), "g")
+    sh = shingles(docs, n)
+    hot = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df")).filter(F.col("df") > max_df)
+    sh = sh.join(hot.select("shingle"), "shingle", "left_anti")
+    sizes = sh.groupBy("conv_id").agg(F.count(F.lit(1)).alias("n"))
+    a = sh.select(F.col("conv_id").alias("doc_a"), "shingle")
+    b = sh.select(F.col("conv_id").alias("doc_b"), "shingle")
     inter = (
-        a.join(b, "g")
+        a.join(b, "shingle")
         .filter(F.col("doc_a") < F.col("doc_b"))
         .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("i"))
+        .agg(F.count(F.lit(1)).alias("inter"))
     )
     return (
-        inter.join(sizes.select(F.col("doc").alias("doc_a"), F.col("nsz").alias("na")), "doc_a")
-        .join(sizes.select(F.col("doc").alias("doc_b"), F.col("nsz").alias("nb")), "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(F.col("i") / (F.col("na") + F.col("nb") - F.col("i")), 6).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
+        inter.join(sizes.select(F.col("conv_id").alias("doc_a"), F.col("n").alias("na")), "doc_a")
+        .join(sizes.select(F.col("conv_id").alias("doc_b"), F.col("n").alias("nb")), "doc_b")
+        .select("doc_a", "doc_b", "inter", (F.col("na") + F.col("nb") - F.col("inter")).alias("uni"))
     )

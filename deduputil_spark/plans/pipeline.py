@@ -66,8 +66,7 @@ class Runner:
     """Checkpoint-aware stage runner.  Without a checkpoint dir a stage is
     only persisted (tracked, cache.py) and metered not at all."""
 
-    def __init__(self, spark: SparkSession, cfg, checkpoint_dir: str | None):
-        # cfg is duck-typed: anything with config_hash() (DedupConfig, _SuffixCfg)
+    def __init__(self, spark: SparkSession, cfg: DedupConfig, checkpoint_dir: str | None):
         self.spark = spark
         self.cfg = cfg
         self.dir = checkpoint_dir
@@ -168,54 +167,6 @@ def run_pipeline(
 # perfbench/workloads.py (the frozen benchmark) still imports the old name of
 # the default plan; it is the same function.
 run_pipeline_lean = run_pipeline
-
-
-@dataclass
-class ExactSubstringResult:
-    clean_docs: DataFrame
-    spans: DataFrame
-    metrics: list[StageMetric] = field(default_factory=list)
-
-
-class _SuffixCfg:
-    """Duck-typed config for Runner: hashes the exact-substring knobs so a
-    checkpoint from a different (L, method) is never read back."""
-
-    def __init__(self, L: int, method: str):
-        self.L, self.method = int(L), method
-
-    def config_hash(self) -> str:
-        import hashlib
-
-        return hashlib.md5(f"suffix:{self.L}:{self.method}".encode()).hexdigest()[:12]
-
-
-def run_exact_substring(
-    spark: SparkSession,
-    docs: DataFrame,
-    L: int = 20,
-    method: str = "rolling",
-    checkpoint_dir: str | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> ExactSubstringResult:
-    """The exact-substring dedup plan (Lee et al. ExactSubstr): corpus-wide
-    duplicated spans → cleaned corpus, as two stages with the same
-    Runner/checkpoint semantics as `run_pipeline`: with `checkpoint_dir` they
-    are metered and resumable (kill after the spans stage, rerun, and the
-    spans table is read back, not recomputed), without it only persisted.
-    `method="rolling"` is the scale path (8 bytes/position on the wire,
-    exact gram re-verification)."""
-    from deduputil_spark.operators.suffixarray import duplicated_spans, strip_duplicated_spans
-
-    r = Runner(spark, _SuffixCfg(L, method), checkpoint_dir)
-    spans = r.run("suffix_spans", lambda: duplicated_spans(docs, L, method, id_col, text_col))
-    clean = r.run(
-        "suffix_strip",
-        lambda: strip_duplicated_spans(docs, L, method, id_col, text_col, spans=spans),
-    )
-    r.dump_metrics()
-    return ExactSubstringResult(clean_docs=clean, spans=spans, metrics=r.metrics)
 
 
 def pair_recall(verified_or_clusters: DataFrame, truth_pairs: DataFrame, via_clusters: bool = True) -> float:

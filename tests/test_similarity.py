@@ -35,7 +35,6 @@ from deduputil_spark.operators.minhash import (
     utf8_buffer_view,
 )
 from deduputil_spark.operators.shingle import shingles
-from deduputil_spark.operators.simhash import simhash_candidates, simhash_signatures
 from deduputil_spark.operators.substring import containment_candidates, verify_substring
 from deduputil_spark.operators.verify import jaccard_verify_docs, jaccard_verify_sets
 from deduputil_spark.plans.pipeline import pair_recall, run_pipeline
@@ -362,16 +361,6 @@ def test_skew_report_sees_hot_boilerplate(spark, docs, shingle_df):
     assert rep["max_bucket"] >= 1
 
 
-def test_simhash_finds_exact_dups(spark, docs, corpus):
-    sigs = simhash_signatures(docs).cache()
-    cands = simhash_candidates(sigs, bands=4, max_hamming=3)
-    got = {(r["conv_a"], r["conv_b"]) for r in cands.collect()}
-    truth = corpus.truth_pairs
-    exact = truth[truth["kind"] == "exact"]
-    for _, row in exact.iterrows():
-        assert (row["conv_a"], row["conv_b"]) in got, row.tolist()
-
-
 def test_substring_pass(spark, docs, corpus):
     cands = containment_candidates(docs, w=8, threshold=0.9)
     ver = verify_substring(cands, docs).filter(F.col("is_substring"))
@@ -457,25 +446,28 @@ def test_ngram_jaccard_hot_shingle_cap(spark):
     pair the whole corpus; docs similar beyond the boilerplate still pair."""
     from deduputil_spark.operators.textstats import ngram_jaccard_pairs
 
+    def pairs(docs, max_df):  # Jaccard >= 0.01, integer-exact
+        return ngram_jaccard_pairs(docs, n=3, max_df=max_df).filter(F.col("inter") * 100 >= F.col("uni"))
+
     boiler = "standard legal disclaimer footer"
     rows = [("near_a", f"alpha beta gamma delta epsilon zeta {boiler}"),
             ("near_b", f"alpha beta gamma delta epsilon eta {boiler}")]
     rows += [(f"uniq_{i}", f"w{i}a w{i}b w{i}c w{i}d w{i}e {boiler}") for i in range(40)]
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
+    docs = spark.createDataFrame(rows, ["conv_id", "doc_text"])
 
     # uncapped: the boilerplate 3-grams pair every doc with every other
-    uncapped = ngram_jaccard_pairs(docs, n=3, threshold=0.01, max_df=10**6)
+    uncapped = pairs(docs, max_df=10**6)
     assert uncapped.count() > 40 * 41 / 2  # quadratic blowup present
 
-    capped = ngram_jaccard_pairs(docs, n=3, threshold=0.01, max_df=5)
+    capped = pairs(docs, max_df=5)
     got = {(r.doc_a, r.doc_b) for r in capped.collect()}
     assert ("near_a", "near_b") in got          # real near-dups survive
     assert all("uniq_" not in a or "uniq_" not in b for a, b in got)  # boilerplate-only pairs gone
 
     # below-cap corpora are bit-identical to the uncapped form
-    small = docs.filter(F.col("doc_id").isin("near_a", "near_b"))
-    a = sorted(map(tuple, ngram_jaccard_pairs(small, 3, 0.01, max_df=10**6).collect()))
-    b = sorted(map(tuple, ngram_jaccard_pairs(small, 3, 0.01, max_df=50).collect()))
+    small = docs.filter(F.col("conv_id").isin("near_a", "near_b"))
+    a = sorted(map(tuple, pairs(small, max_df=10**6).collect()))
+    b = sorted(map(tuple, pairs(small, max_df=50).collect()))
     assert a == b
 
 

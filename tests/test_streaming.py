@@ -113,67 +113,3 @@ def test_streaming_exact_dedup_plan(spark, transcripts):
         got = spark.read.parquet(out)
         assert got.count() == 2  # one of the two "same text" turns suppressed
 
-
-def test_stateful_streaming_sessionization_matches_batch(spark, tmp_path):
-    """applyInPandasWithState sessionization: closed sessions from the stream
-    equal the batch gap-rule sessions (a far-future flush tick per user closes
-    every real session; the tick's own singleton session stays open)."""
-    import datetime as dt
-
-    import pandas as pd
-
-    from deduputil_spark.streaming.sessionize import sessionize_stream
-
-    gap_s = 600
-    base = dt.datetime(2026, 1, 1, 0, 0, 0)
-    rows = []
-    # u1: 3 sessions (gaps 2h); u2: 1 session of 5 events; u3: 2 singletons
-    for k in range(3):
-        for j in range(4):
-            rows.append(("u1", base + dt.timedelta(hours=2 * k, minutes=j)))
-    for j in range(5):
-        rows.append(("u2", base + dt.timedelta(minutes=3 * j)))
-    rows.append(("u3", base))
-    rows.append(("u3", base + dt.timedelta(hours=5)))
-    flush = base + dt.timedelta(days=30)
-    for u in ("u1", "u2", "u3"):
-        rows.append((u, flush))
-    src = str(tmp_path / "events_src")
-    pd.DataFrame(rows, columns=["user_id", "ts"]).astype({"ts": "datetime64[us]"}).to_parquet(
-        src + ".parquet"
-    )
-    import os
-
-    os.makedirs(src, exist_ok=True)
-    os.rename(src + ".parquet", os.path.join(src, "part0.parquet"))
-
-    stream = spark.readStream.schema("user_id string, ts timestamp").parquet(src)
-    out = sessionize_stream(stream, gap_s=gap_s, watermark="0 seconds")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("sess_out")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r["user_id"], r["session_start"], r["session_end"], r["n_events"])
-        for r in spark.sql("SELECT * FROM sess_out").collect()
-    }
-    # batch oracle: gap rule over the same rows, dropping each user's open
-    # (flush-tick) session
-    want = set()
-    bydf = pd.DataFrame(rows, columns=["user_id", "ts"]).sort_values(["user_id", "ts"])
-    for u, grp in bydf.groupby("user_id"):
-        ts = list(grp["ts"])
-        start, last, n = ts[0], ts[0], 1
-        for t in ts[1:]:
-            if (t - last).total_seconds() > gap_s:
-                want.add((u, start, last, n))
-                start, last, n = t, t, 1
-            else:
-                last, n = t, n + 1
-        # open session (the flush tick) intentionally not emitted
-    assert got == want, (sorted(got), sorted(want))

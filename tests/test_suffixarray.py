@@ -185,24 +185,6 @@ def test_property_strip_matches_brute(spark, texts, L):
     assert got == exp, (texts, L)
 
 
-def test_run_exact_substring_resumable(spark, tmp_path, docs_df):
-    from deduputil_spark.plans.pipeline import run_exact_substring
-
-    ckpt = str(tmp_path / "suffix_ckpt")
-    res1 = run_exact_substring(spark, docs_df, L=3, checkpoint_dir=ckpt)
-    clean1 = {r.doc_id: r.clean_text for r in res1.clean_docs.collect()}
-    assert clean1 == brute_clean(DOCS, 3)
-    assert not any(m.resumed for m in res1.metrics)
-    # second run: both stages read back from checkpoint, identical output
-    res2 = run_exact_substring(spark, docs_df, L=3, checkpoint_dir=ckpt)
-    assert all(m.resumed for m in res2.metrics)
-    assert {r.doc_id: r.clean_text for r in res2.clean_docs.collect()} == clean1
-    # different L hashes to different checkpoints -> fresh compute, no stale read
-    res3 = run_exact_substring(spark, docs_df, L=4, checkpoint_dir=ckpt)
-    assert not any(m.resumed for m in res3.metrics)
-    assert {r.doc_id: r.clean_text for r in res3.clean_docs.collect()} == brute_clean(DOCS, 4)
-
-
 def test_all_unique_corpus_empty(spark):
     df = spark.createDataFrame(
         [(1, "abcdefgh"), (2, "ijklmnop")], "doc_id int, text string"
