@@ -807,7 +807,7 @@ def q_hash_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reference hashtest harness (bucket usage / max chain / collisions)."""
     from deduputil_spark.operators.hashtest import hash_quality_report
 
-    return hash_quality_report(_docs(spark, sf_dir), "text", HASHQ_BUCKETS, "md5")
+    return hash_quality_report(_docs(spark, sf_dir), "text", HASHQ_BUCKETS)
 
 
 SQL_HASH_QUALITY = f"""

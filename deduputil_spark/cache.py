@@ -11,42 +11,35 @@ Unreleased entries are harmless in a short job (executor storage is reclaimed
 at shutdown) but accumulate across a many-query session; `release_caches()`
 bounds that to the live query's working set.
 
-Tracking is keyed per SparkSession and guarded by a lock (ADVICE r3): a
-threaded driver releasing one session's working set can neither race the list
-mutation nor unpersist frames a concurrently-building query in ANOTHER session
-still relies on.  (Within one session, callers serialize release against their
-own in-flight builds — the same contract as before.)
+Every caller releases everything tracked, so tracking is one list guarded by
+a lock (ADVICE r3): threads that track and release concurrently cannot race
+the list mutation.  Callers serialize release against their own in-flight
+builds.
 """
 
 from __future__ import annotations
 
 import threading
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 _LOCK = threading.Lock()
-_TRACKED: dict[int, list[DataFrame]] = {}  # id(SparkSession) -> persisted frames
+_TRACKED: list[DataFrame] = []  # persisted frames, in registration order
 
 
 def track(df: DataFrame) -> DataFrame:
     """Persist `df` and register it for the next `release_caches()`."""
     df.persist()
     with _LOCK:
-        _TRACKED.setdefault(id(df.sparkSession), []).append(df)
+        _TRACKED.append(df)
     return df
 
 
-def release_caches(session: SparkSession | None = None) -> int:
-    """Unpersist tracked frames; returns how many were released.
-
-    With `session`, only that session's frames are released; default releases
-    everything (the single-session common case)."""
+def release_caches() -> int:
+    """Unpersist every tracked frame; returns how many were released."""
     with _LOCK:
-        if session is None:
-            frames = [f for lst in _TRACKED.values() for f in lst]
-            _TRACKED.clear()
-        else:
-            frames = _TRACKED.pop(id(session), [])
+        frames = _TRACKED[:]
+        _TRACKED.clear()
     n = 0
     for df in reversed(frames):
         try:

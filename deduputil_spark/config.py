@@ -1,10 +1,16 @@
 """Pipeline configuration.
 
-Mirrors the reference's compiled-in constants (/root/reference/src/dedup.h:48-54,
-111-112): BLOCK_SIZE 4096, BLOCK_MIN_SIZE 512, BLOCK_MAX_SIZE 32768,
-BLOCK_WIN_SIZE 48, CHUNK_CDC_D == block_size, CHUNK_CDC_R 13 — plus the
-similarity-stage knobs (shingle k, MinHash permutations, LSH bands×rows) that
-the north rule requires to be frozen per run ("same shingle/signature config").
+Mirrors the reference's settings (reference src/dedup.h:48-54):
+BLOCK_SIZE 4096 (its -b flag; CHUNK_CDC_D == block_size), BLOCK_MIN_SIZE 512,
+BLOCK_MAX_SIZE 32768, and the -C, -f and -z flags — plus the similarity-stage
+knobs (shingle k, MinHash permutations, LSH bands×rows) that the north rule
+requires to be frozen per run ("same shingle/signature config").  The
+reference compiles its CDC window (BLOCK_WIN_SIZE 48) and cut residue
+(CHUNK_CDC_R 13) in as constants (dedup.h:51,112); so does this package:
+`hashes.BLOCK_WIN` and `hashes.CDC_R`.
+
+tests/test_surface.py fails on a field that the package does not read or
+that no caller sets, outside a short allowlist with reasons.
 
 The config hash is stamped into every checkpoint + metrics row so a resumed
 run refuses to mix incompatible stage outputs.
@@ -23,8 +29,6 @@ class DedupConfig:
     block_size: int = 4096          # FSP block + CDC expected size / divisor D
     block_min_size: int = 512       # CDC lower bound (/root/reference/src/dedup.c:460)
     block_max_size: int = 32768     # CDC forced cut (/root/reference/src/dedup.c:490)
-    block_win_size: int = 48        # CDC rolling window (/root/reference/src/dedup.h:51)
-    cdc_r: int = 13                 # cut when hash(win) % D == r (/root/reference/src/dedup.h:112)
     chunk_algo: str = "cdc"         # "fsp" | "cdc" | "sb"  (reference -C flag)
     cut_hash: str = "adler"         # reference -f flag; adler = default rolling hash.
     # full CDC_CHUNK_HASHFUNC family (/root/reference/src/dedup.c:73-115):
@@ -44,11 +48,9 @@ class DedupConfig:
     # dedup key is md5(zlib(chunk)) — /root/reference/src/dedup.c:462-473) ---
     compress_blocks: bool = False
 
-    # --- scale knobs ---
-    shuffle_partitions: int = 32
-    salt_buckets: int = 8           # salting factor for hot LSH band keys
-    hot_bucket_cap: int = 2000      # per-bucket pair-generation cap (logged when hit)
-    max_pair_degree: int | None = None  # per-doc candidate-degree cap (lsh.cap_pair_degree); None = off
+    # --- scale knobs (shuffle partitions come from session.get_spark) ---
+    hot_bucket_cap: int = 2000      # LSH buckets above this salt into ceil(size/cap) sub-buckets
+    max_pair_degree: int | None = None  # per-doc candidate-degree cap run_pipeline applies; None = off
 
     def __post_init__(self) -> None:
         if self.lsh_bands * self.lsh_rows != self.num_perm:

@@ -23,14 +23,16 @@ Two implementations of the CDC cut walk live here:
   fresh/rolling distinction telescopes away — and since block_size (4096)
   divides 2^16, `hkey % 4096 == (s1 mod 4096)`.  The cut-candidate mask is
   therefore a sliding-window sum, computable for ALL positions at once; only
-  the min/max/skip walk is sequential and it is O(number of cuts).
+  the min/max/skip walk is sequential and it is O(number of cuts).  That walk
+  is `cdc_walk`, which the chunk operator's batch walk calls too.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-BLOCK_WIN = 48
+BLOCK_WIN = 48  # CDC rolling window (reference src/dedup.h:51)
+CDC_R = 13  # CDC cut residue: cut when hash(window) % block_size == CDC_R (dedup.h:112)
 U32 = 0xFFFFFFFF
 
 
@@ -470,7 +472,7 @@ def cdc_cuts_ref(
     min_size: int = 512,
     max_size: int = 32768,
     win: int = BLOCK_WIN,
-    cdc_r: int = 13,
+    cdc_r: int = CDC_R,
     cut_hash: str = "adler",
 ) -> list[int]:
     """Byte-at-a-time transliteration of /root/reference/src/dedup.c:402-546
@@ -521,7 +523,7 @@ def cdc_cuts_fast(
     min_size: int = 512,
     max_size: int = 32768,
     win: int = BLOCK_WIN,
-    cdc_r: int = 13,
+    cdc_r: int = CDC_R,
     cut_hash: str = "adler",
 ) -> list[int]:
     """Vectorized CDC walk — identical cuts to `cdc_cuts_ref` (golden-tested).
@@ -555,8 +557,16 @@ def cdc_cuts_fast(
             for h in bad:
                 stop = data.find(b"\x00", h, h + win)
                 match[h] = scalar(data[h:stop]) % block_size == cdc_r
-    match_pos = np.flatnonzero(match)  # window head positions that would cut
+    return cdc_walk(np.flatnonzero(match), n, min_size, max_size, win)
+
+
+def cdc_walk(match_pos: np.ndarray, n: int, min_size: int, max_size: int, win: int = BLOCK_WIN) -> list[int]:
+    """The min/skip/max walk of `cdc_cuts_ref` over precomputed candidates:
+    `match_pos` holds, ascending, every window head whose hash meets the cut
+    condition in an `n`-byte input.  O(number of cuts) `searchsorted` probes;
+    returns the same block END offsets as `cdc_cuts_ref`."""
     cuts: list[int] = []
+    nm = len(match_pos)
     p = 0
     last_head = n - win  # last evaluable window head
     while True:
@@ -564,8 +574,8 @@ def cdc_cuts_fast(
         if h0 + win > n:
             break
         hi_cap = p + max_size - 1  # last head before forced max cut
-        j = np.searchsorted(match_pos, h0)
-        if j < len(match_pos) and match_pos[j] <= min(hi_cap, last_head):
+        j = int(np.searchsorted(match_pos, h0))
+        if j < nm and match_pos[j] <= min(hi_cap, last_head):
             cut = int(match_pos[j]) + win
         elif hi_cap <= last_head:
             cut = p + max_size  # every head evaluated, none matched

@@ -65,8 +65,6 @@ def _srp_multi_buckets(
     n_tables: int,
     seed: int,
     dim: int,
-    id_col: str,
-    vec_col: str,
     out_id: str,
 ) -> DataFrame:
     """All n_tables bucket ids per vector in ONE vectorized numpy pass
@@ -86,31 +84,29 @@ def _srp_multi_buckets(
     weights = np.tile(1 << np.arange(n_planes)[::-1], n_tables)
     table_idx = np.repeat(np.arange(n_tables), n_planes)
     cols = [out_id] + [f"b{t}" for t in range(n_tables)]
-    id_type = emb.schema[id_col].dataType.simpleString()
+    id_type = emb.schema["vec_id"].dataType.simpleString()
     schema = f"{out_id} {id_type}, " + ", ".join(f"b{t} long" for t in range(n_tables))
 
     def run(batches):
         for pdf in batches:
-            vecs = np.array(pdf[vec_col].tolist(), dtype=np.float64)
+            vecs = np.array(pdf["embedding"].tolist(), dtype=np.float64)
             if len(vecs) == 0:
                 yield pd.DataFrame(columns=cols)
                 continue
             bits = (vecs @ all_planes.T) >= 0  # (n, n_tables*n_planes)
             contrib = bits * weights
-            out = {out_id: pdf[id_col]}
+            out = {out_id: pdf["vec_id"]}
             for t in range(n_tables):
                 out[f"b{t}"] = contrib[:, table_idx == t].sum(axis=1).astype(np.int64)
             yield pd.DataFrame(out)
 
-    return emb.select(id_col, vec_col).mapInPandas(run, schema=schema)
+    return emb.select("vec_id", "embedding").mapInPandas(run, schema=schema)
 
 
 def cosine_topk(
     emb: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     max_rows: int | None = None,
 ) -> DataFrame:
     """queries × corpus brute force -> (query_id, neighbor_id, cos, rank).
@@ -121,9 +117,9 @@ def cosine_topk(
     scale by accident)."""
     emb = _guard_brute(emb, "cosine_topk", max_rows)
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
     ).withColumn("qn", _norm(F.col("qv")))
-    c = emb.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")).withColumn(
+    c = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv")).withColumn(
         "cn", _norm(F.col("cv"))
     )
     scored = (
@@ -150,8 +146,6 @@ def lsh_bucketed_topk(
     n_planes: int = 8,
     n_tables: int = 1,
     seed: int = 7,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int = 64,
 ) -> DataFrame:
     """ANN via multi-table SRP buckets: score only candidates sharing a bucket
@@ -164,8 +158,8 @@ def lsh_bucketed_topk(
     # join on the composite (table, bucket) key — posexplode replaces the
     # former per-table join loop (n_tables exchanges + persists) with a single
     # exchange; distinct dedups candidates that co-bucket in several tables
-    qsig = _srp_multi_buckets(queries, n_planes, n_tables, seed, dim, id_col, vec_col, "query_id")
-    nsig = _srp_multi_buckets(emb, n_planes, n_tables, seed, dim, id_col, vec_col, "neighbor_id")
+    qsig = _srp_multi_buckets(queries, n_planes, n_tables, seed, dim, "query_id")
+    nsig = _srp_multi_buckets(emb, n_planes, n_tables, seed, dim, "neighbor_id")
     tb = F.posexplode(F.array(*[F.col(f"b{t}") for t in range(n_tables)])).alias("t", "b")
     qlong = qsig.select("query_id", tb)
     nlong = nsig.select("neighbor_id", tb)
@@ -175,10 +169,10 @@ def lsh_bucketed_topk(
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")).withColumn(
+    q = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")).withColumn(
         "qn", _norm(F.col("qv"))
     )
-    c = emb.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")).withColumn(
+    c = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv")).withColumn(
         "cn", _norm(F.col("cv"))
     )
     scored = (
@@ -204,8 +198,6 @@ def srp_near_pairs(
     n_planes: int = 4,
     n_tables: int = 8,
     seed: int = 7,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int = 64,
 ) -> DataFrame:
     """Bucketed threshold near-pairs: candidates are generated ONLY within
@@ -217,7 +209,7 @@ def srp_near_pairs(
     # one vectorized signature pass over the corpus, one (table, bucket)
     # self-join: posexplode fuses the former per-table join loop (n_tables
     # exchanges behind a persist) into a single exchange
-    sig = _srp_multi_buckets(emb, n_planes, n_tables, seed, dim, id_col, vec_col, "_id")
+    sig = _srp_multi_buckets(emb, n_planes, n_tables, seed, dim, "_id")
     tb = F.posexplode(F.array(*[F.col(f"b{t}") for t in range(n_tables)])).alias("t", "b")
     a = sig.select(F.col("_id").alias("id_a"), tb)
     b = sig.select(F.col("_id").alias("id_b"), tb)
@@ -227,10 +219,10 @@ def srp_near_pairs(
         .select("id_a", "id_b")
         .distinct()
     )
-    va = emb.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va")).withColumn(
+    va = emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("va")).withColumn(
         "na", _norm(F.col("va"))
     )
-    vb = emb.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb")).withColumn(
+    vb = emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb")).withColumn(
         "nb", _norm(F.col("vb"))
     )
     return (
@@ -276,8 +268,6 @@ def _guard_brute(df: DataFrame, what: str, max_rows: int | None) -> DataFrame:
 def embedding_near_pairs(
     emb: DataFrame,
     threshold: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     max_rows: int | None = BRUTE_FORCE_MAX_ROWS,
 ) -> DataFrame:
     """All pairs above a cosine threshold — brute force O(N²).
@@ -285,10 +275,10 @@ def embedding_near_pairs(
     Kept as the small-scale oracle for `srp_near_pairs`; never the plan of
     record at corpus scale (hard-capped at `max_rows` input rows)."""
     emb = _guard_brute(emb, "embedding_near_pairs", max_rows)
-    a = emb.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va")).withColumn(
+    a = emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("va")).withColumn(
         "na", _norm(F.col("va"))
     )
-    b = emb.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb")).withColumn(
+    b = emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb")).withColumn(
         "nb", _norm(F.col("vb"))
     )
     return (

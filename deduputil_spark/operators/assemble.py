@@ -6,7 +6,7 @@ ordered by `turn_idx` joined with a separator.  One hash-aggregate shuffle,
 fully JVM-side (collect_list + array_sort of (turn_idx, text) structs —
 partial aggregation applies, so map-side combine happens before the exchange).
 
-Contract: `(conv_id, turn_idx)` is unique (input_hint) and `sep` must not
+Contract: `(conv_id, turn_idx)` is unique (input_hint) and `DOC_SEP` must not
 occur in turn text (the reconstruction round-trip re-splits on it; mirrors the
 reference keeping the raw tail so extraction is exact,
 /root/reference/src/dedup.c:842,851).
@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 DOC_SEP = "\n"
 
 
-def assemble_documents(transcripts: DataFrame, sep: str = DOC_SEP) -> DataFrame:
+def assemble_documents(transcripts: DataFrame) -> DataFrame:
     """transcripts(conv_id, turn_idx, role, text, tool, ts) ->
     docs(conv_id, doc_text, n_turns, n_chars).
 
@@ -32,7 +32,7 @@ def assemble_documents(transcripts: DataFrame, sep: str = DOC_SEP) -> DataFrame:
         transcripts.groupBy("conv_id")
         .agg(
             F.concat_ws(
-                sep,
+                DOC_SEP,
                 F.transform(F.array_sort(F.collect_list(turn_struct)), lambda s: s["text"]),
             ).alias("doc_text"),
             F.count(F.lit(1)).alias("n_turns"),
@@ -65,8 +65,8 @@ def turn_metadata(transcripts: DataFrame) -> DataFrame:
     )
 
 
-def validate_assembly(transcripts: DataFrame, sep: str = DOC_SEP) -> None:
+def validate_assembly(transcripts: DataFrame) -> None:
     """Fail fast if a turn contains the separator (would break re-split)."""
-    bad = transcripts.filter(F.col("text").contains(sep)).limit(1).count()
+    bad = transcripts.filter(F.col("text").contains(DOC_SEP)).limit(1).count()
     if bad:
-        raise ValueError(f"turn text contains separator {sep!r}; choose another sep")
+        raise ValueError(f"turn text contains the document separator {DOC_SEP!r}")

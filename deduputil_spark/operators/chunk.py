@@ -33,7 +33,15 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from deduputil_spark.config import DedupConfig
-from deduputil_spark.functions.hashes import cdc_cuts_fast, fsp_cuts, sb_spans
+from deduputil_spark.functions.hashes import (
+    BLOCK_WIN,
+    CDC_R,
+    adler32_checksum,
+    cdc_cuts_fast,
+    cdc_walk,
+    fsp_cuts,
+    sb_spans,
+)
 
 CHUNK_SCHEMA = T.StructType(
     [
@@ -45,16 +53,6 @@ CHUNK_SCHEMA = T.StructType(
         T.StructField("is_tail", T.BooleanType(), False),
     ]
 )
-
-
-def _adler32_np(data: bytes) -> int:
-    """Reference weak checksum (/root/reference/src/checksum.c:7-24), signed chars."""
-    if not data:
-        return 0
-    a = np.frombuffer(data, dtype=np.int8).astype(np.int64)
-    s1 = int(a.sum())
-    s2 = int((a * np.arange(len(a), 0, -1)).sum())
-    return ((s1 & 0xFFFF) + ((s2 << 16) & 0xFFFFFFFF)) & 0xFFFFFFFF
 
 
 def _chunk_one(cid: str, data: bytes, cfg: DedupConfig) -> Iterator[tuple]:
@@ -77,21 +75,19 @@ def _chunk_one(cid: str, data: bytes, cfg: DedupConfig) -> Iterator[tuple]:
             block_size=cfg.block_size,
             min_size=cfg.block_min_size,
             max_size=cfg.block_max_size,
-            win=cfg.block_win_size,
-            cdc_r=cfg.cdc_r,
             cut_hash=cfg.cut_hash,
         )
     prev = 0
     idx = 0
     for end in cuts:
         piece = data[prev:end]
-        yield (cid, idx, piece, len(piece), _adler32_np(piece), False)
+        yield (cid, idx, piece, len(piece), adler32_checksum(piece), False)
         prev = end
         idx += 1
     tail = data[prev:]
     # the tail row is ALWAYS emitted (possibly empty) so reconstruction and
     # per-doc accounting never lose a document with zero chunks
-    yield (cid, idx, tail, len(tail), _adler32_np(tail), True)
+    yield (cid, idx, tail, len(tail), adler32_checksum(tail), True)
 
 
 def _batch_chunk_walk(
@@ -120,9 +116,7 @@ def _batch_chunk_walk(
     counts = np.empty(n_docs, dtype=np.int64)
     ends_parts: list[np.ndarray] = []
     weak_parts: list[np.ndarray] = []
-    bs, mn, mx, win, r = (
-        cfg.block_size, cfg.block_min_size, cfg.block_max_size, cfg.block_win_size, cfg.cdc_r
-    )
+    bs, mn, mx = cfg.block_size, cfg.block_min_size, cfg.block_max_size
     adler_fast = (
         cfg.chunk_algo == "cdc"
         and cfg.cut_hash == "adler"
@@ -146,30 +140,13 @@ def _batch_chunk_walk(
             cuts = np.asarray([e for _, e in spans], dtype=np.int64)
         elif adler_fast:
             lc: list[int] = []
-            if nd >= win:
-                wsum = c1[win:] - c1[:-win]  # window sums off the shared cumsum
-                match_pos = np.flatnonzero((wsum & (bs - 1)) == r)
-                nm = len(match_pos)
-                p = 0
-                last_head = nd - win
-                while True:
-                    h0 = p + (mn - win)
-                    if h0 + win > nd:
-                        break
-                    hi_cap = p + mx - 1
-                    j = int(np.searchsorted(match_pos, h0))
-                    if j < nm and match_pos[j] <= min(hi_cap, last_head):
-                        cut = int(match_pos[j]) + win
-                    elif hi_cap <= last_head:
-                        cut = p + mx  # every head evaluated, none matched
-                    else:
-                        break  # windows ran out mid-block -> tail
-                    lc.append(cut)
-                    p = cut
+            if nd >= BLOCK_WIN:
+                wsum = c1[BLOCK_WIN:] - c1[:-BLOCK_WIN]  # window sums off the shared cumsum
+                lc = cdc_walk(np.flatnonzero((wsum & (bs - 1)) == CDC_R), nd, mn, mx)
             cuts = np.asarray(lc, dtype=np.int64)
         else:
             cuts = np.asarray(
-                cdc_cuts_fast(bytes(sub), bs, mn, mx, win, r, cfg.cut_hash), dtype=np.int64
+                cdc_cuts_fast(bytes(sub), bs, mn, mx, cut_hash=cfg.cut_hash), dtype=np.int64
             )
         le = np.empty(len(cuts) + 1, dtype=np.int64)
         le[: len(cuts)] = cuts
@@ -194,7 +171,7 @@ def _batch_chunk_walk(
     return np.concatenate(ends_parts), counts, np.concatenate(weak_parts)
 
 
-def make_arrow_chunker(cfg: DedupConfig, text_col: str = "doc_text"):
+def make_arrow_chunker(cfg: DedupConfig):
     """mapInArrow chunker: zero Python strings, zero per-chunk Python objects.
 
     Same treatment that won the minhash tokenizer 1.3× (minhash.py
@@ -216,7 +193,7 @@ def make_arrow_chunker(cfg: DedupConfig, text_col: str = "doc_text"):
         for batch in batches:
             names = batch.schema.names
             cid = batch.column(names.index("conv_id"))
-            txt = batch.column(names.index(text_col))
+            txt = batch.column(names.index("doc_text"))
             view = utf8_buffer_view(txt)
             if view is not None:
                 buf, bounds = view
@@ -306,7 +283,7 @@ def chunk_fsp_sql(docs: DataFrame, block_size: int = 4096) -> DataFrame:
     return full.unionByName(tail).withColumn("md5", F.md5(F.col("chunk_text")))
 
 
-def compress_chunk_blocks(chunks: DataFrame, level: int = 6) -> DataFrame:
+def compress_chunk_blocks(chunks: DataFrame) -> DataFrame:
     """F4 full `-z` semantics: zlib each NON-TAIL chunk and REKEY the store on
     the compressed bytes — md5(zlib(chunk)), chunk_len = compressed length —
     the reference's exact order of operations (compress → md5 → dedup,
@@ -325,7 +302,7 @@ def compress_chunk_blocks(chunks: DataFrame, level: int = 6) -> DataFrame:
 
     @F.pandas_udf("binary")
     def _zc(s: pd.Series) -> pd.Series:
-        return s.map(lambda b: zlib.compress(bytes(b), level))
+        return s.map(lambda b: zlib_block(bytes(b)))
 
     keep_tail = F.col("is_tail")
     return (
@@ -340,12 +317,12 @@ def compress_chunk_blocks(chunks: DataFrame, level: int = 6) -> DataFrame:
     )
 
 
-def zlib_block(data: bytes, level: int = 6) -> bytes:
+def zlib_block(data: bytes) -> bytes:
     """F4 scalar helper — per-block zlib, byte-identical to the reference's
     zlib_compress_block (/root/reference/src/libz.c:270, same system libz at
     Z_DEFAULT_COMPRESSION).  The full `-z` semantics — compress → md5 → dedup,
     i.e. the store IS keyed on md5(zlib(chunk)) exactly as the reference does
     it — live in `compress_chunk_blocks` above (golden byte-exact vs a
     binary-built `-z` package in tests/test_cut_hash_golden.py)."""
-    return zlib.compress(data, level)
+    return zlib.compress(data, 6)
 

@@ -29,12 +29,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def assign_dense_ids(
-    df: DataFrame,
-    order_cols: list[str],
-    id_col: str = "bid",
-    num_partitions: int | None = None,
-) -> DataFrame:
+def assign_dense_ids(df: DataFrame, order_cols: list[str], id_col: str = "bid") -> DataFrame:
     """Deterministic dense 0-based ids in global `order_cols` order, scalably.
 
     Two-pass: range-partition + in-partition sort, count rows per partition
@@ -43,7 +38,7 @@ def assign_dense_ids(
     order, which disjoint ordered ranges preserve — so the assignment is
     deterministic for a given input set regardless of sampled boundaries.
     """
-    nparts = num_partitions or max(df.sparkSession.sparkContext.defaultParallelism, 8)
+    nparts = max(df.sparkSession.sparkContext.defaultParallelism, 8)
     parted = (
         df.repartitionByRange(nparts, *[F.col(c) for c in order_cols])
         .sortWithinPartitions(*order_cols)
@@ -67,7 +62,7 @@ def assign_dense_ids(
     )
 
 
-def build_block_store(chunks: DataFrame, scalable_ids: bool = True) -> DataFrame:
+def build_block_store(chunks: DataFrame) -> DataFrame:
     """chunks (non-tail) -> blocks(bid, md5, chunk_bytes, chunk_len, weak32, refcount).
 
     One hash-aggregate shuffle (Catalyst partial+final) + the id pass.
@@ -78,10 +73,7 @@ def build_block_store(chunks: DataFrame, scalable_ids: bool = True) -> DataFrame
         F.first("weak32").alias("weak32"),
         F.count(F.lit(1)).alias("refcount"),
     )
-    if scalable_ids:
-        return assign_dense_ids(distinct, ["md5", "chunk_bytes"], "bid")
-    w = Window.orderBy("md5", "chunk_bytes")
-    return distinct.withColumn("bid", (F.row_number().over(w) - 1).cast("long"))
+    return assign_dense_ids(distinct, ["md5", "chunk_bytes"], "bid")
 
 
 def build_file_meta(chunks: DataFrame, blocks: DataFrame) -> DataFrame:

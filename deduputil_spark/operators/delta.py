@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from deduputil_spark.functions.hashes import adler32_checksum
+
 DELTA_SCHEMA = T.StructType(
     [
         T.StructField("conv_src", T.StringType(), False),
@@ -80,7 +82,7 @@ def _delta_one(src: bytes, chunk_rows, block_size: int, mode: str):
         n_full = len(src) // block_size
         for b in range(n_full):
             blk = src[b * block_size : (b + 1) * block_size]
-            hkey = int(_adler_all_positions(np.frombuffer(blk, dtype=np.int8), len(blk))[0])
+            hkey = adler32_checksum(blk)
             hit = None
             if hkey in weak:
                 hit = strong.get(hashlib.md5(blk).hexdigest())

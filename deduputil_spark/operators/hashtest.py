@@ -4,9 +4,8 @@
 The reference md5s 4 KB blocks of an input file, inserts them into a
 hashtable per hash function, and reports bucket usage, max chain length and
 collision counts.  Here: bucket keys per value, then bucket-size distribution
-aggregates.  The md5-derived bucket (hex prefix → int) is used so the DuckDB
-oracle reproduces it bit-for-bit; `hash_col='xxhash64'` uses Spark's native
-hash for the engine-internal view.
+aggregates.  The bucket is derived from md5 (hex prefix → int) so the DuckDB
+oracle reproduces it bit-for-bit.
 """
 
 from __future__ import annotations
@@ -15,20 +14,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def hash_quality_report(
-    df: DataFrame, col: str, n_buckets: int = 1024, hash_fn: str = "md5"
-) -> DataFrame:
+def hash_quality_report(df: DataFrame, col: str, n_buckets: int = 1024) -> DataFrame:
     """-> one row: n_values, used_buckets, max_chain, avg_chain, collisions.
 
     collisions = values whose bucket holds >1 distinct value (chain >1), the
     reference's "conflict" count (show_hashtest_result semantics)."""
-    if hash_fn == "md5":
-        bucket = (F.conv(F.substring(F.md5(F.col("v").cast("binary")), 1, 8), 16, 10).cast("long")
-                  % n_buckets)
-    elif hash_fn == "xxhash64":
-        bucket = F.pmod(F.xxhash64(F.col("v")), F.lit(n_buckets))
-    else:
-        raise ValueError(f"unknown hash_fn {hash_fn!r}")
+    bucket = F.conv(F.substring(F.md5(F.col("v").cast("binary")), 1, 8), 16, 10).cast("long") % n_buckets
     per_bucket = (
         df.select(F.col(col).alias("v")).distinct()
         .select(bucket.alias("bucket"))

@@ -55,6 +55,8 @@ def candidate_pairs(
     Output is identical to the three-branch form; the plan has no persist and
     two fewer shuffle joins.  Hot-bucket pair fan-out stays bounded at ~cap²
     per task; truncation is measured by `bucket_skew_report`, never silent.
+    No per-doc degree cap here: `run_pipeline` applies `cap_pair_degree` as
+    a stage of its own when `max_pair_degree` is set.
     """
     cfg = cfg or DedupConfig()
     cap = int(cfg.hot_bucket_cap)
@@ -95,7 +97,7 @@ def candidate_pairs(
         ).alias("e"),
         F.col("conv_id").alias("conv_b"),
     ).select("band_idx", "band_hash", F.col("e.s").alias("salt"), F.col("e.ring").alias("ring"), "conv_b")
-    out = (
+    return (
         left.join(right, ["band_idx", "band_hash", "salt"])
         .filter(
             (~F.col("ring") & (F.col("conv_a") < F.col("conv_b")))
@@ -107,9 +109,6 @@ def candidate_pairs(
         )
         .distinct()
     )
-    if cfg.max_pair_degree is not None:
-        out = cap_pair_degree(out, int(cfg.max_pair_degree))
-    return out
 
 
 def bucket_skew_report(bands: DataFrame, cfg: DedupConfig | None = None) -> DataFrame:

@@ -313,10 +313,8 @@ def batch_oph_signatures(keys: np.ndarray, bounds: np.ndarray, num_perm: int) ->
     return sig.ravel()
 
 
-def minhash_signatures_numpy(
-    docs: DataFrame, cfg: DedupConfig | None = None, text_col: str = "doc_text"
-) -> DataFrame:
-    """(conv_id, doc text) -> (conv_id, sig array<bigint>[num_perm],
+def minhash_signatures_numpy(docs: DataFrame, cfg: DedupConfig | None = None) -> DataFrame:
+    """(conv_id, doc_text) -> (conv_id, sig array<bigint>[num_perm],
     kset array<bigint>): vectorized-numpy OPH MinHash over assembled
     documents, plus each doc's sorted unique k-gram keys (mapInArrow).
 
@@ -348,13 +346,13 @@ def minhash_signatures_numpy(
         for batch in batches:
             names = batch.schema.names
             cid = batch.column(names.index("conv_id"))
-            keys, bounds = batch_kgram_sets(*arrow_token_hashes(batch.column(names.index(text_col))), k)
+            keys, bounds = batch_kgram_sets(*arrow_token_hashes(batch.column(names.index("doc_text"))), k)
             sig = list_array(batch_oph_signatures(keys, bounds, p), np.arange(0, (batch.num_rows + 1) * p, p))
             yield pa.RecordBatch.from_arrays(
                 [cid.cast(pa.string()), sig, list_array(keys, bounds)], names=["conv_id", "sig", "kset"]
             )
 
-    return docs.select("conv_id", text_col).mapInArrow(sig_batches, schema=_SIG_SCHEMA)
+    return docs.select("conv_id", "doc_text").mapInArrow(sig_batches, schema=_SIG_SCHEMA)
 
 
 def lsh_bands(

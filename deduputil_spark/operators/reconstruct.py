@@ -65,18 +65,18 @@ def reconstruct_documents(
     )
 
 
-def reconstruct_turns(reconstructed_docs: DataFrame, sep: str = DOC_SEP) -> DataFrame:
+def reconstruct_turns(reconstructed_docs: DataFrame) -> DataFrame:
     """Re-split reconstructed documents into (conv_id, turn_idx, text) rows
     for the per-turn equality assertion (input_hint invariant)."""
     return reconstructed_docs.select(
         "conv_id",
-        F.posexplode(F.split("doc_text", sep)).alias("turn_idx", "text"),
+        F.posexplode(F.split("doc_text", DOC_SEP)).alias("turn_idx", "text"),
     ).withColumn("turn_idx", F.col("turn_idx").cast("int"))
 
 
-def roundtrip_mismatches(transcripts: DataFrame, reconstructed_docs: DataFrame, sep: str = DOC_SEP) -> DataFrame:
+def roundtrip_mismatches(transcripts: DataFrame, reconstructed_docs: DataFrame) -> DataFrame:
     """Rows where reconstruction diverges from the source (must be empty)."""
-    recon = reconstruct_turns(reconstructed_docs, sep)
+    recon = reconstruct_turns(reconstructed_docs)
     src = transcripts.select("conv_id", "turn_idx", F.col("text").alias("src_text"))
     return (
         src.join(recon, ["conv_id", "turn_idx"], "full_outer")

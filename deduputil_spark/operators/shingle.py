@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def shingles(docs: DataFrame, k: int = 5, text_col: str = "doc_text", distinct: bool = True) -> DataFrame:
+def shingles(docs: DataFrame, k: int = 5, distinct: bool = True) -> DataFrame:
     """docs(conv_id, doc_text) -> (conv_id, shingle), DISTINCT per doc by default.
 
     Tokens = whitespace split; shingle = k consecutive tokens joined by ' '.
@@ -30,7 +30,7 @@ def shingles(docs: DataFrame, k: int = 5, text_col: str = "doc_text", distinct: 
     (the default ``distinct=True`` does it here).
     """
     k = int(k)
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
+    toks = F.split(F.trim(F.col("doc_text")), r"\s+")
     out = docs.select("conv_id", toks.alias("toks")).select(
         "conv_id",
         F.explode(

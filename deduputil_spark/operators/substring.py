@@ -57,15 +57,10 @@ def containment_components(
     ).select("conv_a", "conv_b", "inter", F.col("na").alias("na"))
 
 
-def containment_candidates(
-    docs: DataFrame,
-    w: int = 8,
-    threshold: float = 1.0,
-    max_bucket: int = 5000,
-) -> DataFrame:
+def containment_candidates(docs: DataFrame, w: int = 8, threshold: float = 1.0) -> DataFrame:
     """-> (conv_a, conv_b, containment) where conv_a's anchor set is
     `threshold`-contained in conv_b's (direction: a inside b)."""
-    comp = containment_components(docs, w, max_bucket)
+    comp = containment_components(docs, w)
     return comp.select(
         "conv_a", "conv_b", (F.col("inter") / F.col("na")).alias("containment")
     ).filter(F.col("containment") >= threshold)

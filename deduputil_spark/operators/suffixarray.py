@@ -46,19 +46,17 @@ _BINV = pow(_B, -1, 1 << 64)
 # direct path (the reference the tests compare against)
 # ---------------------------------------------------------------------------
 
-def lgrams_direct(
-    docs: DataFrame, L: int, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def lgrams_direct(docs: DataFrame, L: int) -> DataFrame:
     """-> (id, pos, gram): every L-character gram with its start offset.
     Oracle-parity path — carries the gram text itself (O(L) bytes/position)."""
     return docs.select(
-        F.col(id_col).alias(id_col),
+        "doc_id",
         F.posexplode(
             F.when(
-                F.length(text_col) >= L,
+                F.length("text") >= L,
                 F.transform(
-                    F.sequence(F.lit(0), F.length(text_col) - L),
-                    lambda i: F.substring(F.col(text_col), i + 1, L),
+                    F.sequence(F.lit(0), F.length("text") - L),
+                    lambda i: F.substring(F.col("text"), i + 1, L),
                 ),
             ).otherwise(F.array().cast("array<string>"))
         ).alias("pos", "gram"),
@@ -68,9 +66,7 @@ def lgrams_direct(
 # rolling-hash scale path
 # ---------------------------------------------------------------------------
 
-def lgram_hashes(
-    docs: DataFrame, L: int, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def lgram_hashes(docs: DataFrame, L: int) -> DataFrame:
     """-> (id, pos, h): mod-2^64 polynomial rolling hash of every L-gram.
 
     h(p) = (S[p+L] - S[p]) * B^{-p}  (mod 2^64), S = prefix sums of
@@ -94,8 +90,8 @@ def lgram_hashes(
 
     from deduputil_spark.operators.minhash import utf8_buffer_view
 
-    id_field = docs.schema[id_col].dataType.simpleString()
-    out_schema = f"{id_col} {id_field}, pos int, h bigint"
+    id_field = docs.schema["doc_id"].dataType.simpleString()
+    out_schema = f"doc_id {id_field}, pos int, h bigint"
     Lc = int(L)
 
     def _doc_hashes(cp: np.ndarray) -> np.ndarray:
@@ -196,10 +192,10 @@ def lgram_hashes(
                     pa.array(np.concatenate(out_pos)),
                     pa.array(np.concatenate(out_h)),
                 ],
-                names=[id_col, "pos", "h"],
+                names=["doc_id", "pos", "h"],
             )
 
-    return docs.select(id_col, text_col).mapInArrow(batches, out_schema)
+    return docs.select("doc_id", "text").mapInArrow(batches, out_schema)
 
 # ---------------------------------------------------------------------------
 # duplicated positions / spans (both methods)
@@ -253,13 +249,7 @@ def _filter_dup_groups(
             dup = F.broadcast(dup)
     return df.join(dup, list(key_cols), "left_semi")
 
-def duplicated_positions(
-    docs: DataFrame,
-    L: int,
-    method: str = "rolling",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def duplicated_positions(docs: DataFrame, L: int, method: str = "rolling") -> DataFrame:
     """-> (id, pos): every position whose L-gram occurs >= 2 times anywhere
     in the corpus (cross-doc or same-doc at a different offset).
 
@@ -269,10 +259,10 @@ def duplicated_positions(
     big exchange shrinks to dup candidates only (VERDICT r4 #2) — most
     positions in a real corpus are unique and now never cross the wire."""
     if method == "direct":
-        grams = lgrams_direct(docs, L, id_col, text_col)
-        return _filter_dup_groups(grams, "gram").select(id_col, "pos")
+        grams = lgrams_direct(docs, L)
+        return _filter_dup_groups(grams, "gram").select("doc_id", "pos")
     if method == "rolling":
-        hashes = lgram_hashes(docs, L, id_col, text_col)
+        hashes = lgram_hashes(docs, L)
         # prefilter: the only full-corpus exchange is the 8B-per-distinct-hash
         # partial-count aggregate; positions themselves never shuffle while
         # the dup-hash set fits the broadcast budget (key_bytes=8 → the
@@ -292,32 +282,26 @@ def duplicated_positions(
         # candidates only and regroup (2^-64 collisions cannot survive).  The
         # docs side is semi-pruned to candidate docs first so the verify join
         # ships only the text of documents that contain a dup candidate.
-        cand_docs = docs.select(id_col, text_col).join(
-            cand.select(id_col), id_col, "left_semi"
+        cand_docs = docs.select("doc_id", "text").join(
+            cand.select("doc_id"), "doc_id", "left_semi"
         )
-        with_gram = cand.join(cand_docs, id_col).select(
-            id_col, "pos", F.col(text_col).substr(F.col("pos") + 1, F.lit(L)).alias("gram")
+        with_gram = cand.join(cand_docs, "doc_id").select(
+            "doc_id", "pos", F.col("text").substr(F.col("pos") + 1, F.lit(L)).alias("gram")
         )
         # dup grams are UTF-8 strings of length L (≈4L bytes worst case)
         return _filter_dup_groups(with_gram, "gram", key_bytes=4 * L).select(
-            id_col, "pos"
+            "doc_id", "pos"
         )
     raise ValueError(f"unknown method {method!r}")
 
-def duplicated_spans(
-    docs: DataFrame,
-    L: int,
-    method: str = "rolling",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def duplicated_spans(docs: DataFrame, L: int, method: str = "rolling") -> DataFrame:
     """-> (id, span_start, span_end, n_dup_grams): per document, the merged
     character spans covered by duplicated L-grams (span_end exclusive).
     Two dup positions merge when their [p, p+L) intervals overlap or touch
     (gap > L splits).  The per-doc window is bounded by document length —
     safe at any corpus scale."""
-    dup = duplicated_positions(docs, L, method, id_col, text_col)
-    w = Window.partitionBy(id_col).orderBy("pos")
+    dup = duplicated_positions(docs, L, method)
+    w = Window.partitionBy("doc_id").orderBy("pos")
     flagged = dup.withColumn(
         "brk",
         F.when(
@@ -328,20 +312,13 @@ def duplicated_spans(
     islands = flagged.withColumn(
         "island", F.sum("brk").over(w.rowsBetween(Window.unboundedPreceding, 0))
     )
-    return islands.groupBy(id_col, "island").agg(
+    return islands.groupBy("doc_id", "island").agg(
         F.min("pos").cast("int").alias("span_start"),
         (F.max("pos") + L).cast("int").alias("span_end"),
         F.count(F.lit(1)).cast("long").alias("n_dup_grams"),
     ).drop("island")
 
-def strip_duplicated_spans(
-    docs: DataFrame,
-    L: int,
-    method: str = "rolling",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    spans: DataFrame | None = None,
-) -> DataFrame:
+def strip_duplicated_spans(docs: DataFrame, L: int, method: str = "rolling") -> DataFrame:
     """-> original doc columns + (clean_text, n_stripped): each document's
     text with every duplicated span removed — the cleaned-corpus output of
     the exact-substring dedup pass (Lee et al. 2021 ExactSubstr semantics:
@@ -352,22 +329,18 @@ def strip_duplicated_spans(
     (`duplicated_spans`), so per doc we sort them and fold with
     ``F.aggregate``, concatenating the kept segments between consecutive
     spans — no UDF, no explode back, one narrow join of docs against the
-    per-doc span arrays (span counts are tiny relative to text).
-
-    Pass ``spans`` (a `duplicated_spans` result, e.g. a checkpointed stage
-    table) to skip recomputing the dup pass."""
-    if spans is None:
-        spans = duplicated_spans(docs, L, method, id_col, text_col)
-    span_arr = spans.groupBy(id_col).agg(
+    per-doc span arrays (span counts are tiny relative to text)."""
+    spans = duplicated_spans(docs, L, method)
+    span_arr = spans.groupBy("doc_id").agg(
         F.array_sort(
             F.collect_list(F.struct(F.col("span_start").alias("s"), F.col("span_end").alias("e")))
         ).alias("_spans")
     )
-    joined = docs.join(span_arr, id_col, "left").withColumn(
+    joined = docs.join(span_arr, "doc_id", "left").withColumn(
         "_spans",
         F.coalesce(F.col("_spans"), F.array().cast("array<struct<s:int,e:int>>")),
     )
-    text = F.col(text_col)
+    text = F.col("text")
     clean = F.aggregate(
         F.col("_spans"),
         F.struct(F.lit(0).cast("int").alias("prev"), F.lit("").alias("acc")),

@@ -20,34 +20,34 @@ _LANG_STOPWORDS = {
 }
 
 
-def _stopword_hits(text_col: str, words: list[str]):
+def _stopword_hits(words: list[str]):
     """Count of tokens from `words` present in the token array (JVM-side)."""
     arr = ", ".join(f"'{w}'" for w in words)
     return F.expr(
-        f"size(filter(split(lower(trim({text_col})), '\\\\s+'), t -> array_contains(array({arr}), t)))"
+        f"size(filter(split(lower(trim(text)), '\\\\s+'), t -> array_contains(array({arr}), t)))"
     )
 
 
-def language_id(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def language_id(docs: DataFrame) -> DataFrame:
     """Heuristic language ID: argmax over per-language stopword hit counts
     ('und' when all zero).  Deterministic tie-break by language code order."""
     hits = docs.select(
-        F.col(id_col),
-        *[_stopword_hits(text_col, ws).alias(f"hits_{lang}") for lang, ws in _LANG_STOPWORDS.items()],
+        "doc_id",
+        *[_stopword_hits(ws).alias(f"hits_{lang}") for lang, ws in _LANG_STOPWORDS.items()],
     )
     langs = list(_LANG_STOPWORDS)
     best = F.greatest(*[F.col(f"hits_{lang}") for lang in langs])
     pred = F.lit("und")
     for lang in reversed(langs):  # earlier langs win ties (reverse fold)
         pred = F.when(F.col(f"hits_{lang}") == best, F.lit(lang)).otherwise(pred)
-    return hits.select(id_col, F.when(best > 0, pred).otherwise(F.lit("und")).alias("lang_pred"))
+    return hits.select("doc_id", F.when(best > 0, pred).otherwise(F.lit("und")).alias("lang_pred"))
 
 
-def doc_fingerprint(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", w: int = 8) -> DataFrame:
+def doc_fingerprint(docs: DataFrame, w: int = 8) -> DataFrame:
     """Winnowing-style fingerprint: the minimum md5 over the document's
     w-token anchor windows (1 shingle if shorter) — a compact near-dup key
     that's robust to small edits at the ends."""
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
+    toks = F.split(F.trim(F.col("text")), r"\s+")
     grams = F.when(
         F.size(toks) >= w,
         F.transform(
@@ -55,7 +55,7 @@ def doc_fingerprint(docs: DataFrame, id_col: str = "doc_id", text_col: str = "te
             lambda i: F.md5(F.array_join(F.slice(toks, i + 1, w), " ")),
         ),
     ).otherwise(F.array(F.md5(F.array_join(toks, " "))))
-    return docs.select(F.col(id_col), F.array_min(grams).alias("fingerprint"))
+    return docs.select("doc_id", F.array_min(grams).alias("fingerprint"))
 
 
 def ngram_jaccard_pairs(docs: DataFrame, n: int = 3, max_df: int = 50_000) -> DataFrame:

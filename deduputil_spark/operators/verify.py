@@ -6,9 +6,10 @@ Three verifiers, mirroring the reference's similarity semantics:
   verify, JVM array_intersect over the k-gram sets the signature layer
   emits) and `jaccard_verify_docs` (the same core for callers holding doc
   text).
-- `bsim_similarity` — the reference's weighted block-frequency formula
+- `bsim_components` — the reference's weighted block-frequency formula
   sim = 2·Σ len·min(n1,n2) / Σ len·(n1+n2)  (/root/reference/src/bsim.c:277-294)
-  over chunk-md5 multisets, relational.
+  over chunk-md5 multisets, relational, as integer components
+  (w_inter, wsum), sim = 2·w_inter / wsum.
 - `lcs_verify_components` — the reference's ordered LCS similarity
   (deduputil src/bsim.c:177-275) as integer components
   (lcs_bytes, union_bytes), sim = 2·lcs_bytes / union_bytes: O(n·m) DP over
@@ -33,7 +34,7 @@ from deduputil_spark.cache import track
 _KSET_SCHEMA = "conv_id string, kset array<bigint>"
 
 
-def _kgram_sets(docs: DataFrame, k: int, text_col: str = "doc_text") -> DataFrame:
+def _kgram_sets(docs: DataFrame, k: int) -> DataFrame:
     """(conv_id, kset array<long>) — per-doc UNIQUE k-gram hash set, one row
     per doc (numpy via mapInArrow, zero-copy off the Arrow UTF-8 buffer; the
     same `batch_kgram_sets` the numpy minhash emits its kset column with)."""
@@ -45,10 +46,10 @@ def _kgram_sets(docs: DataFrame, k: int, text_col: str = "doc_text") -> DataFram
         for batch in batches:
             names = batch.schema.names
             cid = batch.column(names.index("conv_id"))
-            kset = list_array(*batch_kgram_sets(*arrow_token_hashes(batch.column(names.index(text_col))), k))
+            kset = list_array(*batch_kgram_sets(*arrow_token_hashes(batch.column(names.index("doc_text"))), k))
             yield pa.RecordBatch.from_arrays([cid.cast(pa.string()), kset], names=["conv_id", "kset"])
 
-    return docs.select("conv_id", text_col).mapInArrow(run, schema=_KSET_SCHEMA)
+    return docs.select("conv_id", "doc_text").mapInArrow(run, schema=_KSET_SCHEMA)
 
 
 def jaccard_verify_sets(pairs: DataFrame, ksets: DataFrame, threshold: float | None = None) -> DataFrame:
@@ -134,19 +135,6 @@ def bsim_components(pairs: DataFrame, chunks: DataFrame) -> DataFrame:
             F.col("w_inter").cast("long").alias("w_inter"),
             (F.col("ta") + F.col("tb")).cast("long").alias("wsum"),
         )
-    )
-
-
-def bsim_similarity(pairs: DataFrame, chunks: DataFrame) -> DataFrame:
-    """Reference bsim J1: per-pair weighted multiset similarity over chunk md5s.
-
-    chunk frequency tables per doc (md5 -> count, len), then
-    sim = 2·Σ len·min(n_a, n_b) / (Σ_a len·n_a + Σ_b len·n_b).
-    """
-    return bsim_components(pairs, chunks).select(
-        "conv_a",
-        "conv_b",
-        (F.lit(2) * F.col("w_inter") / F.col("wsum")).alias("bsim"),
     )
 
 

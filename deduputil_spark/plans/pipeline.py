@@ -20,9 +20,11 @@ One function, `run_pipeline`, builds it in two modes:
   read back, not recomputed — kill the driver after stage k, rerun, and
   stages 1..k are loaded while k+1.. continue.  Each stage records a
   `StageMetric` (stage, rows_out counted on the table just written, wall_ms,
-  partitions, config_hash, resumed).  With `max_pair_degree` set, the raw
-  and capped candidate sets are separate stages and a `degree_cap_dropped`
-  row records the difference.
+  partitions, config_hash, resumed).
+
+With `max_pair_degree` set, both modes apply `lsh.cap_pair_degree` here, as
+the separate stages `candidates_raw` and `candidates`; checkpointed, a
+`degree_cap_dropped` row records the difference.
 """
 
 from __future__ import annotations
@@ -30,7 +32,7 @@ from __future__ import annotations
 import json
 import os
 import time
-from dataclasses import dataclass, field, replace
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -127,25 +129,24 @@ def run_pipeline(
     # verify joins, so verify never re-reads or re-tokenizes text.
     sigs = r.run("sign", lambda: minhash_signatures_numpy(docs, cfg))
     bands = lsh_bands(sigs, cfg, band_key="xxhash")  # no per-band string build
-    if checkpoint_dir and cfg.max_pair_degree is not None:
-        # meter the raw and capped candidate sets as separate stages and emit
-        # the dropped-edge count as its own metrics row — thinning is never
-        # silent (the contract lsh.cap_pair_degree promises)
-        uncapped = replace(cfg, max_pair_degree=None)
-        raw = r.run("candidates_raw", lambda: candidate_pairs(bands, uncapped, persist_bands=False))
-        cands = r.run("candidates", lambda: cap_pair_degree(raw, cfg.max_pair_degree))
-        r.metrics.append(
-            StageMetric(
-                stage="degree_cap_dropped",
-                rows_out=r.metrics[-2].rows_out - r.metrics[-1].rows_out,
-                wall_ms=0,
-                partitions=-1,
-                config_hash=cfg.config_hash(),
-                resumed=False,
-            )
-        )
-    else:
+    if cfg.max_pair_degree is None:
         cands = r.run("candidates", lambda: candidate_pairs(bands, cfg, persist_bands=False))
+    else:
+        raw = r.run("candidates_raw", lambda: candidate_pairs(bands, cfg, persist_bands=False))
+        cands = r.run("candidates", lambda: cap_pair_degree(raw, cfg.max_pair_degree))
+        if checkpoint_dir:
+            # the dropped-edge count is its own metrics row — thinning is
+            # never silent (the contract lsh.cap_pair_degree promises)
+            r.metrics.append(
+                StageMetric(
+                    stage="degree_cap_dropped",
+                    rows_out=r.metrics[-2].rows_out - r.metrics[-1].rows_out,
+                    wall_ms=0,
+                    partitions=-1,
+                    config_hash=cfg.config_hash(),
+                    resumed=False,
+                )
+            )
     verified = r.run(
         "verified",
         lambda: jaccard_verify_sets(cands, sigs.select("conv_id", "kset"), cfg.jaccard_threshold),
@@ -169,18 +170,15 @@ def run_pipeline(
 run_pipeline_lean = run_pipeline
 
 
-def pair_recall(verified_or_clusters: DataFrame, truth_pairs: DataFrame, via_clusters: bool = True) -> float:
-    """Planted-pair recall (BASELINE.json metric).  `truth_pairs` rows with
-    kind != collision_nonpair must co-cluster (or appear among verified pairs)."""
+def pair_recall(clusters: DataFrame, truth_pairs: DataFrame) -> float:
+    """Planted-pair recall (BASELINE.json metric): the share of `truth_pairs`
+    rows with kind != collision_nonpair whose two docs share a cluster in
+    `clusters` (conv_id, cluster_id)."""
     truth = truth_pairs.filter(F.col("kind") != "collision_nonpair")
     n_truth = truth.count()
     if n_truth == 0:
         return 1.0
-    if via_clusters:
-        lab = verified_or_clusters  # (conv_id, cluster_id)
-        la = lab.select(F.col("conv_id").alias("conv_a"), F.col("cluster_id").alias("ca"))
-        lb = lab.select(F.col("conv_id").alias("conv_b"), F.col("cluster_id").alias("cb"))
-        hit = truth.join(la, "conv_a").join(lb, "conv_b").filter(F.col("ca") == F.col("cb")).count()
-    else:
-        hit = truth.join(verified_or_clusters, ["conv_a", "conv_b"], "left_semi").count()
+    la = clusters.select(F.col("conv_id").alias("conv_a"), F.col("cluster_id").alias("ca"))
+    lb = clusters.select(F.col("conv_id").alias("conv_b"), F.col("cluster_id").alias("cb"))
+    hit = truth.join(la, "conv_a").join(lb, "conv_b").filter(F.col("ca") == F.col("cb")).count()
     return hit / n_truth

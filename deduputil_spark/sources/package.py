@@ -116,7 +116,7 @@ def extract_package(spark: SparkSession, pkg_dir: str) -> DataFrame:
     return reconstruct_documents(pkg["file_meta"], pkg["blocks"], compressed=_pkg_z(pkg))
 
 
-def extract_turns(spark: SparkSession, pkg_dir: str, sep: str = DOC_SEP) -> DataFrame:
+def extract_turns(spark: SparkSession, pkg_dir: str) -> DataFrame:
     """dedup -x with metadata restore: full (conv_id, turn_idx, role, text,
     tool, ts) rows — the Spark analog of the reference re-applying mode and
     atime/mtime after writing the bytes
@@ -139,7 +139,7 @@ def extract_turns(spark: SparkSession, pkg_dir: str, sep: str = DOC_SEP) -> Data
     # arrays_zip(…, NULL) is NULL and posexplode would silently DROP the whole
     # document — coalesce each array to all-nulls sized by the split instead
     # (ADVICE r3)
-    texts = F.split("doc_text", sep)
+    texts = F.split("doc_text", DOC_SEP)
     null_sized = lambda typ: F.transform(texts, lambda x: F.lit(None).cast(typ))  # noqa: E731
     z = F.posexplode(
         F.arrays_zip(

@@ -90,10 +90,10 @@ def incremental_dedup_stream(
     state_dir: str,
     checkpoint_dir: str,
     cfg: DedupConfig | None = None,
-    trigger_available_now: bool = True,
 ):
     """readStream over a parquet drop-zone of completed conversations ->
-    foreachBatch micro-batch upsert into the dedup state tables."""
+    foreachBatch micro-batch upsert into the dedup state tables, run once
+    over every file present (availableNow trigger)."""
     cfg = cfg or DedupConfig()
     state = DedupState(spark, state_dir)
     stream = spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(source_dir)
@@ -103,17 +103,19 @@ def incremental_dedup_stream(
             return
         apply_batch(state, batch_df, cfg)
 
-    writer = stream.writeStream.foreachBatch(handle).option("checkpointLocation", checkpoint_dir)
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def streaming_exact_dedup(transcript_stream: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Suppress exact-duplicate turns in-flight: state-bounded by watermark
-    (late duplicates beyond the watermark are the batch layer's job)."""
     return (
-        transcript_stream.withWatermark("ts", watermark)
+        stream.writeStream.foreachBatch(handle)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def streaming_exact_dedup(transcript_stream: DataFrame) -> DataFrame:
+    """Suppress exact-duplicate turns in-flight: state-bounded by a 1-hour
+    watermark on `ts` (late duplicates beyond it are the batch layer's job)."""
+    return (
+        transcript_stream.withWatermark("ts", "1 hour")
         .withColumn("text_md5", F.md5(F.col("text").cast("binary")))
         .dropDuplicatesWithinWatermark(["text_md5"])
     )

@@ -494,7 +494,8 @@ def test_cap_pair_degree_thins_hot_docs_deterministically(spark):
     rows2 = {(r["conv_a"], r["conv_b"]) for r in cap_pair_degree(pairs, cap).collect()}
     assert rows == rows2
     out.unpersist()
-    # the knob routes through candidate_pairs via DedupConfig
+    # the knob is a DedupConfig field; run_pipeline applies the cap
+    # (test_degree_cap_dropped_edges_metered)
     assert DedupConfig(max_pair_degree=123).max_pair_degree == 123
 
 

@@ -13,7 +13,7 @@ from deduputil_spark.operators.assemble import assemble_documents
 from deduputil_spark.operators.chunk import chunk_documents
 from deduputil_spark.operators.verify import (
     _lcs_components,
-    bsim_similarity,
+    bsim_components,
     lcs_verify_components,
     pair_chunk_sequences,
 )
@@ -98,9 +98,9 @@ def test_bsim_and_lcs_on_spark(spark, transcripts, corpus):
     truth = corpus.truth_pairs
     exact = truth[truth["kind"] == "exact"][["conv_a", "conv_b"]]
     pairs = spark.createDataFrame(exact)
-    bs = bsim_similarity(pairs, chunks)
-    for r in bs.collect():
-        assert r["bsim"] == pytest.approx(1.0), r
+    for r in bsim_components(pairs, chunks).collect():
+        # bsim = 2·w_inter/wsum == 1.0, checked in integers
+        assert 2 * r["w_inter"] == r["wsum"] > 0, r
     seqs = pair_chunk_sequences(pairs, chunks)
     rows = lcs_verify_components(seqs).collect()
     assert rows, "exact pairs must have chunk sequences"
