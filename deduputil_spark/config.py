@@ -22,6 +22,8 @@ import hashlib
 import json
 from dataclasses import asdict, dataclass
 
+from deduputil_spark.functions.hashes import BLOCK_WIN
+
 
 @dataclass(frozen=True)
 class DedupConfig:
@@ -70,6 +72,10 @@ class DedupConfig:
         # block_size is a valid (and reference-compatible) configuration
         if self.block_size <= 0:
             raise ValueError(f"block_size {self.block_size} must be positive")
+        # the skip-ahead after each cut is block_min_size - BLOCK_WIN bytes
+        # (reference dedup.c:460); a negative skip has no reference meaning
+        if self.block_min_size < BLOCK_WIN:
+            raise ValueError(f"block_min_size {self.block_min_size} must be at least BLOCK_WIN ({BLOCK_WIN})")
 
     def config_hash(self) -> str:
         """Stable 12-hex digest of every semantic knob; stamped on checkpoints."""

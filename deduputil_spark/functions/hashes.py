@@ -173,18 +173,17 @@ def rabin_bugcompat_scalar():
     return fn
 
 
-def rabin_window_hashes(data: bytes, win: int = BLOCK_WIN) -> np.ndarray:
-    """rabinhash32(poly=1) of every length-`win` window, vectorized across
-    positions (win/4 table-gather rounds over all windows at once)."""
+def rabin_window_hashes(data: bytes) -> np.ndarray:
+    """rabinhash32(poly=1) of every length-`BLOCK_WIN` window, vectorized across
+    positions (BLOCK_WIN/4 table-gather rounds over all windows at once)."""
     t32, t40, t48, t56 = _get_rabin_tables()
     a = np.frombuffer(data, dtype=np.uint8).astype(np.uint32)
-    n = len(a) - win + 1
+    n = len(a) - BLOCK_WIN + 1
     if n <= 0:
         return np.zeros(0, dtype=np.uint64)
-    assert win % 4 == 0, "window must be multiple of 4 for the vectorized path"
     w = np.zeros(n, dtype=np.uint32)
     idx = np.arange(n)
-    for k in range(0, win, 4):
+    for k in range(0, BLOCK_WIN, 4):
         shifted = (
             t32[w & 0xFF]
             ^ t40[(w >> np.uint32(8)) & 0xFF]
@@ -222,16 +221,16 @@ def elf_hash(data: bytes) -> int:
     return h & 0x7FFFFFFF
 
 
-def elf_window_hashes(data: bytes, win: int = BLOCK_WIN) -> np.ndarray:
-    """ELF_hash of every length-`win` window, vectorized across positions
-    (win sequential steps, each a full-array op)."""
+def elf_window_hashes(data: bytes) -> np.ndarray:
+    """ELF_hash of every length-`BLOCK_WIN` window, vectorized across positions
+    (BLOCK_WIN sequential steps, each a full-array op)."""
     a = np.frombuffer(data, dtype=np.int8).astype(np.int64)
-    n = len(a) - win + 1
+    n = len(a) - BLOCK_WIN + 1
     if n <= 0:
         return np.zeros(0, dtype=np.uint64)
     h = np.zeros(n, dtype=np.int64)
     idx = np.arange(n)
-    for k in range(win):
+    for k in range(BLOCK_WIN):
         h = ((h << 4) + a[idx + k]) & U32
         x = h & 0xF0000000
         nz = x != 0
@@ -345,7 +344,7 @@ def _signed_vals_u64(data: bytes) -> np.ndarray:
     return (np.frombuffer(data, dtype=np.int8).astype(np.int64) & U32).astype(np.uint64)
 
 
-def _window_recurrence(data: bytes, win: int, init: int, step, signed: bool = True) -> np.ndarray:
+def _window_recurrence(data: bytes, init: int, step, signed: bool = True) -> np.ndarray:
     """Vectorize a byte recurrence across every window position.
 
     `step(h, c, k) -> h'` over uint64 lanes; h is pre-masked to 32 bits on
@@ -355,26 +354,26 @@ def _window_recurrence(data: bytes, win: int, init: int, step, signed: bool = Tr
         a = _signed_vals_u64(data)
     else:
         a = np.frombuffer(data, dtype=np.uint8).astype(np.uint64)
-    n = len(a) - win + 1
+    n = len(a) - BLOCK_WIN + 1
     if n <= 0:
         return np.zeros(0, dtype=np.uint64)
     h = np.full(n, init, dtype=np.uint64)
-    for k in range(win):
+    for k in range(BLOCK_WIN):
         h = step(h, a[k : k + n], k) & _U32_64
     return h & _M31_64
 
 
-def simple_window_hashes(data: bytes, win: int = BLOCK_WIN) -> np.ndarray:
-    return _window_recurrence(data, win, 0, lambda h, c, k: h * np.uint64(31) + c, signed=False)
+def simple_window_hashes(data: bytes) -> np.ndarray:
+    return _window_recurrence(data, 0, lambda h, c, k: h * np.uint64(31) + c, signed=False)
 
 
-def rs_window_hashes(data: bytes, win: int = BLOCK_WIN) -> np.ndarray:
-    return _window_recurrence(data, win, 0, lambda h, c, k: h * np.uint64(_RS_A[k]) + c)
+def rs_window_hashes(data: bytes) -> np.ndarray:
+    return _window_recurrence(data, 0, lambda h, c, k: h * np.uint64(_RS_A[k]) + c)
 
 
-def js_window_hashes(data: bytes, win: int = BLOCK_WIN) -> np.ndarray:
+def js_window_hashes(data: bytes) -> np.ndarray:
     return _window_recurrence(
-        data, win, 1315423911, lambda h, c, k: h ^ ((h << np.uint64(5)) + c + (h >> np.uint64(2)))
+        data, 1315423911, lambda h, c, k: h ^ ((h << np.uint64(5)) + c + (h >> np.uint64(2)))
     )
 
 
@@ -384,22 +383,22 @@ def _pjw_step(h, c, k):
     return np.where(t != 0, (h ^ (t >> np.uint64(24))) & np.uint64(0x0FFFFFFF), h)
 
 
-def pjw_window_hashes(data: bytes, win: int = BLOCK_WIN) -> np.ndarray:
-    return _window_recurrence(data, win, 0, _pjw_step)
+def pjw_window_hashes(data: bytes) -> np.ndarray:
+    return _window_recurrence(data, 0, _pjw_step)
 
 
-def bkdr_window_hashes(data: bytes, win: int = BLOCK_WIN) -> np.ndarray:
-    return _window_recurrence(data, win, 0, lambda h, c, k: h * np.uint64(131) + c)
+def bkdr_window_hashes(data: bytes) -> np.ndarray:
+    return _window_recurrence(data, 0, lambda h, c, k: h * np.uint64(131) + c)
 
 
-def sdbm_window_hashes(data: bytes, win: int = BLOCK_WIN) -> np.ndarray:
+def sdbm_window_hashes(data: bytes) -> np.ndarray:
     return _window_recurrence(
-        data, win, 0, lambda h, c, k: c + (h << np.uint64(6)) + (h << np.uint64(16)) - h
+        data, 0, lambda h, c, k: c + (h << np.uint64(6)) + (h << np.uint64(16)) - h
     )
 
 
-def djb_window_hashes(data: bytes, win: int = BLOCK_WIN) -> np.ndarray:
-    return _window_recurrence(data, win, 5381, lambda h, c, k: h + (h << np.uint64(5)) + c)
+def djb_window_hashes(data: bytes) -> np.ndarray:
+    return _window_recurrence(data, 5381, lambda h, c, k: h + (h << np.uint64(5)) + c)
 
 
 def _ap_step(h, c, k):
@@ -408,24 +407,23 @@ def _ap_step(h, c, k):
     return h ^ (~((h << np.uint64(11)) ^ c ^ (h >> np.uint64(5))))
 
 
-def ap_window_hashes(data: bytes, win: int = BLOCK_WIN) -> np.ndarray:
-    return _window_recurrence(data, win, 0, _ap_step)
+def ap_window_hashes(data: bytes) -> np.ndarray:
+    return _window_recurrence(data, 0, _ap_step)
 
 
-def crc_window_hashes(data: bytes, win: int = BLOCK_WIN) -> np.ndarray:
+def crc_window_hashes(data: bytes) -> np.ndarray:
     """CRC_hash of every window, via parity-split cumulative byte sums (the
     LE word layout means low bytes sit at even in-window offsets)."""
-    assert win % 2 == 0, "odd windows would leave a trailing odd byte"
     a = np.frombuffer(data, dtype=np.uint8).astype(np.int64)
-    n = len(a) - win + 1
+    n = len(a) - BLOCK_WIN + 1
     if n <= 0:
         return np.zeros(0, dtype=np.uint64)
     even_mask = np.arange(len(a)) % 2 == 0
     ce = np.concatenate(([0], np.cumsum(np.where(even_mask, a, 0))))
     ct = np.concatenate(([0], np.cumsum(a)))
     idx = np.arange(n)
-    even_abs = ce[idx + win] - ce[idx]          # bytes at even ABSOLUTE positions
-    total = ct[idx + win] - ct[idx]
+    even_abs = ce[idx + BLOCK_WIN] - ce[idx]  # bytes at even ABSOLUTE positions
+    total = ct[idx + BLOCK_WIN] - ct[idx]
     low = np.where(idx % 2 == 0, even_abs, total - even_abs)
     s = low + ((total - low) << 8)
     s = (s >> 16) + (s & 0xFFFF)
@@ -471,8 +469,6 @@ def cdc_cuts_ref(
     block_size: int = 4096,
     min_size: int = 512,
     max_size: int = 32768,
-    win: int = BLOCK_WIN,
-    cdc_r: int = CDC_R,
     cut_hash: str = "adler",
 ) -> list[int]:
     """Byte-at-a-time transliteration of /root/reference/src/dedup.c:402-546
@@ -488,24 +484,26 @@ def cdc_cuts_ref(
     p = 0  # block start
     hkey = 0
     while True:
-        h = p + (min_size - win)  # skip-ahead: bytes [p, h) enter block unhashed
-        if h + win > n:
+        h = p + (min_size - BLOCK_WIN)  # skip-ahead: bytes [p, h) enter block unhashed
+        if h + BLOCK_WIN > n:
             break
         fresh = True
-        while h + win <= n:
+        while h + BLOCK_WIN <= n:
             if cut_hash == "adler":
                 if fresh:
-                    hkey = adler32_checksum(data[h : h + win])
+                    hkey = adler32_checksum(data[h : h + BLOCK_WIN])
                     fresh = False
                 else:
-                    hkey = adler32_rolling(hkey, win, int(signed[h - 1]), int(signed[h + win - 1]))
+                    hkey = adler32_rolling(
+                        hkey, BLOCK_WIN, int(signed[h - 1]), int(signed[h + BLOCK_WIN - 1])
+                    )
             else:  # non-rolling path (g_rolling_hash == 0): full rehash each window
-                stop = data.find(b"\x00", h, h + win)  # C strlen truncation
-                end = h + win if stop == -1 else stop
+                stop = data.find(b"\x00", h, h + BLOCK_WIN)  # C strlen truncation
+                end = h + BLOCK_WIN if stop == -1 else stop
                 hkey = scalar_fn(data[h:end])
-            if hkey % block_size == cdc_r:
-                cuts.append(h + win)
-                p = h + win
+            if hkey % block_size == CDC_R:
+                cuts.append(h + BLOCK_WIN)
+                p = h + BLOCK_WIN
                 break
             h += 1
             if h - p == max_size:
@@ -522,45 +520,43 @@ def cdc_cuts_fast(
     block_size: int = 4096,
     min_size: int = 512,
     max_size: int = 32768,
-    win: int = BLOCK_WIN,
-    cdc_r: int = CDC_R,
     cut_hash: str = "adler",
 ) -> list[int]:
     """Vectorized CDC walk — identical cuts to `cdc_cuts_ref` (golden-tested).
 
     adler path: cut condition reduces to sliding signed-byte window sum
-    ≡ cdc_r (mod block_size) because block_size | 2^16 (see module docstring).
+    ≡ CDC_R (mod block_size) because block_size | 2^16 (see module docstring).
     rabin path: full window hashes vectorized across positions.
     """
     n = len(data)
-    if n - win + 1 <= 0:
+    if n - BLOCK_WIN + 1 <= 0:
         return []
     if cut_hash == "adler" and ((block_size & (block_size - 1)) != 0 or block_size > 65536):
         # byte-sum residue shortcut requires block_size | 2^16; fall back to
         # the scalar reference walk rather than silently diverging
-        return cdc_cuts_ref(data, block_size, min_size, max_size, win, cdc_r, cut_hash)
+        return cdc_cuts_ref(data, block_size, min_size, max_size, cut_hash)
     if cut_hash == "adler":
         s = np.frombuffer(data, dtype=np.int8).astype(np.int64)
         c = np.concatenate(([0], np.cumsum(s)))
-        wsum = c[win:] - c[:-win]  # wsum[h] = sum(data[h:h+win])
-        match = (np.mod(wsum, block_size) == cdc_r)
+        wsum = c[BLOCK_WIN:] - c[:-BLOCK_WIN]  # wsum[h] = sum(data[h:h+BLOCK_WIN])
+        match = (np.mod(wsum, block_size) == CDC_R)
     else:
-        hk = CUT_HASH_WINDOW[cut_hash](data, win)
+        hk = CUT_HASH_WINDOW[cut_hash](data)
         # NUL-containing windows hash differently (strlen); handle lazily below
-        match = (hk % np.uint64(block_size)) == np.uint64(cdc_r)
+        match = (hk % np.uint64(block_size)) == np.uint64(CDC_R)
         if b"\x00" in data:
             scalar = CUT_HASH_SCALAR[cut_hash]
             zero_pos = np.frombuffer(data, dtype=np.uint8) == 0
             zc = np.concatenate(([0], np.cumsum(zero_pos)))
-            has_nul = (zc[win:] - zc[:-win]) > 0
+            has_nul = (zc[BLOCK_WIN:] - zc[:-BLOCK_WIN]) > 0
             bad = np.flatnonzero(has_nul)
             for h in bad:
-                stop = data.find(b"\x00", h, h + win)
-                match[h] = scalar(data[h:stop]) % block_size == cdc_r
-    return cdc_walk(np.flatnonzero(match), n, min_size, max_size, win)
+                stop = data.find(b"\x00", h, h + BLOCK_WIN)
+                match[h] = scalar(data[h:stop]) % block_size == CDC_R
+    return cdc_walk(np.flatnonzero(match), n, min_size, max_size)
 
 
-def cdc_walk(match_pos: np.ndarray, n: int, min_size: int, max_size: int, win: int = BLOCK_WIN) -> list[int]:
+def cdc_walk(match_pos: np.ndarray, n: int, min_size: int, max_size: int) -> list[int]:
     """The min/skip/max walk of `cdc_cuts_ref` over precomputed candidates:
     `match_pos` holds, ascending, every window head whose hash meets the cut
     condition in an `n`-byte input.  O(number of cuts) `searchsorted` probes;
@@ -568,15 +564,15 @@ def cdc_walk(match_pos: np.ndarray, n: int, min_size: int, max_size: int, win: i
     cuts: list[int] = []
     nm = len(match_pos)
     p = 0
-    last_head = n - win  # last evaluable window head
+    last_head = n - BLOCK_WIN  # last evaluable window head
     while True:
-        h0 = p + (min_size - win)
-        if h0 + win > n:
+        h0 = p + (min_size - BLOCK_WIN)
+        if h0 + BLOCK_WIN > n:
             break
         hi_cap = p + max_size - 1  # last head before forced max cut
         j = int(np.searchsorted(match_pos, h0))
         if j < nm and match_pos[j] <= min(hi_cap, last_head):
-            cut = int(match_pos[j]) + win
+            cut = int(match_pos[j]) + BLOCK_WIN
         elif hi_cap <= last_head:
             cut = p + max_size  # every head evaluated, none matched
         else:

@@ -22,8 +22,9 @@ One function, `run_pipeline`, builds it in two modes:
   `StageMetric` (stage, rows_out counted on the table just written, wall_ms,
   partitions, config_hash, resumed).
 
-With `max_pair_degree` set, both modes apply `lsh.cap_pair_degree` here, as
-the separate stages `candidates_raw` and `candidates`; checkpointed, a
+With `max_pair_degree` set, both modes apply `lsh.cap_pair_degree` here.
+By default only the capped pairs are persisted; checkpointed, the raw and
+capped pairs are the stages `candidates_raw` and `candidates`, and a
 `degree_cap_dropped` row records the difference.
 """
 
@@ -132,7 +133,10 @@ def run_pipeline(
     if cfg.max_pair_degree is None:
         cands = r.run("candidates", lambda: candidate_pairs(bands, cfg, persist_bands=False))
     else:
-        raw = r.run("candidates_raw", lambda: candidate_pairs(bands, cfg, persist_bands=False))
+        if checkpoint_dir:
+            raw = r.run("candidates_raw", lambda: candidate_pairs(bands, cfg, persist_bands=False))
+        else:  # only the cap reads the uncapped pairs: nothing to persist
+            raw = candidate_pairs(bands, cfg, persist_bands=False)
         cands = r.run("candidates", lambda: cap_pair_degree(raw, cfg.max_pair_degree))
         if checkpoint_dir:
             # the dropped-edge count is its own metrics row — thinning is

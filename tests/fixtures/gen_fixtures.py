@@ -41,7 +41,7 @@ import numpy as np
 import pandas as pd
 
 from deduputil_spark.config import DedupConfig
-from deduputil_spark.functions.hashes import BLOCK_WIN, CDC_R, cdc_cuts_ref
+from deduputil_spark.functions.hashes import cdc_cuts_ref
 
 FIXTURE_DIR = os.path.dirname(os.path.abspath(__file__))
 DOC_SEP = "\n"
@@ -68,8 +68,7 @@ def gen_cdc_chunk_stats(docs: pd.DataFrame) -> pd.DataFrame:
     rows = []
     for cid, text in zip(docs["conv_id"], docs["doc_text"]):
         cuts = cdc_cuts_ref(
-            text.encode("utf-8"), cfg.block_size, cfg.block_min_size,
-            cfg.block_max_size, BLOCK_WIN, CDC_R, cfg.cut_hash,
+            text.encode("utf-8"), cfg.block_size, cfg.block_min_size, cfg.block_max_size, cfg.cut_hash
         )
         if cuts:
             rows.append((cid, len(cuts), cuts[-1]))

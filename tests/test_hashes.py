@@ -46,7 +46,7 @@ def test_elf_hash_vectorized_matches_scalar():
     from deduputil_spark.functions.hashes import elf_hash, elf_window_hashes
 
     data = bytes(rng.randrange(1, 256) for _ in range(300))
-    hw = elf_window_hashes(data, 48)
+    hw = elf_window_hashes(data)
     for i in range(0, len(data) - 48 + 1, 11):
         assert int(hw[i]) == elf_hash(data[i : i + 48])
 
@@ -80,7 +80,7 @@ def test_adler_collision_pair():
 
 def test_rabin_windows_vectorized():
     data = bytes(rng.randrange(256) for _ in range(500))
-    hw = rabin_window_hashes(data, 48)
+    hw = rabin_window_hashes(data)
     for i in range(0, len(data) - 48 + 1, 13):
         assert int(hw[i]) == rabin_hash32(data[i : i + 48])
 
@@ -125,6 +125,26 @@ def test_config_block_size_matches_reference_binary_domain():
     DedupConfig(block_size=1000, cut_hash="rabin")
 
 
+def test_config_rejects_min_size_below_window():
+    """block_min_size < BLOCK_WIN would make the first skip-ahead head
+    negative, where cdc_cuts_fast and cdc_cuts_ref disagree; the config
+    rejects it, and at the bound the two walks cut alike."""
+    import numpy as np
+    import pytest as _pytest
+
+    from deduputil_spark.config import DedupConfig
+    from deduputil_spark.functions.hashes import BLOCK_WIN, cdc_cuts_fast, cdc_cuts_ref
+
+    with _pytest.raises(ValueError, match="block_min_size"):
+        DedupConfig(block_size=64, block_min_size=BLOCK_WIN - 1, block_max_size=256)
+    DedupConfig(block_size=64, block_min_size=BLOCK_WIN, block_max_size=256)
+    r = np.random.default_rng(3)
+    for _ in range(10):
+        data = bytes(r.integers(0, 256, 3000, dtype=np.uint8))
+        fast = cdc_cuts_fast(data, 64, BLOCK_WIN, 256)
+        assert fast and fast == cdc_cuts_ref(data, 64, BLOCK_WIN, 256)
+
+
 @pytest.mark.parametrize(
     "fn", ["simple", "rs", "js", "pjw", "elf", "bkdr", "sdbm", "djb", "ap", "crc", "rabin"]
 )
@@ -132,7 +152,7 @@ def test_cut_hash_window_matches_scalar(fn):
     from deduputil_spark.functions.hashes import CUT_HASH_SCALAR, CUT_HASH_WINDOW
 
     data = bytes(rng.randrange(1, 256) for _ in range(500))
-    hw = CUT_HASH_WINDOW[fn](data, 48)
+    hw = CUT_HASH_WINDOW[fn](data)
     sf = CUT_HASH_SCALAR[fn]
     for i in range(0, len(data) - 48 + 1, 13):
         assert int(hw[i]) == sf(data[i : i + 48]), (fn, i)

@@ -7,9 +7,8 @@
   string does not count.  A name that only tests reach is dead weight unless
   it is listed below with its reason.
 - Options: every defaulted parameter of a public top-level function in
-  `deduputil_spark/` (outside `functions/hashes.py`, whose reference walks
-  tests drive with their own window and residue) must be passed, by keyword
-  or by position, by some call of that function in shipping code or tests.
+  `deduputil_spark/` must be passed, by keyword or by position, by some call
+  of that function in shipping code or tests.
   Every `DedupConfig` field must be read as `.field` by shipping code outside
   `config.py` and set by keyword in some `DedupConfig(...)` or `replace(...)`
   call.  An option no caller sets is a constant with extra code around it.
@@ -33,7 +32,6 @@ SHIPPING = [
     *sorted(p for p in (ROOT / "perfbench").rglob("*.py") if ".work" not in p.parts),  # not its scratch
 ]
 TESTS = sorted((ROOT / "tests").rglob("*.py"))
-REFERENCE_WALKS = PACKAGE / "functions" / "hashes.py"
 
 # Reference semantics kept on purpose although only tests call them.
 ALLOWED_TEST_ONLY = {
@@ -122,8 +120,6 @@ def _unset_options() -> set[str]:
     calls = _calls(SHIPPING + TESTS)
     unset = set()
     for path in sorted(PACKAGE.rglob("*.py")):
-        if path == REFERENCE_WALKS:
-            continue
         for fn in _tree(path).body:
             if not isinstance(fn, ast.FunctionDef) or fn.name.startswith("_"):
                 continue

@@ -118,7 +118,7 @@ def test_lcs_weighted_certified_on_real_cdc_chunks(spark):
         spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
         .select(F.col("doc_id").cast("string").alias("conv_id"), F.col("text").alias("doc_text"))
     )
-    cfg = DedupConfig(block_size=64, block_min_size=16, block_max_size=256)
+    cfg = DedupConfig(block_size=64, block_min_size=48, block_max_size=256)
     # near-dup twins built FROM the real docs (sf0.001 plants no exact dups):
     # same prefix, mutated tail -> high-but-not-1.0 LCS over shared chunks
     twins = docs.limit(12).select(
