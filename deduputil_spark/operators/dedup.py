@@ -10,9 +10,9 @@ Reference semantics re-realized relationally:
   reference's collision-tolerant `[id_count, bid…]` entries).
 - dense unique-block numbering `g_unique_block_nr`
   (/root/reference/src/dedup.c:40,367-375): deterministic dense ids from a
-  two-pass range-partitioned rank (per-partition counts -> driver offsets ->
-  partition-local row_number), NOT a single-partition global window — this is
-  the piece that must survive 100 TB.
+  range partition's own row positions (per-partition counts -> partition
+  offset + row position), NOT a single-partition global window — this is the
+  piece that must survive 100 TB.
 - per-file bid array (/root/reference/src/dedup.c:391-392): sort_array of
   (chunk_idx, bid) structs per conv_id.
 - stats (/root/reference/src/dedup.c:1273-1385): refcounts + dedup rate as
@@ -22,43 +22,47 @@ Reference semantics re-realized relationally:
 from __future__ import annotations
 
 from dataclasses import dataclass
+from itertools import accumulate
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# monotonically_increasing_id() = (partition index << 33) + row position
+_MID_SHIFT = 33
 
 
 def assign_dense_ids(df: DataFrame, order_cols: list[str], id_col: str = "bid") -> DataFrame:
     """Deterministic dense 0-based ids in global `order_cols` order, scalably.
 
-    Two-pass: range-partition + in-partition sort, count rows per partition
-    (tiny driver collect), then partition-local row_number + broadcast offset.
-    Range boundaries are sample-based, but ids depend only on the GLOBAL
-    order, which disjoint ordered ranges preserve — so the assignment is
-    deterministic for a given input set regardless of sampled boundaries.
+    Range-partition + in-partition sort, tag each row with its (partition,
+    position) and freeze both with an eager checkpoint; one tiny collect
+    counts rows per partition, and a row's id is its partition's offset (a
+    literal array: only `max(defaultParallelism, 8)` partitions) plus its
+    position.  Range boundaries are sample-based, but ids depend only on the
+    GLOBAL order, which disjoint ordered ranges preserve.
     """
     nparts = max(df.sparkSession.sparkContext.defaultParallelism, 8)
     parted = (
         df.repartitionByRange(nparts, *[F.col(c) for c in order_cols])
         .sortWithinPartitions(*order_cols)
-        .withColumn("_part", F.spark_partition_id())
+        .withColumn("_mid", F.monotonically_increasing_id())
+        .localCheckpoint(eager=True)  # freeze partitions and positions
     )
-    parted = parted.localCheckpoint(eager=True)  # freeze partitioning for both passes
-    counts = {r["_part"]: r["cnt"] for r in parted.groupBy("_part").agg(F.count(F.lit(1)).alias("cnt")).collect()}
-    parts = sorted(counts)
-    sizes = np.array([counts[p] for p in parts], dtype=np.int64)
-    # Arrow createDataFrame(pandas): no pickled Python RDD for the offsets
-    offset_df = df.sparkSession.createDataFrame(
-        pd.DataFrame({"part": np.array(parts, dtype=np.int32), "_offset": np.cumsum(sizes) - sizes}),
-        "part int, _offset bigint",
-    )
-    w = Window.partitionBy("_part").orderBy(*order_cols)
-    return (
-        parted.withColumn("_rn", F.row_number().over(w))
-        .join(F.broadcast(offset_df), F.col("_part") == F.col("part"), "inner")
-        .withColumn(id_col, (F.col("_offset") + F.col("_rn") - 1).cast("long"))
-        .drop("_part", "_rn", "part", "_offset")
+    part = F.shiftright("_mid", _MID_SHIFT).cast("int")
+    counts = dict(parted.groupBy(part).count().collect())
+    sizes = [counts.get(p, 0) for p in range(max(counts, default=0) + 1)]
+    offsets = F.array(*[F.lit(o).cast("long") for o in accumulate([0] + sizes[:-1])])
+    pos = F.col("_mid").bitwiseAND((1 << _MID_SHIFT) - 1)
+    return parted.withColumn(id_col, offsets[part] + pos).drop("_mid")
+
+
+def _unique_chunks(body: DataFrame) -> DataFrame:
+    """The dedup decision: one group per verify key `(md5, chunk_bytes)`,
+    with its length, weak hash and reference count."""
+    return body.groupBy("md5", "chunk_bytes").agg(
+        F.first("chunk_len").alias("chunk_len"),
+        F.first("weak32").alias("weak32"),
+        F.count(F.lit(1)).alias("refcount"),
     )
 
 
@@ -67,13 +71,8 @@ def build_block_store(chunks: DataFrame) -> DataFrame:
 
     One hash-aggregate shuffle (Catalyst partial+final) + the id pass.
     """
-    body = chunks.filter(~F.col("is_tail"))
-    distinct = body.groupBy("md5", "chunk_bytes").agg(
-        F.first("chunk_len").alias("chunk_len"),
-        F.first("weak32").alias("weak32"),
-        F.count(F.lit(1)).alias("refcount"),
-    )
-    return assign_dense_ids(distinct, ["md5", "chunk_bytes"], "bid")
+    unique = _unique_chunks(chunks.filter(~F.col("is_tail")))
+    return assign_dense_ids(unique, ["md5", "chunk_bytes"], "bid")
 
 
 def build_file_meta(chunks: DataFrame, blocks: DataFrame) -> DataFrame:
@@ -149,15 +148,9 @@ def remove_documents(
     (old order preserved), remap membership arrays via an id map join.
     """
     surviving = file_meta.join(remove_ids.select("conv_id"), "conv_id", "left_anti")
-    live_refs = surviving.select(F.explode("bids").alias("bid")).groupBy("bid").agg(
-        F.count(F.lit(1)).alias("refcount")
-    )
-    live_blocks = (
-        blocks.drop("refcount")
-        .join(live_refs, "bid", "inner")
-    )
+    live_blocks = blocks.drop("refcount").join(refcounts(surviving), "bid", "inner")
     # compact: new id = rank of old id among survivors (dense, order-preserving)
-    # via the two-pass range-partitioned rank — a global Window.orderBy would
+    # via the range-partitioned numbering — a global Window.orderBy would
     # sort the entire surviving block store in ONE task
     remap = assign_dense_ids(live_blocks.select("bid"), ["bid"], "new_bid")
     new_blocks = (
@@ -202,14 +195,8 @@ def append_documents(
     joined onto the new documents' meta rows so appended packages keep the
     same per-turn metadata the create path stores.
     """
-    body = new_chunks.filter(~F.col("is_tail"))
-    existing_keys = blocks.select("md5", "chunk_bytes")
-    novel = (
-        body.join(existing_keys, ["md5", "chunk_bytes"], "left_anti")
-        .groupBy("md5", "chunk_bytes")
-        .agg(F.first("chunk_len").alias("chunk_len"), F.first("weak32").alias("weak32"),
-             F.count(F.lit(1)).alias("refcount"))
-    )
+    unique = _unique_chunks(new_chunks.filter(~F.col("is_tail")))
+    novel = unique.join(blocks.select("md5", "chunk_bytes"), ["md5", "chunk_bytes"], "left_anti")
     start = blocks.agg(F.max("bid")).collect()[0][0]
     start = -1 if start is None else int(start)
     novel_ids = assign_dense_ids(novel, ["md5", "chunk_bytes"], "bid").withColumn(
@@ -218,7 +205,7 @@ def append_documents(
     # pre-existing blocks referenced by the appended batch gain refcount —
     # the reference's append path re-counts every reuse (dedup.c:329-395 on
     # the rebuilt table); without this, stats under-report after append
-    add_refs = body.groupBy("md5", "chunk_bytes").agg(F.count(F.lit(1)).alias("_add_ref"))
+    add_refs = unique.select("md5", "chunk_bytes", F.col("refcount").alias("_add_ref"))
     updated_existing = (
         blocks.join(add_refs, ["md5", "chunk_bytes"], "left")
         .withColumn("refcount", F.col("refcount") + F.coalesce(F.col("_add_ref"), F.lit(0)))

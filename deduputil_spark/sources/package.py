@@ -55,7 +55,7 @@ def create_package(
     chunks = chunk_documents(docs, cfg)
     if cfg.compress_blocks:  # reference -z: dedup keys over compressed bytes
         chunks = compress_chunk_blocks(chunks)
-    blocks = track(build_block_store(chunks))
+    blocks = build_block_store(chunks)
     meta = build_file_meta(chunks, blocks)
     # per-turn metadata rides in file_meta (the reference stores mode/atime/
     # mtime in its metadata entry, /root/reference/src/dedup.c:838-851) so

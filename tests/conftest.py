@@ -24,3 +24,25 @@ def transcripts(spark, corpus):
     df = spark.createDataFrame(corpus.transcripts)
     df = df.withColumn("turn_idx", df["turn_idx"].cast("int"))
     return df.cache()
+
+
+def _plan_nodes(node):
+    """Every node of an executed physical plan, descending through AQE's
+    final plan and its query stages (a cached relation's own plan is not
+    part of the query and is not visited)."""
+    yield node
+    cls = node.getClass().getSimpleName()
+    if cls == "AdaptiveSparkPlanExec":
+        yield from _plan_nodes(node.executedPlan())
+    elif cls.endswith("QueryStageExec"):
+        yield from _plan_nodes(node.plan())
+    else:
+        kids = node.children()
+        for i in range(kids.size()):
+            yield from _plan_nodes(kids.apply(i))
+
+
+@pytest.fixture(scope="session")
+def plan_nodes():
+    """The physical-plan walker, for tests that pin a plan's shape."""
+    return _plan_nodes

@@ -103,23 +103,7 @@ def test_entry_smoke(spark):
     assert len(df.schema) > 0
 
 
-def _plan_nodes(node):
-    """Every node of an executed physical plan, descending through AQE's
-    final plan and its query stages (a cached relation's own plan is not
-    part of the query and is not visited)."""
-    yield node
-    cls = node.getClass().getSimpleName()
-    if cls == "AdaptiveSparkPlanExec":
-        yield from _plan_nodes(node.executedPlan())
-    elif cls.endswith("QueryStageExec"):
-        yield from _plan_nodes(node.plan())
-    else:
-        kids = node.children()
-        for i in range(kids.size()):
-            yield from _plan_nodes(kids.apply(i))
-
-
-def test_verified_pairs_shuffles_distinct_shingles_once(spark):
+def test_verified_pairs_shuffles_distinct_shingles_once(spark, plan_nodes):
     """q_verified_pairs reads its distinct-shingle table three times (sizes
     and both join sides); the executed plan must shuffle it once and reuse
     that exchange for the other two reads."""
@@ -127,7 +111,7 @@ def test_verified_pairs_shuffles_distinct_shingles_once(spark):
     df.collect()
     shingle_key = re.compile(r"hashpartitioning\(conv_id#\d+, shingle#\d+, \d+\)")
     exchanges = reused = 0
-    for node in _plan_nodes(df._jdf.queryExecution().executedPlan()):
+    for node in plan_nodes(df._jdf.queryExecution().executedPlan()):
         cls = node.getClass().getSimpleName()
         if cls == "ShuffleExchangeExec":
             exchanges += bool(shingle_key.fullmatch(node.outputPartitioning().toString()))

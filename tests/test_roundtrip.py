@@ -4,6 +4,9 @@ collision separation and stats sanity."""
 
 from __future__ import annotations
 
+import random
+import string
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -12,6 +15,7 @@ from deduputil_spark.operators.assemble import assemble_documents, validate_asse
 from deduputil_spark.operators.chunk import chunk_documents, chunk_fsp_sql
 from deduputil_spark.operators.dedup import (
     append_documents,
+    assign_dense_ids,
     build_block_store,
     build_file_meta,
     dedup_stats,
@@ -32,6 +36,11 @@ def pipeline(request, spark, transcripts):
     return dict(cfg=cfg, docs=docs, chunks=chunks, blocks=blocks, meta=meta)
 
 
+def _bid_by_key(blocks) -> dict[tuple[str, bytes], int]:
+    rows = blocks.select("bid", "md5", "chunk_bytes").collect()
+    return {(r["md5"], bytes(r["chunk_bytes"])): r["bid"] for r in rows}
+
+
 def test_roundtrip_per_turn_equality(spark, transcripts, pipeline):
     recon = reconstruct_documents(pipeline["meta"], pipeline["blocks"])
     bad = roundtrip_mismatches(transcripts, recon)
@@ -47,6 +56,10 @@ def test_block_store_is_exact(pipeline):
     # dense 0..n-1
     mm = blocks.agg(F.min("bid"), F.max("bid")).collect()[0]
     assert mm[0] == 0 and mm[1] == n - 1
+    # bid = index of (md5, chunk_bytes) in sorted order: packages, append /
+    # remove renumbering and the benchmark's exact digest all rely on it
+    bids = _bid_by_key(blocks)
+    assert [bids[k] for k in sorted(bids)] == list(range(n))
 
 
 def test_exact_duplicate_convs_share_all_bids(spark, corpus, pipeline):
@@ -79,6 +92,41 @@ def test_deterministic_bids(spark, pipeline):
     assert a == b
 
 
+def test_block_store_plan_has_no_exchange(pipeline, plan_nodes):
+    """The numbering reads its checkpoint in place: no second shuffle of the
+    store (and its bytes) and no broadcast of per-partition offsets."""
+    blocks = build_block_store(pipeline["chunks"])
+    blocks.collect()
+    classes = {n.getClass().getSimpleName() for n in plan_nodes(blocks._jdf.queryExecution().executedPlan())}
+    assert not classes & {"ShuffleExchangeExec", "BroadcastExchangeExec"}, classes
+
+
+def test_assign_dense_ids_empty_and_sparse_partitions(spark):
+    empty = spark.createDataFrame([], "k long")
+    assert assign_dense_ids(empty, ["k"]).count() == 0
+    # 3 rows over max(defaultParallelism, 8) range partitions: most are empty
+    sparse = spark.createDataFrame([(30,), (10,), (20,)], "k long").repartition(8)
+    got = sorted((r["k"], r["bid"]) for r in assign_dense_ids(sparse, ["k"]).collect())
+    assert got == [(10, 0), (20, 1), (30, 2)]
+
+
+def test_append_numbers_novel_blocks_after_old_max_in_key_order(spark, transcripts, pipeline):
+    """Old bids stay; novel blocks get old max + 1 on, in (md5, chunk_bytes)
+    order (the reference continues g_unique_block_nr)."""
+    # 40 KB of unseen alphanumerics: the CDC window sum reaches its cut
+    # residue often enough for many novel blocks at the default sizes
+    rng = random.Random(11)
+    text = "".join(rng.choices(string.ascii_letters + string.digits, k=40000))
+    new_t = spark.createDataFrame([("znew02", 0, "user", text, None, None)], schema=transcripts.schema)
+    chunks2 = chunk_documents(assemble_documents(new_t), pipeline["cfg"])
+    old = _bid_by_key(pipeline["blocks"])
+    new = _bid_by_key(append_documents(pipeline["blocks"], pipeline["meta"], chunks2)[0])
+    assert {k: new[k] for k in old} == old
+    novel = sorted(set(new) - set(old))
+    assert len(novel) > 1
+    assert [new[k] for k in novel] == list(range(max(old.values()) + 1, len(new)))
+
+
 def test_remove_documents(spark, pipeline):
     meta, blocks = pipeline["meta"], pipeline["blocks"]
     victims = meta.select("conv_id").limit(5)
@@ -86,6 +134,8 @@ def test_remove_documents(spark, pipeline):
     n = nb.count()
     mm = nb.agg(F.min("bid"), F.max("bid")).collect()[0]
     assert mm[0] == 0 and mm[1] == n - 1  # renumbered densely
+    old, new = _bid_by_key(blocks), _bid_by_key(nb)
+    assert sorted(new, key=old.get) == sorted(new, key=new.get)  # survivors keep their order
     assert nm.count() == meta.count() - 5
     # surviving docs still reconstruct
     recon = reconstruct_documents(nm, nb)

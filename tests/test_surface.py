@@ -43,7 +43,6 @@ ALLOWED_TEST_ONLY = {
     "incremental_dedup_stream": "A4 streaming append of new transcripts into the block store",
     "streaming_exact_dedup": "A4 watermarked streaming exact-duplicate suppression",
     "rabin_bugcompat_scalar": "golden reference: the binary's call-parity rabin for the -f rabin_hash golden",
-    "refcounts": "A3 membership-side refcount that test_roundtrip compares the block store's against",
     "bdiff": "J3 block-level diff of two documents' chunk sequences",
     "pair_recall": "the BASELINE planted-pair recall gate",
     "create_package": "S3 `dedup -c`: write a package directory",
