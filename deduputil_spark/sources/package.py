@@ -77,6 +77,15 @@ def create_package(
     return st
 
 
+def package_exists(pkg_dir: str) -> bool:
+    """Whether `pkg_dir` holds a complete package: the manifest is written
+    last by `create_package` and swapped in by `_rewrite`.  `_recover` runs
+    first, because a crash at the manifest's rename leaves it only as
+    `manifest_tmp`; deciding before the repair would re-create the package."""
+    _recover(pkg_dir)
+    return os.path.exists(os.path.join(pkg_dir, "manifest", "_SUCCESS"))
+
+
 def open_package(spark: SparkSession, pkg_dir: str) -> dict[str, DataFrame]:
     _recover(pkg_dir)
     manifest = spark.read.parquet(_p(pkg_dir, "manifest"))

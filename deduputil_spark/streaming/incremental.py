@@ -1,14 +1,14 @@
 """Incremental / streaming dedup.
 
 The reference's append verb rebuilds its md5→bid table from the existing
-package and continues numbering (`dedup_append_prepare`,
-/root/reference/src/dedup.c:908-1077).  The Spark-native re-realization is a
-Structured Streaming micro-batch upsert: each batch of (complete)
-conversations is chunked and anti-joined against the persistent block store;
-novel blocks extend the bid space, membership rows append.  State lives in
-parquet tables (Iceberg on a real cluster — the io.py seam), so a crashed
-stream resumes from the last committed batch (checkpointLocation) with
-exactly-once semantics per micro-batch.
+package and continues numbering (`dedup_append_prepare`, src/dedup.c:908-1077).
+The Spark-native re-realization is a Structured Streaming micro-batch upsert
+into a dedup package (`sources/package.py`): the first batch of (complete)
+conversations creates the package (`dedup -c`) and every later batch appends
+to it (`dedup -a`).  The streamed state is therefore an ordinary package that
+`list_package`, `package_stats` and `extract_turns` read, and a crashed batch
+replays from the stream's checkpointLocation onto a package that the commit
+protocol in `package.py` has kept whole.
 
 Also provided: watermarked streaming exact-duplicate suppression
 (`dropDuplicatesWithinWatermark`) for the turn stream itself.
@@ -16,92 +16,47 @@ Also provided: watermarked streaming exact-duplicate suppression
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from deduputil_spark.config import DedupConfig
-from deduputil_spark.operators.assemble import assemble_documents
-from deduputil_spark.operators.chunk import chunk_documents
-from deduputil_spark.operators.dedup import append_documents, build_block_store, build_file_meta
+from deduputil_spark.sources.package import append_package, create_package, package_exists
 
 TRANSCRIPT_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
 )
 
 
-class DedupState:
-    """Parquet-backed blocks/file_meta state for the micro-batch upsert."""
+def apply_batch(pkg_dir: str, batch: DataFrame, cfg: DedupConfig) -> None:
+    """One micro-batch upsert of `batch` conversations into the package at
+    `pkg_dir`: create it on the first batch, append to it after that.
 
-    def __init__(self, spark: SparkSession, state_dir: str):
-        self.spark = spark
-        self.dir = state_dir
-        os.makedirs(state_dir, exist_ok=True)
-
-    @property
-    def blocks_path(self) -> str:
-        return os.path.join(self.dir, "blocks")
-
-    @property
-    def meta_path(self) -> str:
-        return os.path.join(self.dir, "file_meta")
-
-    def exists(self) -> bool:
-        return os.path.exists(os.path.join(self.blocks_path, "_SUCCESS"))
-
-    def read(self) -> tuple[DataFrame, DataFrame]:
-        return (
-            self.spark.read.parquet(self.blocks_path),
-            self.spark.read.parquet(self.meta_path),
-        )
-
-    def write(self, blocks: DataFrame, meta: DataFrame) -> None:
-        # stage-then-swap: write to tmp, re-read, overwrite (parquet cannot
-        # overwrite its own input mid-plan); Iceberg swaps snapshots instead
-        tmp_b, tmp_m = self.blocks_path + "_tmp", self.meta_path + "_tmp"
-        blocks.write.mode("overwrite").parquet(tmp_b)
-        meta.write.mode("overwrite").parquet(tmp_m)
-        self.spark.read.parquet(tmp_b).write.mode("overwrite").parquet(self.blocks_path)
-        self.spark.read.parquet(tmp_m).write.mode("overwrite").parquet(self.meta_path)
-
-
-def apply_batch(state: DedupState, batch: DataFrame, cfg: DedupConfig) -> None:
-    """One micro-batch upsert: dedup `batch` conversations against state.
-
-    Re-ingested conv_ids are dropped (the reference's path-dedup idempotence,
-    /root/reference/src/dedup.c:782-786) so replayed batches are no-ops."""
-    docs = assemble_documents(batch)
-    if state.exists():
-        blocks, meta = state.read()
-        docs = docs.join(meta.select("conv_id"), "conv_id", "left_anti")  # A4 idempotence
-        chunks = chunk_documents(docs, cfg)
-        new_blocks, new_meta = append_documents(blocks, meta, chunks)
+    `append_package` drops re-ingested conv_ids (the reference's path-dedup
+    idempotence, src/dedup.c:782-786), so a replayed batch is a no-op."""
+    spark = batch.sparkSession
+    if package_exists(pkg_dir):
+        append_package(spark, batch, pkg_dir, cfg)
     else:
-        chunks = chunk_documents(docs, cfg)
-        new_blocks = build_block_store(chunks)
-        new_meta = build_file_meta(chunks, new_blocks)
-    state.write(new_blocks, new_meta)
+        create_package(spark, batch, pkg_dir, cfg)
 
 
 def incremental_dedup_stream(
     spark: SparkSession,
     source_dir: str,
-    state_dir: str,
+    pkg_dir: str,
     checkpoint_dir: str,
     cfg: DedupConfig | None = None,
 ):
     """readStream over a parquet drop-zone of completed conversations ->
-    foreachBatch micro-batch upsert into the dedup state tables, run once
+    foreachBatch micro-batch upsert into the package at `pkg_dir`, run once
     over every file present (availableNow trigger)."""
     cfg = cfg or DedupConfig()
-    state = DedupState(spark, state_dir)
     stream = spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(source_dir)
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        apply_batch(state, batch_df, cfg)
+        apply_batch(pkg_dir, batch_df, cfg)
 
     return (
         stream.writeStream.foreachBatch(handle)

@@ -1,13 +1,16 @@
-"""Streaming incremental dedup: micro-batch upserts must converge to the same
-state as one batch run (streaming/batch equivalence), resume idempotently,
-and round-trip."""
+"""Streaming incremental dedup: micro-batch upserts into a package must
+converge to the same state as one batch run (streaming/batch equivalence),
+resume idempotently, survive a batch that dies mid-commit, and round-trip."""
 
 from __future__ import annotations
 
+import itertools
 import os
+import shutil
 import tempfile
 
 import pytest
+from pyspark.sql import DataFrameWriter
 from pyspark.sql import functions as F
 
 from deduputil_spark.config import DedupConfig
@@ -15,14 +18,30 @@ from deduputil_spark.operators.assemble import assemble_documents
 from deduputil_spark.operators.chunk import chunk_documents
 from deduputil_spark.operators.dedup import build_block_store, build_file_meta
 from deduputil_spark.operators.reconstruct import reconstruct_documents, roundtrip_mismatches
+from deduputil_spark.sources.package import (
+    create_package,
+    extract_turns,
+    list_package,
+    open_package,
+    package_stats,
+)
 from deduputil_spark.streaming.incremental import (
-    DedupState,
     apply_batch,
     incremental_dedup_stream,
     streaming_exact_dedup,
 )
 
 CFG = DedupConfig(block_size=256, block_min_size=64, block_max_size=1024)
+TURN_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
+
+
+def _state(spark, pkg_dir):
+    pkg = open_package(spark, pkg_dir)
+    return pkg["blocks"], pkg["file_meta"]
+
+
+def _conv_ids(transcripts):
+    return sorted(r["conv_id"] for r in transcripts.select("conv_id").distinct().collect())
 
 
 def test_microbatch_upserts_match_batch(spark, transcripts):
@@ -31,11 +50,11 @@ def test_microbatch_upserts_match_batch(spark, transcripts):
     third = len(convs) // 3
     batches = [convs[:third], convs[third : 2 * third], convs[2 * third :]]
     with tempfile.TemporaryDirectory() as d:
-        state = DedupState(spark, os.path.join(d, "state"))
+        state = os.path.join(d, "state")
         for ids in batches:
             b = transcripts.filter(F.col("conv_id").isin(ids))
             apply_batch(state, b, CFG)
-        sb, sm = state.read()
+        sb, sm = _state(spark, state)
         # batch-mode ground truth
         chunks = chunk_documents(assemble_documents(transcripts), CFG)
         bb = build_block_store(chunks)
@@ -59,18 +78,18 @@ def test_replayed_batch_is_noop(spark, transcripts):
     ids = [r["conv_id"] for r in transcripts.select("conv_id").distinct().limit(20).collect()]
     b = transcripts.filter(F.col("conv_id").isin(ids))
     with tempfile.TemporaryDirectory() as d:
-        state = DedupState(spark, os.path.join(d, "state"))
+        state = os.path.join(d, "state")
         apply_batch(state, b, CFG)
-        b1, m1 = state.read()
+        b1, m1 = _state(spark, state)
         n_blocks, n_meta = b1.count(), m1.count()
         apply_batch(state, b, CFG)  # replay (A4 idempotence)
-        b2, m2 = state.read()
+        b2, m2 = _state(spark, state)
         assert b2.count() == n_blocks
         assert m2.count() == n_meta
 
 
 def test_streaming_source_end_to_end(spark, transcripts):
-    """Real readStream → foreachBatch → state tables with availableNow."""
+    """Real readStream → foreachBatch → package with availableNow."""
     with tempfile.TemporaryDirectory() as d:
         src = os.path.join(d, "src")
         ids = [r["conv_id"] for r in transcripts.select("conv_id").distinct().limit(30).collect()]
@@ -79,8 +98,7 @@ def test_streaming_source_end_to_end(spark, transcripts):
             spark, src, os.path.join(d, "state"), os.path.join(d, "ckpt"), CFG
         )
         q.awaitTermination(120)
-        state = DedupState(spark, os.path.join(d, "state"))
-        sb, sm = state.read()
+        sb, sm = _state(spark, os.path.join(d, "state"))
         assert sm.count() == 30
         recon = reconstruct_documents(sm, sb)
         src_df = transcripts.filter(F.col("conv_id").isin(ids))
@@ -113,3 +131,95 @@ def test_streaming_exact_dedup_plan(spark, transcripts):
         got = spark.read.parquet(out)
         assert got.count() == 2  # one of the two "same text" turns suppressed
 
+
+
+def test_stream_output_is_a_package(spark, transcripts, tmp_path):
+    """The streamed state is a package: the package verbs read it, and it
+    matches a batch `create_package` over the same transcripts."""
+    convs = _conv_ids(transcripts)
+    src, pkg, ckpt = (str(tmp_path / n) for n in ("src", "pkg", "ckpt"))
+    # two runs over one drop-zone and one checkpoint: the first run's batch
+    # creates the package, the second run sees only the new files and appends
+    half = len(convs) // 2
+    for ids in (convs[:half], convs[half:]):
+        transcripts.filter(F.col("conv_id").isin(ids)).select(*TURN_COLS).write.mode("append").parquet(src)
+        incremental_dedup_stream(spark, src, pkg, ckpt, CFG).awaitTermination(120)
+
+    assert [r["conv_id"] for r in list_package(spark, pkg).collect()] == convs
+    want = create_package(spark, transcripts, str(tmp_path / "batch"), CFG)
+    got = package_stats(spark, pkg)
+    for fld in ("unique_blocks", "total_blocks", "total_bytes"):
+        assert getattr(got, fld) == getattr(want, fld), fld
+    out = sorted(map(tuple, extract_turns(spark, pkg).select(*TURN_COLS).collect()))
+    assert out == sorted(map(tuple, transcripts.select(*TURN_COLS).collect()))
+
+
+class _Crash(RuntimeError):
+    """The injected failure."""
+
+
+def _fail_at(n, real):
+    """`real`, except that its n-th call raises `_Crash` instead of running."""
+    calls = itertools.count(1)
+
+    def wrapper(*args, **kwargs):
+        if next(calls) == n:
+            raise _Crash(f"injected failure at call {n}")
+        return real(*args, **kwargs)
+
+    return wrapper
+
+
+def _refcounts(spark, pkg_dir):
+    blocks, _ = _state(spark, pkg_dir)
+    return sorted(map(tuple, blocks.select("md5", "refcount").collect()))
+
+
+@pytest.fixture(scope="module")
+def two_batches(spark, transcripts, tmp_path_factory):
+    """A package holding the first half of the conversations, the second half
+    as the next micro-batch, the true reference count (every non-tail chunk)
+    and the (md5, refcount) rows of an uncrashed second batch."""
+    convs = _conv_ids(transcripts)
+    half = len(convs) // 2
+    first = transcripts.filter(F.col("conv_id").isin(convs[:half]))
+    second = transcripts.filter(F.col("conv_id").isin(convs[half:]))
+    d = tmp_path_factory.mktemp("crash")
+    base, uncrashed = str(d / "base"), str(d / "uncrashed")
+    apply_batch(base, first, CFG)
+    shutil.copytree(base, uncrashed)
+    apply_batch(uncrashed, second, CFG)
+    truth = chunk_documents(assemble_documents(transcripts), CFG).filter(~F.col("is_tail")).count()
+    return base, second, len(convs), truth, _refcounts(spark, uncrashed)
+
+
+@pytest.mark.parametrize(
+    "target, n",
+    [
+        ("parquet", 1),  # blocks_tmp
+        ("parquet", 2),  # file_meta_tmp
+        ("parquet", 3),  # manifest_tmp
+        ("rename", 3),  # manifest -> manifest_old: the live tables are aside
+        ("rename", 6),  # manifest_tmp -> manifest: only the manifest is missing
+    ],
+    ids=["stage-blocks", "stage-file_meta", "stage-manifest", "rename-manifest-aside", "rename-manifest-promote"],
+)
+def test_batch_that_dies_mid_commit_converges_on_replay(spark, two_batches, tmp_path, monkeypatch, target, n):
+    """A micro-batch that dies anywhere in the package commit is replayed by
+    the stream; the replay must end at every document once and every
+    reference counted once, exactly as if the batch had never died."""
+    base, second, n_docs, truth, uncrashed = two_batches
+    pkg = str(tmp_path / "pkg")
+    shutil.copytree(base, pkg)
+    with monkeypatch.context() as m:
+        if target == "parquet":
+            m.setattr(DataFrameWriter, "parquet", _fail_at(n, DataFrameWriter.parquet))
+        else:
+            m.setattr(os, "rename", _fail_at(n, os.rename))
+        with pytest.raises(_Crash):
+            apply_batch(pkg, second, CFG)
+    apply_batch(pkg, second, CFG)  # the replay of the uncommitted batch
+    blocks, meta = _state(spark, pkg)
+    assert meta.count() == n_docs
+    assert blocks.agg(F.sum("refcount")).collect()[0][0] == truth
+    assert _refcounts(spark, pkg) == uncrashed

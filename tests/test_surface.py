@@ -45,12 +45,10 @@ ALLOWED_TEST_ONLY = {
     "rabin_bugcompat_scalar": "golden reference: the binary's call-parity rabin for the -f rabin_hash golden",
     "bdiff": "J3 block-level diff of two documents' chunk sequences",
     "pair_recall": "the BASELINE planted-pair recall gate",
-    "create_package": "S3 `dedup -c`: write a package directory",
     "list_package": "S4 `dedup -t`: list a package's documents",
     "package_stats": "S4 `dedup -s`: a package's dedup statistics",
     "extract_package": "S5 `dedup -x`: reconstruct a package's documents",
     "extract_turns": "S5 `dedup -x` with per-turn metadata restored",
-    "append_package": "S4 `dedup -a`: append documents to a package",
     "remove_from_package": "S4 `dedup -r`: remove documents from a package",
 }
 
