@@ -46,6 +46,29 @@ def _norm(a):
     )
 
 
+def _side(emb: DataFrame, id_col: str) -> DataFrame:
+    """(id_col, <id_col>_v, <id_col>_n): each vector and its norm, keyed by `id_col`."""
+    vec = F.col("embedding").alias(f"{id_col}_v")
+    return emb.select(F.col("vec_id").alias(id_col), vec, _norm(F.col("embedding")).alias(f"{id_col}_n"))
+
+
+def _score(pairs: DataFrame, a: str, b: str) -> DataFrame:
+    """(a, b, cos) from rows carrying both `_side`s; cosine in DOUBLE,
+    rounded to 6 decimals so results reproduce across engines."""
+    cos = _dot(F.col(f"{a}_v"), F.col(f"{b}_v")) / (F.col(f"{a}_n") * F.col(f"{b}_n"))
+    return pairs.select(a, b, F.round(cos, 6).alias("cos"))
+
+
+def _topk(scored: DataFrame, k: int) -> DataFrame:
+    """The k best neighbors per query, ties broken by neighbor id."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "cos", "rank")
+    )
+
+
 def srp_planes(n_planes: int, dim: int, seed: int) -> np.ndarray:
     """Deterministic hyperplane matrix (n_planes × dim) for SRP bucketing.
     Shared by the Spark operators and the SQL-oracle generator so both engines
@@ -116,27 +139,9 @@ def cosine_topk(
     driver oracle entries set it so the brute path can never run at corpus
     scale by accident)."""
     emb = _guard_brute(emb, "cosine_topk", max_rows)
-    q = queries.select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
-    ).withColumn("qn", _norm(F.col("qv")))
-    c = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv")).withColumn(
-        "cn", _norm(F.col("cv"))
-    )
-    scored = (
-        q.crossJoin(c)
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(_dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
-    )
+    pairs = _side(queries, "query_id").crossJoin(_side(emb, "neighbor_id"))
+    pairs = pairs.filter(F.col("query_id") != F.col("neighbor_id"))
+    return _topk(_score(pairs, "query_id", "neighbor_id"), k)
 
 
 def lsh_bucketed_topk(
@@ -169,27 +174,8 @@ def lsh_bucketed_topk(
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    q = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")).withColumn(
-        "qn", _norm(F.col("qv"))
-    )
-    c = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv")).withColumn(
-        "cn", _norm(F.col("cv"))
-    )
-    scored = (
-        cand.join(q, "query_id")
-        .join(c, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(_dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
-    )
+    pairs = cand.join(_side(queries, "query_id"), "query_id").join(_side(emb, "neighbor_id"), "neighbor_id")
+    return _topk(_score(pairs, "query_id", "neighbor_id"), k)
 
 
 def srp_near_pairs(
@@ -219,22 +205,8 @@ def srp_near_pairs(
         .select("id_a", "id_b")
         .distinct()
     )
-    va = emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("va")).withColumn(
-        "na", _norm(F.col("va"))
-    )
-    vb = emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb")).withColumn(
-        "nb", _norm(F.col("vb"))
-    )
-    return (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(_dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6).alias("cos"),
-        )
-        .filter(F.col("cos") >= threshold)
-    )
+    pairs = cand.join(_side(emb, "id_a"), "id_a").join(_side(emb, "id_b"), "id_b")
+    return _score(pairs, "id_a", "id_b").filter(F.col("cos") >= threshold)
 
 
 #: hard ceiling for the brute-force O(N²)/O(N·Q) paths: they exist as
@@ -275,19 +247,5 @@ def embedding_near_pairs(
     Kept as the small-scale oracle for `srp_near_pairs`; never the plan of
     record at corpus scale (hard-capped at `max_rows` input rows)."""
     emb = _guard_brute(emb, "embedding_near_pairs", max_rows)
-    a = emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("va")).withColumn(
-        "na", _norm(F.col("va"))
-    )
-    b = emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb")).withColumn(
-        "nb", _norm(F.col("vb"))
-    )
-    return (
-        a.crossJoin(b)
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            F.round(_dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6).alias("cos"),
-        )
-        .filter(F.col("cos") >= threshold)
-    )
+    pairs = _side(emb, "id_a").crossJoin(_side(emb, "id_b")).filter(F.col("id_a") < F.col("id_b"))
+    return _score(pairs, "id_a", "id_b").filter(F.col("cos") >= threshold)

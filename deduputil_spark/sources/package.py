@@ -15,6 +15,12 @@ four tables plus a one-row manifest mirroring the header fields
 `create_package` = dedup -c, `list_package` = dedup -t, `package_stats` =
 dedup -s, `extract_package` = dedup -x, `append_package` = dedup -a,
 `remove_from_package` = dedup -r.
+
+Every write (-c, -a, -r) goes through `_commit`, which stages all three
+tables under `<name>_tmp`, manifest last, and then swaps them in.  The
+staged manifest's `_SUCCESS` file is the commit record: `_recover` (run by
+every reader) rolls a crashed write forward when it exists and back when it
+does not, so a package never mixes one write's tables with another's.
 """
 
 from __future__ import annotations
@@ -25,7 +31,6 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from deduputil_spark.cache import track
 from deduputil_spark.config import DedupConfig
 from deduputil_spark.operators.assemble import DOC_SEP, TURN_META_COLS, assemble_documents, turn_metadata
 from deduputil_spark.operators.chunk import chunk_documents, compress_chunk_blocks
@@ -46,6 +51,15 @@ def _p(pkg_dir: str, name: str) -> str:
     return os.path.join(pkg_dir, name)
 
 
+#: the manifest's one schema, mirroring the header fields: every commit
+#: writes it, so no rewrite can drift a column's type
+_MANIFEST = (
+    ("block_size", "int"), ("block_num", "long"), ("file_num", "long"), ("magic_num", "long"),
+    ("config_hash", "string"), ("chunk_algo", "string"), ("total_bytes", "long"),
+    ("stored_bytes", "long"), ("block_z", "boolean"),
+)
+
+
 def create_package(
     spark: SparkSession, transcripts: DataFrame, pkg_dir: str, cfg: DedupConfig | None = None
 ) -> DedupStats:
@@ -62,50 +76,45 @@ def create_package(
     # extract_turns can rebuild the FULL row, not just the text
     if set(TURN_META_COLS).issubset(transcripts.columns):
         meta = meta.join(turn_metadata(transcripts), "conv_id", "left")
-    meta = track(meta)
-    blocks.write.mode("overwrite").parquet(_p(pkg_dir, "blocks"))
-    meta.write.mode("overwrite").parquet(_p(pkg_dir, "file_meta"))
-    st = dedup_stats(blocks, meta)
-    manifest = spark.createDataFrame(
-        [(cfg.block_size, st.unique_blocks, int(meta.count()), MAGIC, cfg.config_hash(),
-          cfg.chunk_algo, st.total_bytes, st.unique_bytes, bool(cfg.compress_blocks))],
-        "block_size int, block_num long, file_num long, magic_num long, "
-        "config_hash string, chunk_algo string, total_bytes long, stored_bytes long, "
-        "block_z boolean",
-    )
-    manifest.write.mode("overwrite").parquet(_p(pkg_dir, "manifest"))
-    return st
+    header = {"block_size": cfg.block_size, "magic_num": MAGIC, "config_hash": cfg.config_hash(),
+              "chunk_algo": cfg.chunk_algo, "block_z": bool(cfg.compress_blocks)}
+    return _commit(spark, pkg_dir, blocks, meta, header)
 
 
 def package_exists(pkg_dir: str) -> bool:
-    """Whether `pkg_dir` holds a complete package: the manifest is written
-    last by `create_package` and swapped in by `_rewrite`.  `_recover` runs
-    first, because a crash at the manifest's rename leaves it only as
-    `manifest_tmp`; deciding before the repair would re-create the package."""
+    """Whether `pkg_dir` holds a committed package.  `_recover` runs first:
+    a write that died after its commit record but before the manifest's
+    rename leaves the manifest only as `manifest_tmp`, and deciding before
+    the repair would re-create the package."""
     _recover(pkg_dir)
     return os.path.exists(os.path.join(pkg_dir, "manifest", "_SUCCESS"))
 
 
-def open_package(spark: SparkSession, pkg_dir: str) -> dict[str, DataFrame]:
+def _open(spark: SparkSession, pkg_dir: str) -> tuple[dict[str, DataFrame], dict]:
+    """The package's tables and its header row, read once."""
     _recover(pkg_dir)
     manifest = spark.read.parquet(_p(pkg_dir, "manifest"))
-    if manifest.collect()[0]["magic_num"] != MAGIC:
+    header = manifest.collect()[0].asDict()
+    if header["magic_num"] != MAGIC:
         raise ValueError("not a dedup package (bad magic)")
     return {
         "manifest": manifest,
         "blocks": spark.read.parquet(_p(pkg_dir, "blocks")),
         "file_meta": spark.read.parquet(_p(pkg_dir, "file_meta")),
-    }
+    }, header
 
 
-def _pkg_z(pkg: dict[str, DataFrame]) -> bool:
+def open_package(spark: SparkSession, pkg_dir: str) -> dict[str, DataFrame]:
+    return _open(spark, pkg_dir)[0]
+
+
+def _pkg_z(header: dict) -> bool:
     """Whether the package stores zlib-compressed blocks (the reference's
     header block_z field, /root/reference/src/dedup.h:64; like the binary,
     the PACKAGE header — not the caller's flags — governs extract and append,
     /root/reference/src/dedup.c:938,1783).  Packages written before this
     field existed have no column and read as uncompressed."""
-    m = pkg["manifest"]
-    return "block_z" in m.columns and bool(m.collect()[0]["block_z"])
+    return bool(header.get("block_z"))
 
 
 def list_package(spark: SparkSession, pkg_dir: str) -> DataFrame:
@@ -121,8 +130,8 @@ def package_stats(spark: SparkSession, pkg_dir: str) -> DedupStats:
 
 def extract_package(spark: SparkSession, pkg_dir: str) -> DataFrame:
     """dedup -x: reconstruct every document -> (conv_id, doc_text)."""
-    pkg = open_package(spark, pkg_dir)
-    return reconstruct_documents(pkg["file_meta"], pkg["blocks"], compressed=_pkg_z(pkg))
+    pkg, header = _open(spark, pkg_dir)
+    return reconstruct_documents(pkg["file_meta"], pkg["blocks"], compressed=_pkg_z(header))
 
 
 def extract_turns(spark: SparkSession, pkg_dir: str) -> DataFrame:
@@ -134,14 +143,14 @@ def extract_turns(spark: SparkSession, pkg_dir: str) -> DataFrame:
     Requires the package to have been created from a transcript table carrying
     TURN_META_COLS; raises otherwise (text-only packages extract via
     `extract_package`)."""
-    pkg = open_package(spark, pkg_dir)
+    pkg, header = _open(spark, pkg_dir)
     meta_cols = {"roles", "tools", "tss"}
     if not meta_cols.issubset(pkg["file_meta"].columns):
         raise ValueError(
             "package has no per-turn metadata arrays (created from a text-only "
             "table?) — use extract_package for (conv_id, doc_text)"
         )
-    recon = reconstruct_documents(pkg["file_meta"], pkg["blocks"], compressed=_pkg_z(pkg))
+    recon = reconstruct_documents(pkg["file_meta"], pkg["blocks"], compressed=_pkg_z(header))
     joined = recon.join(pkg["file_meta"].select("conv_id", "roles", "tools", "tss"), "conv_id")
     # a metadata-less document (e.g. text-only rows appended later via
     # append_documents' allowMissingColumns union) has NULL metadata arrays;
@@ -171,98 +180,78 @@ def extract_turns(spark: SparkSession, pkg_dir: str) -> DataFrame:
 def append_package(
     spark: SparkSession, transcripts: DataFrame, pkg_dir: str, cfg: DedupConfig | None = None
 ) -> None:
-    """dedup -a: dedup new conversations against the existing store."""
+    """dedup -a: dedup new conversations against the existing store.  With no
+    new conversation (a replayed batch) nothing is written."""
     cfg = cfg or DedupConfig()
-    pkg = open_package(spark, pkg_dir)
+    pkg, header = _open(spark, pkg_dir)
     new = transcripts.join(pkg["file_meta"].select("conv_id"), "conv_id", "left_anti")
+    if new.isEmpty():
+        return
     chunks = chunk_documents(assemble_documents(new), cfg)
-    if _pkg_z(pkg):  # the package header governs, as in the binary (dedup.c:938)
+    if _pkg_z(header):  # the package header governs, as in the binary (dedup.c:938)
         chunks = compress_chunk_blocks(chunks)
     extra = turn_metadata(new) if set(TURN_META_COLS).issubset(new.columns) else None
     nb, nm = append_documents(pkg["blocks"], pkg["file_meta"], chunks, new_extra=extra)
-    _rewrite(spark, pkg_dir, nb, nm)
+    _commit(spark, pkg_dir, nb, nm, header)
 
 
 def remove_from_package(spark: SparkSession, conv_ids: DataFrame, pkg_dir: str) -> None:
     """dedup -r: drop documents, drop zero-ref blocks, renumber densely."""
-    pkg = open_package(spark, pkg_dir)
+    pkg, header = _open(spark, pkg_dir)
     nb, nm = remove_documents(pkg["blocks"], pkg["file_meta"], conv_ids)
-    _rewrite(spark, pkg_dir, nb, nm)
+    _commit(spark, pkg_dir, nb, nm, header)
 
 
-#: tables replaced as ONE unit by _rewrite: all three swap together or the
-#: crash-recovery in open_package restores/promotes all three together, so a
-#: package can never mix new blocks with old file_meta (mismatched bids)
+#: tables replaced as ONE unit by _commit: all three swap together or
+#: _recover promotes or drops all three together, so a package can never mix
+#: one write's blocks with another's file_meta (mismatched bids)
 _SWAP_TABLES = ("blocks", "file_meta", "manifest")
 
 
-def _rewrite(spark: SparkSession, pkg_dir: str, blocks: DataFrame, meta: DataFrame) -> None:
-    """Stage-then-rename (parquet can't overwrite its own input mid-plan).
+def _commit(
+    spark: SparkSession, pkg_dir: str, blocks: DataFrame, meta: DataFrame, header: dict
+) -> DedupStats:
+    """The one write of a package: stage, then swap (parquet can't overwrite
+    its own input mid-plan, and a crash must not leave a mixed package).
 
-    Every replaced table — INCLUDING the refreshed manifest — is fully
-    materialized under <name>_tmp first; only then does the staged swap run
-    (live→_old for all, _tmp→live for all, delete _old last).  A crash at any
-    point leaves a state `_recover` can roll forward (all _tmp staged) or back
-    (otherwise); data is written ONCE, not twice.  On an object-store
-    deployment the io.py Iceberg seam replaces this with a snapshot commit."""
+    `blocks` and `file_meta` are staged under <name>_tmp, then the manifest:
+    the fixed fields of `header` plus every derived field (counts AND byte
+    totals — the reference recomputes its header on rewrite,
+    dedup.c:1162-1189) read back FROM THE STAGED tables.  `manifest_tmp`'s
+    `_SUCCESS` is the commit record; `_recover` then swaps the staged set in,
+    as it would after a crash.  On an object-store deployment the io.py
+    Iceberg seam replaces this with a snapshot commit."""
+    _recover(pkg_dir)  # a commit starts from a settled package
     blocks.write.mode("overwrite").parquet(_p(pkg_dir, "blocks_tmp"))
     meta.write.mode("overwrite").parquet(_p(pkg_dir, "file_meta_tmp"))
-    # refresh every derived header field (counts AND byte totals — the
-    # reference recomputes its header on rewrite, dedup.c:1162-1189) FROM THE
-    # STAGED tables, so the new manifest swaps in atomically with them; the
-    # original manifest DataFrame schema is reused so column types never
-    # drift across rewrites (int stays int, no inference from Python values)
-    mdf = spark.read.parquet(_p(pkg_dir, "manifest"))
-    schema = mdf.schema
-    manifest = mdf.collect()[0].asDict()
-    b = spark.read.parquet(_p(pkg_dir, "blocks_tmp"))
     m = spark.read.parquet(_p(pkg_dir, "file_meta_tmp"))
-    st = dedup_stats(b, m)
-    manifest["block_num"] = st.unique_blocks
-    manifest["file_num"] = m.count()
-    manifest["total_bytes"] = st.total_bytes
-    manifest["stored_bytes"] = st.unique_bytes
+    st = dedup_stats(spark.read.parquet(_p(pkg_dir, "blocks_tmp")), m)
+    row = dict(header, block_num=st.unique_blocks, file_num=m.count(),
+               total_bytes=st.total_bytes, stored_bytes=st.unique_bytes)
     spark.createDataFrame(
-        [tuple(manifest[f.name] for f in schema.fields)], schema
+        [tuple(row.get(n) for n, _ in _MANIFEST)], ", ".join(f"{n} {t}" for n, t in _MANIFEST)
     ).write.mode("overwrite").parquet(_p(pkg_dir, "manifest_tmp"))
-
-    # staged swap: marker-free two-phase rename with _old kept until the end
-    for name in _SWAP_TABLES:  # phase 1: move every live table aside
-        final = _p(pkg_dir, name)
-        shutil.rmtree(final + "_old", ignore_errors=True)
-        if os.path.exists(final):
-            os.rename(final, final + "_old")
-    for name in _SWAP_TABLES:  # phase 2: promote every staged table
-        os.rename(_p(pkg_dir, name) + "_tmp", _p(pkg_dir, name))
-    for name in _SWAP_TABLES:  # phase 3: drop the previous versions
-        shutil.rmtree(_p(pkg_dir, name) + "_old", ignore_errors=True)
+    _recover(pkg_dir)
+    return st
 
 
 def _recover(pkg_dir: str) -> None:
-    """Repair a package left mid-_rewrite by a crash.
+    """Finish or undo a commit, so the live tables are one write's.
 
-    Discriminator: phase 1 only starts after every _tmp is fully written, and
-    it is the first step that touches a live table.  So if any live table is
-    missing or any _old exists, the staged set is complete → ROLL FORWARD
-    (finish phases 1-3).  Otherwise the crash happened during the _tmp writes
-    themselves → ROLL BACK (drop partial _tmp dirs; live tables untouched)."""
-    tmp = {n: os.path.exists(_p(pkg_dir, n + "_tmp")) for n in _SWAP_TABLES}
-    old = {n: os.path.exists(_p(pkg_dir, n + "_old")) for n in _SWAP_TABLES}
-    live = {n: os.path.exists(_p(pkg_dir, n)) for n in _SWAP_TABLES}
-    if not any(tmp.values()) and not any(old.values()):
-        return  # clean package
-    phase1_started = any(old.values()) or not all(live.values())
-    if phase1_started:
-        for n in _SWAP_TABLES:  # roll forward
-            if tmp[n]:
-                if live[n]:
-                    shutil.rmtree(_p(pkg_dir, n + "_old"), ignore_errors=True)
-                    os.rename(_p(pkg_dir, n), _p(pkg_dir, n) + "_old")
-                os.rename(_p(pkg_dir, n) + "_tmp", _p(pkg_dir, n))
-            elif not live[n] and old[n]:
-                # promoted nothing for this table yet its live is gone — can
-                # only happen if _tmp promotion already ran; _old is stale
-                os.rename(_p(pkg_dir, n) + "_old", _p(pkg_dir, n))
-    for n in _SWAP_TABLES:
+    `manifest_tmp/_SUCCESS` is the commit record: the manifest is staged
+    after `blocks_tmp` and `file_meta_tmp` are complete, and no live table is
+    touched before it exists.  With the record → ROLL FORWARD: move every
+    live table that still has a staged version aside to <name>_old, then
+    promote every staged table.  Without it → ROLL BACK: the live tables are
+    untouched, so the partial staged tables are dropped.  The _old tables go
+    last."""
+    staged = [n for n in _SWAP_TABLES if os.path.exists(_p(pkg_dir, n + "_tmp"))]
+    if os.path.exists(os.path.join(_p(pkg_dir, "manifest_tmp"), "_SUCCESS")):
+        for n in staged:  # phase 1: move the live tables aside
+            if os.path.exists(_p(pkg_dir, n)):
+                os.rename(_p(pkg_dir, n), _p(pkg_dir, n + "_old"))
+        for n in staged:  # phase 2: promote the staged tables
+            os.rename(_p(pkg_dir, n + "_tmp"), _p(pkg_dir, n))
+    for n in _SWAP_TABLES:  # phase 3 (or the roll back)
         shutil.rmtree(_p(pkg_dir, n + "_tmp"), ignore_errors=True)
         shutil.rmtree(_p(pkg_dir, n + "_old"), ignore_errors=True)

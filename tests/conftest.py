@@ -1,6 +1,12 @@
 from __future__ import annotations
 
+import contextlib
+import itertools
+import os
+import shutil
+
 import pytest
+from pyspark.sql import DataFrameWriter
 
 from deduputil_spark.session import get_spark
 from deduputil_spark.synth import synthesize
@@ -46,3 +52,37 @@ def _plan_nodes(node):
 def plan_nodes():
     """The physical-plan walker, for tests that pin a plan's shape."""
     return _plan_nodes
+
+
+class _Crash(RuntimeError):
+    """The injected failure."""
+
+
+_CRASH_TARGETS = {"parquet": (DataFrameWriter, "parquet"), "rename": (os, "rename")}
+
+
+@pytest.fixture
+def crash_at(monkeypatch):
+    """`with crash_at(target, n): ...` runs the block with the n-th call of
+    `target` ("parquet": `DataFrameWriter.parquet`, "rename": `os.rename`)
+    failing, and requires the block to die of it.  A failing parquet write
+    first removes its target, as `mode("overwrite")` does before writing."""
+
+    @contextlib.contextmanager
+    def inject(target, n):
+        owner, name = _CRASH_TARGETS[target]
+        real = getattr(owner, name)
+        calls = itertools.count(1)
+
+        def wrapper(*args, **kwargs):
+            if next(calls) == n:
+                if target == "parquet":
+                    shutil.rmtree(kwargs.get("path") or args[1], ignore_errors=True)
+                raise _Crash(f"injected failure at {target} call {n}")
+            return real(*args, **kwargs)
+
+        with monkeypatch.context() as m, pytest.raises(_Crash):
+            m.setattr(owner, name, wrapper)
+            yield
+
+    return inject

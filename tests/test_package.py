@@ -4,6 +4,7 @@
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 
 import pytest
@@ -183,7 +184,7 @@ def test_manifest_schema_stable_across_rewrites(spark, transcripts, tmp_path_fac
 
 
 def test_crash_recovery_roll_forward_and_back(spark, transcripts, tmp_path_factory):
-    """ADVICE r2: a crash mid-_rewrite must not leave a half-swapped package.
+    """ADVICE r2: a crash mid-_commit must not leave a half-swapped package.
     Simulate the two crash classes and check open_package self-heals."""
     import os
     import shutil
@@ -215,3 +216,43 @@ def test_crash_recovery_roll_forward_and_back(spark, transcripts, tmp_path_facto
     assert pkg["file_meta"].count() == n_before
     assert not os.path.exists(_p(d, "blocks") + "_tmp")
     assert roundtrip_mismatches(transcripts, extract_package(spark, d)).count() == 0
+
+
+@pytest.fixture(scope="module")
+def two_packages(spark, transcripts, tmp_path_factory):
+    """A package of the first half of the conversations, and the second half
+    to be packaged over it."""
+    ids = sorted(r["conv_id"] for r in transcripts.select("conv_id").distinct().collect())
+    old = transcripts.filter(F.col("conv_id").isin(ids[: len(ids) // 2]))
+    new = transcripts.filter(F.col("conv_id").isin(ids[len(ids) // 2 :]))
+    d = str(tmp_path_factory.mktemp("pkg_old"))
+    create_package(spark, old, d, CFG)
+    return d, old, new
+
+
+@pytest.mark.parametrize(
+    "target, n, committed",
+    [
+        ("parquet", 1, False),  # blocks_tmp
+        ("parquet", 2, False),  # file_meta_tmp
+        ("parquet", 3, False),  # manifest_tmp: no commit record
+        ("rename", 1, True),  # blocks -> blocks_old
+        ("rename", 3, True),  # manifest -> manifest_old
+        ("rename", 6, True),  # manifest_tmp -> manifest
+    ],
+)
+def test_create_over_a_package_that_dies_mid_commit(
+    spark, two_packages, tmp_path, crash_at, target, n, committed
+):
+    """dedup -c over an existing package that dies anywhere in its write
+    leaves exactly one of the two packages: the old one before the commit
+    record exists, the new one after — never one's blocks under the other's
+    file_meta or manifest."""
+    base, old, new = two_packages
+    d = str(tmp_path / "pkg")
+    shutil.copytree(base, d)
+    with crash_at(target, n):
+        create_package(spark, new, d, CFG)
+    open_package(spark, d)
+    want = new if committed else old
+    assert roundtrip_mismatches(want, extract_package(spark, d)).count() == 0

@@ -4,13 +4,11 @@ resume idempotently, survive a batch that dies mid-commit, and round-trip."""
 
 from __future__ import annotations
 
-import itertools
 import os
 import shutil
 import tempfile
 
 import pytest
-from pyspark.sql import DataFrameWriter
 from pyspark.sql import functions as F
 
 from deduputil_spark.config import DedupConfig
@@ -38,6 +36,11 @@ TURN_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
 def _state(spark, pkg_dir):
     pkg = open_package(spark, pkg_dir)
     return pkg["blocks"], pkg["file_meta"]
+
+
+def _part_files(pkg_dir):
+    return {n: sorted(f for f in os.listdir(os.path.join(pkg_dir, n)) if f.startswith("part-"))
+            for n in ("blocks", "file_meta", "manifest")}
 
 
 def _conv_ids(transcripts):
@@ -82,10 +85,12 @@ def test_replayed_batch_is_noop(spark, transcripts):
         apply_batch(state, b, CFG)
         b1, m1 = _state(spark, state)
         n_blocks, n_meta = b1.count(), m1.count()
+        parts = _part_files(state)
         apply_batch(state, b, CFG)  # replay (A4 idempotence)
         b2, m2 = _state(spark, state)
         assert b2.count() == n_blocks
         assert m2.count() == n_meta
+        assert _part_files(state) == parts  # nothing was rewritten
 
 
 def test_streaming_source_end_to_end(spark, transcripts):
@@ -154,22 +159,6 @@ def test_stream_output_is_a_package(spark, transcripts, tmp_path):
     assert out == sorted(map(tuple, transcripts.select(*TURN_COLS).collect()))
 
 
-class _Crash(RuntimeError):
-    """The injected failure."""
-
-
-def _fail_at(n, real):
-    """`real`, except that its n-th call raises `_Crash` instead of running."""
-    calls = itertools.count(1)
-
-    def wrapper(*args, **kwargs):
-        if next(calls) == n:
-            raise _Crash(f"injected failure at call {n}")
-        return real(*args, **kwargs)
-
-    return wrapper
-
-
 def _refcounts(spark, pkg_dir):
     blocks, _ = _state(spark, pkg_dir)
     return sorted(map(tuple, blocks.select("md5", "refcount").collect()))
@@ -204,20 +193,15 @@ def two_batches(spark, transcripts, tmp_path_factory):
     ],
     ids=["stage-blocks", "stage-file_meta", "stage-manifest", "rename-manifest-aside", "rename-manifest-promote"],
 )
-def test_batch_that_dies_mid_commit_converges_on_replay(spark, two_batches, tmp_path, monkeypatch, target, n):
+def test_batch_that_dies_mid_commit_converges_on_replay(spark, two_batches, tmp_path, crash_at, target, n):
     """A micro-batch that dies anywhere in the package commit is replayed by
     the stream; the replay must end at every document once and every
     reference counted once, exactly as if the batch had never died."""
     base, second, n_docs, truth, uncrashed = two_batches
     pkg = str(tmp_path / "pkg")
     shutil.copytree(base, pkg)
-    with monkeypatch.context() as m:
-        if target == "parquet":
-            m.setattr(DataFrameWriter, "parquet", _fail_at(n, DataFrameWriter.parquet))
-        else:
-            m.setattr(os, "rename", _fail_at(n, os.rename))
-        with pytest.raises(_Crash):
-            apply_batch(pkg, second, CFG)
+    with crash_at(target, n):
+        apply_batch(pkg, second, CFG)
     apply_batch(pkg, second, CFG)  # the replay of the uncommitted batch
     blocks, meta = _state(spark, pkg)
     assert meta.count() == n_docs
