@@ -11,7 +11,7 @@ Design for oracle exactness:
   (no float-rounding hash risk); cosine uses round(…, 6) double arithmetic.
 - Everything is aliased identically on both sides.
 
-Non-SQL-expressible stages (CDC pandas-UDF chunker, full transcript pipeline,
+Non-SQL-expressible stages (the mapInArrow CDC chunker, full transcript pipeline,
 round-trip reconstruction) are included WITHOUT oracle entries (rows-only
 checks) and covered by the repo's own pytest oracles instead.
 """
@@ -980,7 +980,7 @@ FROM documents d LEFT JOIN cleaned c USING (doc_id)
 
 
 # ---------------------------------------------------------------------------
-# Rows-only entries (non-SQL-expressible: pandas-UDF CDC, full pipeline)
+# Rows-only entries (non-SQL-expressible: mapInArrow CDC, full pipeline)
 # ---------------------------------------------------------------------------
 
 def _synth_transcripts(spark: SparkSession):
@@ -992,7 +992,7 @@ def _synth_transcripts(spark: SparkSession):
 
 
 def q_cdc_chunk_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CDC chunker (mapInPandas) stats per conversation — rows-only check;
+    """CDC chunker (mapInArrow) stats per conversation — rows-only check;
     byte-exactness is pytest-golden-tested against the reference walk."""
     from deduputil_spark.operators.assemble import assemble_documents
     from deduputil_spark.operators.chunk import chunk_documents
@@ -1017,7 +1017,7 @@ def q_transcript_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_roundtrip_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S5 round-trip, HARD-oracled: FSP-chunk documents.parquet through the
-    REAL binary path (mapInPandas cut walk → block store → file_meta →
+    REAL binary path (mapInArrow chunker → block store → file_meta →
     reconstruct, the Spark analog of dedup_package_extract,
     /root/reference/src/dedup.c:1726-1812), then emit the md5 + length of the
     RECONSTRUCTED text.  The DuckDB oracle computes md5/length of the SOURCE
@@ -1178,7 +1178,7 @@ def oracle_sql() -> dict[str, str]:
         "suffix_spans": SQL_SUFFIX_SPANS,
         "suffix_strip": SQL_SUFFIX_STRIP,
         "roundtrip_check": SQL_ROUNDTRIP,
-        # The three non-SQL-expressible queries (pandas-UDF CDC walks, full
+        # The three non-SQL-expressible queries (mapInArrow CDC chunker, full
         # minhash/LSH pipeline) are HARD-oracled via golden fixtures: their
         # expected outputs are precomputed by scalar Spark-free code
         # (tests/fixtures/gen_fixtures.py — cdc_cuts_ref transliteration,

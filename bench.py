@@ -103,7 +103,7 @@ def run_bench(sf_dir: str, cpus: int) -> dict:
     extras["n_turns"] = n_turns
     extras["n_clustered_docs"] = n_clustered
 
-    # exact chunk dedup (CDC pandas-UDF path + block store)
+    # exact chunk dedup (mapInArrow CDC chunker + block store)
     from deduputil_spark.operators.assemble import assemble_documents
     from deduputil_spark.operators.chunk import chunk_documents
     from deduputil_spark.operators.dedup import build_block_store

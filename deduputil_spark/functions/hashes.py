@@ -18,13 +18,16 @@ Reference semantics (studied, not copied):
 Two implementations of the CDC cut walk live here:
 - `cdc_cuts_ref`: direct byte-at-a-time transliteration of the C control flow
   (golden oracle for tests; computes the genuine 32-bit rolling hkey).
-- `cdc_cuts_fast`: vectorized numpy.  Key derivation: with CHAR_OFFSET == 0 the
+- `cdc_cuts_fast`: vectorized numpy, the walk the chunk operator runs on
+  every document (`fsp_cuts` and `sb_spans` are its FSP and SB walks, and
+  `adler32_checksum` its chunks' weak32).  Key derivation: with CHAR_OFFSET == 0 the
   rolling state satisfies s1 ≡ sum(window signed bytes) (mod 2^16) — the
   fresh/rolling distinction telescopes away — and since block_size (4096)
   divides 2^16, `hkey % 4096 == (s1 mod 4096)`.  The cut-candidate mask is
   therefore a sliding-window sum, computable for ALL positions at once; only
   the min/max/skip walk is sequential and it is O(number of cuts).  That walk
-  is `cdc_walk`, which the chunk operator's batch walk calls too.
+  is `cdc_walk`.  An adler block size that does not divide 2^16 falls back
+  to `cdc_cuts_ref`.
 """
 
 from __future__ import annotations
@@ -536,10 +539,10 @@ def cdc_cuts_fast(
         # the scalar reference walk rather than silently diverging
         return cdc_cuts_ref(data, block_size, min_size, max_size, cut_hash)
     if cut_hash == "adler":
-        s = np.frombuffer(data, dtype=np.int8).astype(np.int64)
-        c = np.concatenate(([0], np.cumsum(s)))
+        c = np.zeros(n + 1, dtype=np.int64)
+        np.cumsum(np.frombuffer(data, dtype=np.int8), dtype=np.int64, out=c[1:])
         wsum = c[BLOCK_WIN:] - c[:-BLOCK_WIN]  # wsum[h] = sum(data[h:h+BLOCK_WIN])
-        match = (np.mod(wsum, block_size) == CDC_R)
+        match = (wsum & (block_size - 1)) == CDC_R  # block_size is a power of two here
     else:
         hk = CUT_HASH_WINDOW[cut_hash](data)
         # NUL-containing windows hash differently (strlen); handle lazily below

@@ -45,9 +45,12 @@ def connected_components(
     # mini-jobs ≈ 4 s of scheduler round-trips at local[32])
     edges = pairs.select("conv_a", "conv_b").limit(driver_threshold + 1).toPandas()
     if len(edges) <= driver_threshold:
-        return _driver_union_find(pairs.sparkSession, edges, all_vertices)
-    labels, _ = _star_components(pairs, max_iterations)
+        labels = _driver_union_find(pairs.sparkSession, edges)
+    else:
+        labels, _ = _star_components(pairs, max_iterations)
     if all_vertices is not None:
+        # no forced broadcast: at the driver threshold the labels can number
+        # millions — AQE picks broadcast vs shuffled join by measured size
         labels = (
             all_vertices.select("conv_id")
             .join(labels, "conv_id", "left")
@@ -123,10 +126,10 @@ def _star_components(pairs: DataFrame, max_iterations: int) -> tuple[DataFrame, 
     return labels, rounds
 
 
-def _driver_union_find(spark: SparkSession, edges: pd.DataFrame, all_vertices: DataFrame | None) -> DataFrame:
+def _driver_union_find(spark: SparkSession, edges: pd.DataFrame) -> DataFrame:
     """Small-graph fast path: union-find with path compression over the
-    collected edges, canonical min-id roots; singletons joined back
-    distributed."""
+    collected edges, canonical min-id roots -> labels(conv_id, cluster_id)
+    of every vertex that has an edge."""
     parent: dict[str, str] = {}
 
     def find(x: str) -> str:
@@ -147,15 +150,8 @@ def _driver_union_find(spark: SparkSession, edges: pd.DataFrame, all_vertices: D
     verts = list(parent)
     # an Arrow createDataFrame(pandas) stays in the JVM; a list of rows would
     # become a pickled Python RDD and start a pool of Python workers for it
-    labels = spark.createDataFrame(
+    return spark.createDataFrame(
         pd.DataFrame({"conv_id": verts, "cluster_id": [find(v) for v in verts]}, dtype=object),
         "conv_id string, cluster_id string",
     )
-    if all_vertices is not None:
-        labels = (
-            all_vertices.select("conv_id")
-            .join(F.broadcast(labels), "conv_id", "left")
-            .withColumn("cluster_id", F.coalesce("cluster_id", F.col("conv_id")))
-        )
-    return labels
 

@@ -61,9 +61,11 @@ def jaccard_verify_sets(pairs: DataFrame, ksets: DataFrame, threshold: float | N
     JVM array_intersect per pair and |A∪B| = |A|+|B|-|A∩B|, so verification
     shuffles O(candidate_docs · set_size) longs and runs no Python.  Both
     join sides read `ksets`: pass a persisted frame (the pipeline's sign
-    table is one) or its plan runs once per side."""
+    table is one) or its plan runs once per side.  Two empty sets score 1.0,
+    the convention of perfbench's exact Jaccards."""
     a = ksets.select(F.col("conv_id").alias("conv_a"), F.col("kset").alias("ka"))
     b = ksets.select(F.col("conv_id").alias("conv_b"), F.col("kset").alias("kb"))
+    union = F.col("nsum") - F.col("inter")
     out = (
         pairs.join(a, "conv_a")
         .join(b, "conv_b")
@@ -76,7 +78,9 @@ def jaccard_verify_sets(pairs: DataFrame, ksets: DataFrame, threshold: float | N
         .select(
             "conv_a",
             "conv_b",
-            (F.col("inter") / (F.col("nsum") - F.col("inter"))).alias("jaccard"),
+            # J(∅, ∅) = 1: two docs with no k-grams (empty or whitespace-only)
+            # share every band, and 0/0 fails the query under ANSI mode
+            F.when(union == 0, F.lit(1.0)).otherwise(F.col("inter") / union).alias("jaccard"),
         )
     )
     if threshold is not None:

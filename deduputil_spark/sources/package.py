@@ -32,7 +32,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from deduputil_spark.config import DedupConfig
-from deduputil_spark.operators.assemble import DOC_SEP, TURN_META_COLS, assemble_documents, turn_metadata
+from deduputil_spark.operators.assemble import (
+    DOC_SEP,
+    TURN_META_COLS,
+    assemble_documents,
+    turn_metadata,
+    validate_assembly,
+)
 from deduputil_spark.operators.chunk import chunk_documents, compress_chunk_blocks
 from deduputil_spark.operators.dedup import (
     DedupStats,
@@ -63,8 +69,10 @@ _MANIFEST = (
 def create_package(
     spark: SparkSession, transcripts: DataFrame, pkg_dir: str, cfg: DedupConfig | None = None
 ) -> DedupStats:
-    """dedup -c: chunk + dedup `transcripts` into a package directory."""
+    """dedup -c: chunk + dedup `transcripts` into a package directory.
+    Raises ValueError, writing nothing, if a turn holds `DOC_SEP`."""
     cfg = cfg or DedupConfig()
+    validate_assembly(transcripts)
     docs = assemble_documents(transcripts)
     chunks = chunk_documents(docs, cfg)
     if cfg.compress_blocks:  # reference -z: dedup keys over compressed bytes
@@ -181,8 +189,10 @@ def append_package(
     spark: SparkSession, transcripts: DataFrame, pkg_dir: str, cfg: DedupConfig | None = None
 ) -> None:
     """dedup -a: dedup new conversations against the existing store.  With no
-    new conversation (a replayed batch) nothing is written."""
+    new conversation (a replayed batch) nothing is written.  Raises
+    ValueError, writing nothing, if a turn holds `DOC_SEP`."""
     cfg = cfg or DedupConfig()
+    validate_assembly(transcripts)
     pkg, header = _open(spark, pkg_dir)
     new = transcripts.join(pkg["file_meta"].select("conv_id"), "conv_id", "left_anti")
     if new.isEmpty():

@@ -138,10 +138,9 @@ def gen_transcript_clusters(docs: pd.DataFrame) -> pd.DataFrame:
         for j in range(i + 1, n):
             sj = sets[j]
             inter = len(si & sj)
-            if inter == 0:
-                continue
             union_sz = len(si) + len(sj) - inter
-            if inter / union_sz >= cfg.jaccard_threshold:
+            # J(∅, ∅) = 1.0, as the pipeline's verify scores two empty sets
+            if (inter / union_sz if union_sz else 1.0) >= cfg.jaccard_threshold:
                 union(ids[i], ids[j])
 
     return pd.DataFrame(

@@ -22,6 +22,7 @@ from deduputil_spark.functions.hashes import (
     fsp_cuts,
     rabin_hash32,
     rabin_window_hashes,
+    sb_spans,
 )
 
 rng = random.Random(1234)
@@ -173,9 +174,20 @@ def test_cdc_new_cut_hashes_fast_matches_ref(fn):
 
 
 # ---------------------------------------------------------------------------
-# Arrow batch chunker parity: _batch_chunk_ends + prefix-sum adler must equal
-# the scalar per-doc walk (_chunk_one) for every algo on mixed-shape batches.
+# Arrow chunker vs the golden references: `make_arrow_chunker` on pyarrow
+# RecordBatches must emit, for every document, the cuts of cdc_cuts_ref /
+# fsp_cuts / sb_spans plus the always-emitted tail, each chunk's weak32 from
+# adler32_checksum, and chunk bytes that tile the document — on every string
+# layout its zero-copy view reads and on the exotic-layout fallback.
 # ---------------------------------------------------------------------------
+
+def _is_utf8(data: bytes) -> bool:
+    try:
+        data.decode()
+    except UnicodeDecodeError:
+        return False
+    return True
+
 
 def _docs_corpus():
     # empty doc, sub-min doc, exact block, multi-byte utf8, big random, NULs
@@ -202,23 +214,50 @@ def _docs_corpus():
     ids=["cdc-adler", "fsp", "sb", "cdc-rabin", "cdc-adler-nonpow2"],
 )
 def test_arrow_batch_chunker_matches_scalar_walk(cfg):
-    from deduputil_spark.operators.chunk import _batch_chunk_walk, _chunk_one
+    import pyarrow as pa
 
-    docs = _docs_corpus()
-    bounds = np.zeros(len(docs) + 1, dtype=np.int64)
-    np.cumsum([len(d) for d in docs], out=bounds[1:])
-    buf = np.frombuffer(b"".join(docs), dtype=np.uint8)
-    ends, counts, weak = _batch_chunk_walk(buf, bounds, cfg)
-    offsets = np.concatenate(([0], ends))
-    pos = 0
-    for i, d in enumerate(docs):
-        expected = list(_chunk_one(str(i), d, cfg))
-        got_n = int(counts[i])
-        assert got_n == len(expected), (i, got_n, len(expected))
-        for j, (cid, cidx, piece, plen, wk, is_tail) in enumerate(expected):
-            st, en = int(offsets[pos]), int(offsets[pos + 1])
-            assert buf[st:en].tobytes() == piece, (i, j)
-            assert int(weak[pos]) == wk, (i, j, int(weak[pos]), wk)
-            assert is_tail == (j == len(expected) - 1)
-            pos += 1
-    assert pos == len(ends)
+    from deduputil_spark.operators.chunk import make_arrow_chunker
+
+    def golden(cid, data):
+        if cfg.chunk_algo == "fsp":
+            cuts = fsp_cuts(len(data), cfg.block_size)
+        elif cfg.chunk_algo == "sb":
+            spans, tail_start = sb_spans(data, cfg.block_size)
+            cuts = [e for _, e in spans]
+            assert tail_start == (cuts[-1] if cuts else 0)
+        else:
+            cuts = cdc_cuts_ref(data, cfg.block_size, cfg.block_min_size, cfg.block_max_size, cfg.cut_hash)
+        ends = [*cuts, len(data)]
+        return [
+            (cid, j, data[s:e], e - s, adler32_checksum(data[s:e]), j == len(cuts))
+            for j, (s, e) in enumerate(zip([0, *cuts], ends))
+        ]
+
+    docs = {f"c{i}": d for i, d in enumerate(_docs_corpus())}
+    with_nulls = {k: v for c, d in docs.items() for k, v in ((c, d), (c + "-null", None))}
+    text = {c: d.decode() for c, d in docs.items() if _is_utf8(d)}
+
+    def strings(values, typ=pa.binary(), as_type=pa.string()):
+        # a binary view keeps non-UTF-8 bytes: the chunker reads bytes, not text
+        return pa.array(values, type=typ).view(as_type)
+
+    layouts = {  # name -> (conv_id -> doc, its doc_text column)
+        "plain": (docs, strings(list(docs.values()))),
+        "sliced": (docs, strings([b"pad", *docs.values(), b"pad"]).slice(1, len(docs))),
+        "large_string": (docs, strings(list(docs.values()), pa.large_binary(), pa.large_string())),
+        "nulls": (with_nulls, strings(list(with_nulls.values()))),
+        # no zero-copy view of a dictionary column: the rebuilt-buffer fallback
+        "dictionary": (text, pa.array(list(text.values())).dictionary_encode()),
+    }
+    chunker = make_arrow_chunker(cfg)
+    for name, (by_id, txt) in layouts.items():
+        batch = pa.RecordBatch.from_arrays([pa.array(list(by_id)), txt], names=["conv_id", "doc_text"])
+        (out,) = chunker([batch])
+        got = list(zip(*(col.to_pylist() for col in out.columns)))
+        want = [
+            r for c, d in by_id.items()
+            for r in golden(c, d.encode() if isinstance(d, str) else d or b"")
+        ]
+        assert len(got) == len(want), name
+        for g, w in zip(got, want):
+            assert g == w, (name, g[:2], w[:2])

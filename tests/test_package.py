@@ -172,6 +172,32 @@ def test_extract_turns_keeps_metadata_less_appends(spark, transcripts, tmp_path_
     assert all(r["role"] is None and r["tool"] is None and r["ts"] is None for r in rows)
 
 
+def test_package_writes_refuse_turns_holding_the_separator(spark, transcripts, tmp_path_factory):
+    """A turn holding `DOC_SEP` would come back from extract as two turns,
+    shifting every later turn's metadata: create and append refuse such a
+    table before staging anything, and a refused append leaves the package
+    as it was."""
+    from deduputil_spark.sources.package import extract_turns
+
+    cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
+    bad = spark.createDataFrame(
+        [("zzsep", 0, "user", "line one\nline two", None, None),
+         ("zzsep", 1, "assistant", "reply", "bash", None)],
+        schema=transcripts.schema,
+    )
+    d = str(tmp_path_factory.mktemp("pkg_sep"))
+    with pytest.raises(ValueError, match="separator"):
+        create_package(spark, bad, d, CFG)
+    assert os.listdir(d) == []
+    few = transcripts.join(transcripts.select("conv_id").distinct().orderBy("conv_id").limit(3), "conv_id", "left_semi")
+    create_package(spark, few, d, CFG)
+    before = sorted(map(tuple, extract_turns(spark, d).select(*cols).collect()))
+    with pytest.raises(ValueError, match="separator"):
+        append_package(spark, bad, d, CFG)
+    assert sorted(os.listdir(d)) == ["blocks", "file_meta", "manifest"]
+    assert sorted(map(tuple, extract_turns(spark, d).select(*cols).collect())) == before
+
+
 def test_manifest_schema_stable_across_rewrites(spark, transcripts, tmp_path_factory):
     """ADVICE r2: rewrites must reuse the manifest's original schema — no
     type drift (int->bigint) from Python-value inference."""

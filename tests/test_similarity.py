@@ -193,6 +193,20 @@ def test_verified_pairs_match_text_verify(spark, transcripts, docs):
         release_caches()
 
 
+def test_docs_without_kgrams_cluster_together(spark):
+    """An empty and a whitespace-only doc have no k-grams: both get the
+    all-zero OPH signature and meet in every band.  Verify scores them
+    J(∅, ∅) = 1.0, as perfbench's exact Jaccards do, rather than dividing
+    0 by 0 (a [DIVIDE_BY_ZERO] failure of the whole run under ANSI mode);
+    an ordinary doc stays a singleton."""
+    transcripts = spark.createDataFrame(
+        [("e1", 0, ""), ("e2", 0, "   "), ("n1", 0, "an ordinary turn with enough words for several grams")],
+        "conv_id string, turn_idx int, text string",
+    )
+    labels = {r["conv_id"]: r["cluster_id"] for r in run_pipeline(spark, transcripts, CFG).clusters.collect()}
+    assert labels == {"e1": "e1", "e2": "e1", "n1": "n1"}
+
+
 @settings(max_examples=40, deadline=None)
 @given(
     texts=st.lists(st.text(alphabet="ab c\t\né", max_size=40), max_size=12),

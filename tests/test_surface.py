@@ -35,7 +35,6 @@ TESTS = sorted((ROOT / "tests").rglob("*.py"))
 
 # Reference semantics kept on purpose although only tests call them.
 ALLOWED_TEST_ONLY = {
-    "validate_assembly": "fail-fast check that no turn holds the document separator",
     "apply_deltas": "replays J3-J5 delta entries: the inverse compute_deltas is tested against",
     "minhash_jaccard_estimate": "signature-agreement Jaccard estimate the signature tests check",
     "containment_candidates": "exact-substring containment pass over w-token anchors",
