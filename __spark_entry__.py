@@ -432,9 +432,10 @@ ANCHOR_HOT_CAP = 5000  # hot-anchor prune threshold
 
 
 def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-substring containment pass (north rule's suffix-anchor
-    approximation, operators/substring.py) — integer-exact components,
-    filtered at containment >= 0.8 (inter*10 >= na*8)."""
+    """Document containment over w-token anchor shingles
+    (operators/substring.py; the exact-substring pass itself is the suffix
+    queries' operators/suffixarray.py) — integer-exact components, filtered
+    at containment >= 0.8 (inter*10 >= na*8)."""
     from deduputil_spark.operators.substring import containment_components
 
     docs = _docs(spark, sf_dir).select(
@@ -889,7 +890,7 @@ def q_suffix_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from deduputil_spark.operators.suffixarray import duplicated_spans
 
     docs = _docs(spark, sf_dir).repartition(spark.sparkContext.defaultParallelism)
-    return duplicated_spans(docs, SUFFIX_L, method="rolling").select(
+    return duplicated_spans(docs, SUFFIX_L).select(
         "doc_id", "span_start", "span_end", "n_dup_grams"
     )
 
@@ -914,7 +915,7 @@ def q_suffix_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from deduputil_spark.operators.suffixarray import strip_duplicated_spans
 
     docs = _docs(spark, sf_dir).repartition(spark.sparkContext.defaultParallelism)
-    return strip_duplicated_spans(docs, SUFFIX_L, method="rolling").select(
+    return strip_duplicated_spans(docs, SUFFIX_L).select(
         "doc_id", "clean_text", "n_stripped"
     )
 

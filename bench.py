@@ -4,7 +4,10 @@
 Runs the headline queries at $SPARK_GRAFT_SF_DIR (default: the sf0.1 test
 data, see `__main__`) on local[$SPARK_GRAFT_CPUS] (default: the host CPU
 count) and prints ONE JSON line:
-{"metric": ..., "value": <total sec>, "unit": "sec", "queries": {...}, "sf": ...}
+{"metric": ..., "value": <total sec>, "unit": "sec", "queries": {...},
+ "queries_noop": {...}, "sf": ...}
+`queries` times each driver query with `.count()` (and feeds `value`);
+`queries_noop` times the same query written to Spark's noop sink.
 
     python bench.py
 
@@ -122,13 +125,18 @@ def run_bench(sf_dir: str, cpus: int) -> dict:
     timings["cdc_exact_dedup"] = round(best_cdc, 3)
     extras["n_unique_blocks"] = n_blocks
 
-    # driver-table queries at sf_dir
+    # driver-table queries at sf_dir, timed twice: `count()` lets Catalyst
+    # prune columns a query's rows never need, a noop sink runs every column
+    noop: dict[str, float] = {}
     for name in ["fsp_chunks", "minhash_bands", "verified_pairs", "ann_topk",
                  "simhash", "token_stats", "sessionize", "suffix_spans"]:
         q = em.queries()[name]
         t0 = time.monotonic()
         q(spark, sf_dir).count()
         timings[name] = round(time.monotonic() - t0, 3)
+        t0 = time.monotonic()
+        q(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        noop[name] = round(time.monotonic() - t0, 3)
 
     spark.stop()
     return {
@@ -136,6 +144,7 @@ def run_bench(sf_dir: str, cpus: int) -> dict:
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
+        "queries_noop": noop,
         "sf": _sf_name(sf_dir).replace("sf", ""),
         "cpus": cpus,
         **extras,

@@ -86,14 +86,7 @@ def make_arrow_chunker(cfg: DedupConfig):
             names = batch.schema.names
             cid = batch.column(names.index("conv_id"))
             txt = batch.column(names.index("doc_text"))
-            view = utf8_buffer_view(txt)
-            if view is not None:
-                buf, bounds = view
-            else:  # exotic arrow layout: rebuild a packed buffer once
-                enc = [t.encode("utf-8") if t is not None else b"" for t in txt.to_pylist()]
-                bounds = np.zeros(len(enc) + 1, dtype=np.int64)
-                np.cumsum(np.fromiter(map(len, enc), dtype=np.int64, count=len(enc)), out=bounds[1:])
-                buf = np.frombuffer(b"".join(enc), dtype=np.uint8)
+            buf, bounds = utf8_buffer_view(txt)
             doc_of: list[int] = []
             idx: list[int] = []
             ends: list[int] = []

@@ -109,19 +109,6 @@ _NONWS_LUT = ~_WS_LUT
 
 _TOKEN_HASH_CAP = 32  # bytes of each token fed to the polynomial; full length mixed in
 
-def batch_token_hashes(texts) -> tuple[np.ndarray, np.ndarray]:
-    """Hash EVERY token of a batch of Python strings (encode + delegate to
-    `token_hashes_from_buffer`); kept as the str-input API for callers that
-    already hold strings (tests, single-doc helpers, the pandas fallback)."""
-    enc = [t.encode("utf-8", "surrogatepass") for t in texts]
-    n_docs = len(enc)
-    if n_docs == 0:
-        return np.zeros(0, dtype=np.int64), np.zeros(1, dtype=np.int64)
-    bounds = np.zeros(n_docs + 1, dtype=np.int64)
-    np.cumsum(np.fromiter(map(len, enc), dtype=np.int64, count=n_docs), out=bounds[1:])
-    return token_hashes_from_buffer(np.frombuffer(b"".join(enc), dtype=np.uint8), bounds)
-
-
 def token_hashes_from_buffer(buf: np.ndarray, bounds: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """Hash EVERY token of a batch in one byte-level vectorized pass, straight
     off a contiguous UTF-8 buffer (e.g. an Arrow string column's values
@@ -205,44 +192,44 @@ def token_hashes_from_buffer(buf: np.ndarray, bounds: np.ndarray) -> tuple[np.nd
     return h, offsets
 
 
-def utf8_buffer_view(arr) -> tuple[np.ndarray, np.ndarray] | None:
-    """Zero-copy (values-buffer, byte-bounds) view of an Arrow string array.
+def utf8_buffer_view(arr) -> tuple[np.ndarray, np.ndarray]:
+    """Zero-copy (values-buffer, byte-bounds) view of an Arrow string column.
 
-    Returns None for exotic layouts (dictionary, string_view, nulls with
-    non-contiguous semantics) — callers fall back to the Python-string path.
-    Null slots in plain string arrays occupy zero bytes, so they simply become
-    empty docs."""
+    Owns the Arrow string layout for every caller: `string` and
+    `large_string` are viewed in place (a slice's offset honoured), a
+    dictionary column is decoded first, and a missing values buffer (every
+    value empty or null) reads as empty.  Null slots occupy zero bytes, so
+    they become empty docs.  Any other type raises TypeError."""
     import pyarrow as pa
 
+    if pa.types.is_dictionary(arr.type):
+        arr = arr.dictionary_decode()
     if pa.types.is_large_string(arr.type):
         odt = np.int64
     elif pa.types.is_string(arr.type):
         odt = np.int32
     else:
-        return None
-    bufs = arr.buffers()
-    if len(bufs) < 3 or bufs[2] is None:
-        return None
-    o = np.frombuffer(bufs[1], dtype=odt)[arr.offset : arr.offset + len(arr) + 1].astype(np.int64)
-    data = np.frombuffer(bufs[2], dtype=np.uint8)[o[0] : o[-1]]
-    return data, o - o[0]
+        raise TypeError(f"not an Arrow string column: {arr.type}")
+    _, offs, data = arr.buffers()
+    o = np.frombuffer(offs, dtype=odt)[arr.offset : arr.offset + len(arr) + 1].astype(np.int64)
+    data = np.zeros(0, dtype=np.uint8) if data is None else np.frombuffer(data, dtype=np.uint8)
+    return data[o[0] : o[-1]], o - o[0]
 
 
 def doc_kgram_hashes(text: str, k: int) -> np.ndarray:
     """Unique k-gram hash keys of one document (single-doc convenience; batch
     paths use `batch_kgram_sets`).  The set definition shared by the numpy
     signatures, their k-gram sets and the Jaccard verifier."""
-    th, _ = batch_token_hashes([text])
+    import pyarrow as pa
+
+    th, _ = arrow_token_hashes(pa.array([text], type=pa.string()))
     return np.unique(_kgram_fold(th, k))
 
 
 def arrow_token_hashes(txt) -> tuple[np.ndarray, np.ndarray]:
     """`token_hashes_from_buffer` over an Arrow string column, zero-copy off
-    its UTF-8 buffer; exotic layouts fall back through Python strings."""
-    view = utf8_buffer_view(txt)
-    if view is not None:
-        return token_hashes_from_buffer(*view)
-    return batch_token_hashes([t if t is not None else "" for t in txt.to_pylist()])
+    its UTF-8 buffer (`utf8_buffer_view`)."""
+    return token_hashes_from_buffer(*utf8_buffer_view(txt))
 
 
 def list_array(flat: np.ndarray, bounds: np.ndarray):

@@ -1,13 +1,14 @@
-"""Exact-substring duplicate pass (the north rule's "distributed suffix-array
-pass for exact-substring dupes").
+"""Document containment: which documents lie inside another document.
 
-A literal distributed suffix array over 10^12 turns is not a Spark-shaped
-object; the standard relational approximation (documented tradeoff, SURVEY.md
-§7.2) is fixed-width anchor shingles: every document emits the hash of each
-w-token window (its "suffix anchors"); a short document whose ENTIRE anchor
-set is contained in another document's anchor set is — with w chosen below the
-min overlap of interest — an exact-substring candidate, then verified with a
-real `contains` check on the pair (cheap: candidates are rare).
+This is not the north rule's exact-substring pass — that is
+`operators/suffixarray.py`, which finds every duplicated L-character
+substring at character granularity.  This pass answers a coarser,
+document-level question with fixed-width anchor shingles (SURVEY.md §7.2):
+every document emits the hash of each w-token window (its anchors); a short
+document whose ENTIRE anchor set is contained in another document's anchor
+set is — with w chosen below the min overlap of interest — a containment
+candidate, then verified with a real `contains` check on the pair (cheap:
+candidates are rare).
 
 containment(a ⊂ b) = |anchors(a) ∩ anchors(b)| / |anchors(a)|
 

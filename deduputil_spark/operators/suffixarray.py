@@ -6,65 +6,59 @@ Models Better") semantics: find every position whose length-L substring
 occurs at two or more positions anywhere in the corpus, and merge those
 positions into duplicated spans (the text you would strip from a training
 set).  Positions sharing an L-gram are exactly the equality classes of the
-L-truncated suffix array; both paths below compute those classes without
-building the array.  Reference parity: this is the corpus-wide
-generalization of deduputil's block-hash duplicate lookup (src/dedup.c:
-329-395, probe a hashtable with the chunk hash, compare the bytes on a hit)
-to EVERY character offset instead of chunk boundaries.
+L-truncated suffix array; this pass computes those classes without building
+the array.  Reference parity: this is the corpus-wide generalization of
+deduputil's block-hash duplicate lookup (src/dedup.c:329-395, probe a
+hashtable with the chunk hash, compare the bytes on a hit) to EVERY
+character offset instead of chunk boundaries.
 
-Two interchangeable paths, cross-checked in tests:
-
-- ``method="rolling"`` (default) — the scale path, the same shape as the
-  reference lookup: per-document vectorized mod-2^64 polynomial rolling
-  hash (uint64 wraparound prefix sums over UTF-32 codepoints, odd base =>
-  invertible), so the corpus-wide exchange carries 8-byte hashes instead
-  of L-char grams; candidate groups are re-verified against the actual
-  gram so hash collisions cannot produce false duplicates.
-- ``method="direct"`` — substring + groupBy(gram), the reference the tests
-  compare against (shuffles O(L) bytes per position; small-scale only).
+One path, the same shape as the reference lookup: a mod-2^64 polynomial
+rolling hash of every L-gram (`lgram_hashes`, one vectorized pass per Arrow
+batch over the documents' code points), so the corpus-wide exchange
+carries 8-byte hashes instead of L-char grams; candidate groups are then
+re-verified against the actual gram, so hash collisions cannot produce
+false duplicates.  The tests compare it with a Python brute force and with
+the DuckDB gram SQL.
 
 Positions are CHARACTER offsets (0-based), matching SQL ``substr``
 semantics for any unicode text.
 
-SCALE NOTES: both paths materialize O(total_chars) position rows — that is
+SCALE NOTES: the pass materializes O(total_chars) position rows — that is
 inherent to suffix-array semantics, not an implementation choice; the knob
-that matters is bytes-per-position on the wire (8 for rolling vs L for
-direct).  Per-doc numpy work is cache-resident (docs are KBs) — no
-batch-global temps (see BENCH/BASELINE.md round-4 allocator note).
+that matters is bytes-per-position on the wire (8).
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from deduputil_spark.cache import track
 
 # odd 64-bit base -> invertible mod 2^64; value is arbitrary but fixed
 _B = 0x9E3779B97F4A7C15 | 1
 _BINV = pow(_B, -1, 1 << 64)
 
-# ---------------------------------------------------------------------------
-# direct path (the reference the tests compare against)
-# ---------------------------------------------------------------------------
 
-def lgrams_direct(docs: DataFrame, L: int) -> DataFrame:
-    """-> (id, pos, gram): every L-character gram with its start offset.
-    Oracle-parity path — carries the gram text itself (O(L) bytes/position)."""
-    return docs.select(
-        "doc_id",
-        F.posexplode(
-            F.when(
-                F.length("text") >= L,
-                F.transform(
-                    F.sequence(F.lit(0), F.length("text") - L),
-                    lambda i: F.substring(F.col("text"), i + 1, L),
-                ),
-            ).otherwise(F.array().cast("array<string>"))
-        ).alias("pos", "gram"),
-    )
+def _code_points(data: np.ndarray, bounds: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(code points, char bounds) of back-to-back UTF-8 documents, decoded in
+    numpy: each lead byte starts a char whose byte count is the distance to
+    the next lead byte; its payload bits are masked and up to three
+    continuation bytes folded in.  Byte bounds map to char bounds by
+    counting the lead bytes before them.  An ASCII-only buffer is returned
+    as it is (byte == code point below 0x80)."""
+    if not (data >= 0x80).any():
+        return data, bounds
+    starts = np.flatnonzero((data & 0xC0) != 0x80)
+    nbytes = np.diff(starts, append=data.size)
+    lead_bits = np.array([0, 0x7F, 0x1F, 0x0F, 0x07], dtype=np.uint8)[nbytes]
+    cp = (data[starts] & lead_bits).astype(np.uint32)
+    for k in range(1, int(nbytes.max())):
+        m = nbytes > k
+        cp[m] = (cp[m] << 6) | (data[starts[m] + k] & 0x3F)
+    return cp, np.searchsorted(starts, bounds)
 
-# ---------------------------------------------------------------------------
-# rolling-hash scale path
-# ---------------------------------------------------------------------------
 
 def lgram_hashes(docs: DataFrame, L: int) -> DataFrame:
     """-> (id, pos, h): mod-2^64 polynomial rolling hash of every L-gram.
@@ -74,18 +68,13 @@ def lgram_hashes(docs: DataFrame, L: int) -> DataFrame:
     exact mod-2^64; equal grams always hash equal.  8 bytes/position on the
     wire — the reason this is the 100-TB path.
 
-    The hot path is batch-global and zero-copy: because the B^{-p}
-    normalization makes a gram's hash independent of its position, the
-    prefix arithmetic runs ONCE over the whole Arrow UTF-8 values buffer
-    (docs are contiguous segments of it; byte == codepoint below 0x80), into
-    scratch buffers reused across batches (fresh >1MB temps page-fault-churn
-    on this class of host — see BENCH/BASELINE.md round-4 allocator note).
-    Measured 3× the per-doc-numpy form single-threaded (37 vs 12.6 Mchar/s
-    on the sf0.1 documents table).  Only docs containing multibyte chars
-    drop to a per-doc ``as_py().encode("utf-32")`` path so positions stay
-    exact CHARACTER offsets; both paths produce identical hashes for
-    identical grams (ASCII codepoints equal their byte values)."""
-    import numpy as np
+    Because the B^{-p} normalization makes a gram's hash independent of its
+    position, the prefix arithmetic runs ONCE over the code points of the
+    whole batch (`_code_points` over the Arrow UTF-8 values buffer; docs are
+    contiguous segments of it), into scratch buffers reused across batches
+    (fresh >1MB temps page-fault-churn on this class of host — see
+    BENCH/BASELINE.md round-4 allocator note); only windows that lie inside
+    one document are emitted."""
     import pyarrow as pa
 
     from deduputil_spark.operators.minhash import utf8_buffer_view
@@ -93,24 +82,6 @@ def lgram_hashes(docs: DataFrame, L: int) -> DataFrame:
     id_field = docs.schema["doc_id"].dataType.simpleString()
     out_schema = f"doc_id {id_field}, pos int, h bigint"
     Lc = int(L)
-
-    def _doc_hashes(cp: np.ndarray) -> np.ndarray:
-        """Exact per-doc fallback (multibyte docs / exotic Arrow layouts)."""
-        n = cp.size
-        with np.errstate(over="ignore"):
-            pw = np.empty(n, dtype=np.uint64)
-            pw[0] = 1
-            if n > 1:
-                np.cumprod(np.full(n - 1, _B, dtype=np.uint64), out=pw[1:])
-            terms = cp.astype(np.uint64) * pw
-            S = np.empty(n + 1, dtype=np.uint64)
-            S[0] = 0
-            np.cumsum(terms, out=S[1:])
-            ipw = np.empty(n - Lc + 1, dtype=np.uint64)
-            ipw[0] = 1
-            if n - Lc > 0:
-                np.cumprod(np.full(n - Lc, _BINV, dtype=np.uint64), out=ipw[1:])
-            return (S[Lc:] - S[: n - Lc + 1]) * ipw
 
     def batches(it):
         scratch: dict[str, np.ndarray] = {}
@@ -124,73 +95,39 @@ def lgram_hashes(docs: DataFrame, L: int) -> DataFrame:
             return b[:n]
 
         for batch in it:
-            ids_col = batch.column(0)
-            texts = batch.column(1)
-            view = utf8_buffer_view(texts)
-            out_ids, out_pos, out_h = [], [], []
-            mb_rows: set[int] = set()
-            if view is not None:
-                data, bounds = view
-                n = data.size
-                if n:
-                    # docs containing any byte >= 0x80 leave the global path
-                    mb_rows = set(
-                        (np.searchsorted(bounds, np.flatnonzero(data >= 0x80), side="right") - 1).tolist()
-                    )
-                if n >= Lc:
-                    with np.errstate(over="ignore"):
-                        pw = buf("pw", n)
-                        pw[0] = 1
-                        base = buf("base", n)
-                        base[:] = _B
-                        np.cumprod(base[: n - 1], out=pw[1:])
-                        terms = buf("terms", n)
-                        np.multiply(data, pw, out=terms)  # uint8 broadcast-cast
-                        S = buf("S", n + 1)
-                        S[0] = 0
-                        np.cumsum(terms, out=S[1:])
-                        ipw = buf("ipw", n - Lc + 1)
-                        ipw[0] = 1
-                        base[:] = _BINV
-                        np.cumprod(base[: n - Lc], out=ipw[1:])
-                        h = buf("h", n - Lc + 1)
-                        np.subtract(S[Lc:], S[: n - Lc + 1], out=h)
-                        np.multiply(h, ipw, out=h)
-                    lens = np.diff(bounds)
-                    vc = np.maximum(lens - Lc + 1, 0)
-                    if mb_rows:
-                        vc[sorted(mb_rows)] = 0
-                    total = int(vc.sum())
-                    if total:
-                        row_idx = np.repeat(np.arange(len(vc), dtype=np.int64), vc)
-                        cum = np.zeros(len(vc) + 1, dtype=np.int64)
-                        np.cumsum(vc, out=cum[1:])
-                        pos = np.arange(total, dtype=np.int64) - np.repeat(cum[:-1], vc)
-                        g = np.repeat(bounds[:-1], vc) + pos
-                        out_ids.append(row_idx)
-                        out_pos.append(pos.astype(np.int32))
-                        out_h.append(h[g].view(np.int64))
-                rows_needing_python = sorted(mb_rows)
-            else:
-                rows_needing_python = range(batch.num_rows)
-            for i in rows_needing_python:
-                s = texts[i].as_py()
-                if s is None:
-                    continue
-                cp = np.frombuffer(s.encode("utf-32-le"), dtype=np.uint32)
-                if cp.size < Lc:
-                    continue
-                out_ids.append(np.full(cp.size - Lc + 1, i, dtype=np.int64))
-                out_pos.append(np.arange(cp.size - Lc + 1, dtype=np.int32))
-                out_h.append(_doc_hashes(cp).view(np.int64))
-            if not out_ids:
+            data, bounds = _code_points(*utf8_buffer_view(batch.column(1)))
+            n = data.size
+            vc = np.maximum(np.diff(bounds) - Lc + 1, 0)  # windows per doc
+            total = int(vc.sum())
+            if not total:
                 continue
-            row_idx = pa.array(np.concatenate(out_ids))
+            with np.errstate(over="ignore"):
+                pw = buf("pw", n)
+                pw[0] = 1
+                base = buf("base", n)
+                base[:] = _B
+                np.cumprod(base[: n - 1], out=pw[1:])
+                terms = buf("terms", n)
+                np.multiply(data, pw, out=terms)
+                S = buf("S", n + 1)
+                S[0] = 0
+                np.cumsum(terms, out=S[1:])
+                ipw = buf("ipw", n - Lc + 1)
+                ipw[0] = 1
+                base[:] = _BINV
+                np.cumprod(base[: n - Lc], out=ipw[1:])
+                h = buf("h", n - Lc + 1)
+                np.subtract(S[Lc:], S[: n - Lc + 1], out=h)
+                np.multiply(h, ipw, out=h)
+            cum = np.zeros(len(vc) + 1, dtype=np.int64)
+            np.cumsum(vc, out=cum[1:])
+            pos = np.arange(total, dtype=np.int64) - np.repeat(cum[:-1], vc)
+            g = np.repeat(bounds[:-1], vc) + pos
             yield pa.RecordBatch.from_arrays(
                 [
-                    ids_col.take(row_idx),
-                    pa.array(np.concatenate(out_pos)),
-                    pa.array(np.concatenate(out_h)),
+                    batch.column(0).take(pa.array(np.repeat(np.arange(len(vc)), vc))),
+                    pa.array(pos.astype(np.int32)),
+                    pa.array(h[g].view(np.int64)),
                 ],
                 names=["doc_id", "pos", "h"],
             )
@@ -198,22 +135,22 @@ def lgram_hashes(docs: DataFrame, L: int) -> DataFrame:
     return docs.select("doc_id", "text").mapInArrow(batches, out_schema)
 
 # ---------------------------------------------------------------------------
-# duplicated positions / spans (both methods)
+# duplicated positions / spans
 # ---------------------------------------------------------------------------
 
-def _dup_keys(df: DataFrame, *key_cols: str) -> DataFrame:
-    """Distinct key tuples occurring >= 2 times, via groupBy().count() — a
-    hash aggregate with MAP-SIDE partial combine, so a corpus-hot key (a
+def _dup_keys(df: DataFrame, key: str) -> DataFrame:
+    """Distinct keys occurring >= 2 times, via groupBy().count() — a hash
+    aggregate with MAP-SIDE partial combine, so a corpus-hot key (a
     boilerplate gram at 10^7 positions) collapses to ONE partial row per map
     task before the exchange; the shuffle carries one (key, count) row per
     distinct key per task no matter how skewed the data is.  This is the
     skew-safe replacement for Window.partitionBy(key) (which ships every raw
     row of the hot key to a single task — VERDICT r4 #1)."""
     return (
-        df.groupBy(*key_cols)
+        df.groupBy(key)
         .agg(F.count(F.lit(1)).alias("_gcnt"))
         .filter(F.col("_gcnt") >= 2)
-        .select(*key_cols)
+        .select(key)
     )
 
 #: broadcast budget for a dup-key set in the semi-join back (raw key bytes).
@@ -224,83 +161,70 @@ def _dup_keys(df: DataFrame, *key_cols: str) -> DataFrame:
 #: plain shuffle semi-join (AQE skew-splittable) is the correct fallback.
 DUP_KEY_BCAST_BYTES = 64 << 20
 
-def _filter_dup_groups(
-    df: DataFrame, *key_cols: str, key_bytes: int | None = None
-) -> DataFrame:
-    """Rows whose key tuple occurs >= 2 times: skew-safe aggregate prefilter
+def _filter_dup_groups(df: DataFrame, key: str, key_bytes: int) -> DataFrame:
+    """Rows whose key occurs >= 2 times: skew-safe aggregate prefilter
     (`_dup_keys`) + LEFT SEMI join back.
 
-    When `key_bytes` (estimated bytes per key tuple) is given, the dup-key
-    set is eagerly checkpointed, counted (free off the checkpoint), and
-    BROADCAST when it fits DUP_KEY_BCAST_BYTES — then the big O(positions)
+    The dup-key set is persisted (`cache.track`, freed by
+    `release_caches()`), counted, and BROADCAST when it fits
+    DUP_KEY_BCAST_BYTES at `key_bytes` per key — then the big O(positions)
     frame never shuffles at all: the only full exchange in the whole filter
     is the partial-count aggregate, and the probe side streams map-side.
-    Past the budget (or with key_bytes=None) the semi-join shuffles both
-    sides — a streaming hash probe AQE skew-join can split, unlike a window.
+    Past the budget the semi-join shuffles both sides — a streaming hash
+    probe AQE skew-join can split, unlike a window.  The persisted set is a
+    hash aggregate without sampling, so a recompute after release yields the
+    same rows.
 
     Cost: the input lineage executes twice (once per join side) — for the
     narrow mapInArrow hash map that recompute is deliberate, far cheaper at
     corpus scale than persisting O(total_chars) rows (Lee et al.
     recompute-over-materialize tradeoff)."""
-    dup = _dup_keys(df, *key_cols)
-    if key_bytes is not None:
-        dup = dup.localCheckpoint(eager=True)
-        if dup.count() * key_bytes <= DUP_KEY_BCAST_BYTES:
-            dup = F.broadcast(dup)
-    return df.join(dup, list(key_cols), "left_semi")
+    dup = track(_dup_keys(df, key))
+    if dup.count() * key_bytes <= DUP_KEY_BCAST_BYTES:
+        dup = F.broadcast(dup)
+    return df.join(dup, key, "left_semi")
 
-def duplicated_positions(docs: DataFrame, L: int, method: str = "rolling") -> DataFrame:
+def duplicated_positions(docs: DataFrame, L: int) -> DataFrame:
     """-> (id, pos): every position whose L-gram occurs >= 2 times anywhere
     in the corpus (cross-doc or same-doc at a different offset).
 
-    Both methods share the skew-safe dup-group filter (`_dup_keys` +
+    Both filters below are the skew-safe dup-group filter (`_dup_keys` +
     semi-join): no Window over a corpus-frequency-distributed key anywhere,
-    so a hot gram cannot pin one task (VERDICT r4 #1), and the rolling path's
-    big exchange shrinks to dup candidates only (VERDICT r4 #2) — most
-    positions in a real corpus are unique and now never cross the wire."""
-    if method == "direct":
-        grams = lgrams_direct(docs, L)
-        return _filter_dup_groups(grams, "gram").select("doc_id", "pos")
-    if method == "rolling":
-        hashes = lgram_hashes(docs, L)
-        # prefilter: the only full-corpus exchange is the 8B-per-distinct-hash
-        # partial-count aggregate; positions themselves never shuffle while
-        # the dup-hash set fits the broadcast budget (key_bytes=8 → the
-        # semi-probe runs map-side over the recomputed narrow hash map).
-        # The narrow hash map deliberately RECOMPUTES for the probe side:
-        # an adaptive persist (VERDICT r5's suggested fix) was implemented
-        # and measured this round — the columnar cache write of O(positions)
-        # rows costs MORE than the zero-copy mapInArrow recompute at every
-        # scale tried (interleaved A/B at sf0.1: median 5.15 s recompute vs
-        # 6.32 s persisted), so recompute-over-materialize stays, now with
-        # measurement rather than only the Lee-et-al. scale argument.
-        cand = _filter_dup_groups(hashes, "h", key_bytes=8)
-        # candidates (bounded by the corpus dup volume) are materialized once —
-        # they feed the docs prune AND the gram verify below
-        cand = cand.localCheckpoint(eager=False)
-        # exact verification of hash-candidate groups: re-extract the gram for
-        # candidates only and regroup (2^-64 collisions cannot survive).  The
-        # docs side is semi-pruned to candidate docs first so the verify join
-        # ships only the text of documents that contain a dup candidate.
-        cand_docs = docs.select("doc_id", "text").join(
-            cand.select("doc_id"), "doc_id", "left_semi"
-        )
-        with_gram = cand.join(cand_docs, "doc_id").select(
-            "doc_id", "pos", F.col("text").substr(F.col("pos") + 1, F.lit(L)).alias("gram")
-        )
-        # dup grams are UTF-8 strings of length L (≈4L bytes worst case)
-        return _filter_dup_groups(with_gram, "gram", key_bytes=4 * L).select(
-            "doc_id", "pos"
-        )
-    raise ValueError(f"unknown method {method!r}")
+    so a hot gram cannot pin one task (VERDICT r4 #1), and the big exchange
+    shrinks to dup candidates only (VERDICT r4 #2) — most positions in a
+    real corpus are unique and never cross the wire."""
+    hashes = lgram_hashes(docs, L)
+    # prefilter: the only full-corpus exchange is the 8B-per-distinct-hash
+    # partial-count aggregate; positions themselves never shuffle while the
+    # dup-hash set fits the broadcast budget (the semi-probe runs map-side
+    # over the recomputed narrow hash map).  The narrow hash map
+    # deliberately RECOMPUTES for the probe side: an adaptive persist was
+    # implemented and measured — the columnar cache write of O(positions)
+    # rows costs MORE than the zero-copy mapInArrow recompute at every scale
+    # tried (interleaved A/B at sf0.1: median 5.15 s recompute vs 6.32 s
+    # persisted).
+    cand = _filter_dup_groups(hashes, "h", key_bytes=8)
+    # candidates (bounded by the corpus dup volume) are persisted once — they
+    # feed the docs prune AND the gram verify below
+    cand = track(cand)
+    # exact verification of hash-candidate groups: re-extract the gram for
+    # candidates only and regroup (2^-64 collisions cannot survive).  The
+    # docs side is semi-pruned to candidate docs first so the verify join
+    # ships only the text of documents that contain a dup candidate.
+    cand_docs = docs.select("doc_id", "text").join(cand.select("doc_id"), "doc_id", "left_semi")
+    with_gram = cand.join(cand_docs, "doc_id").select(
+        "doc_id", "pos", F.col("text").substr(F.col("pos") + 1, F.lit(L)).alias("gram")
+    )
+    # dup grams are UTF-8 strings of length L (≈4L bytes worst case)
+    return _filter_dup_groups(with_gram, "gram", key_bytes=4 * L).select("doc_id", "pos")
 
-def duplicated_spans(docs: DataFrame, L: int, method: str = "rolling") -> DataFrame:
+def duplicated_spans(docs: DataFrame, L: int) -> DataFrame:
     """-> (id, span_start, span_end, n_dup_grams): per document, the merged
     character spans covered by duplicated L-grams (span_end exclusive).
     Two dup positions merge when their [p, p+L) intervals overlap or touch
     (gap > L splits).  The per-doc window is bounded by document length —
     safe at any corpus scale."""
-    dup = duplicated_positions(docs, L, method)
+    dup = duplicated_positions(docs, L)
     w = Window.partitionBy("doc_id").orderBy("pos")
     flagged = dup.withColumn(
         "brk",
@@ -318,7 +242,7 @@ def duplicated_spans(docs: DataFrame, L: int, method: str = "rolling") -> DataFr
         F.count(F.lit(1)).cast("long").alias("n_dup_grams"),
     ).drop("island")
 
-def strip_duplicated_spans(docs: DataFrame, L: int, method: str = "rolling") -> DataFrame:
+def strip_duplicated_spans(docs: DataFrame, L: int) -> DataFrame:
     """-> original doc columns + (clean_text, n_stripped): each document's
     text with every duplicated span removed — the cleaned-corpus output of
     the exact-substring dedup pass (Lee et al. 2021 ExactSubstr semantics:
@@ -330,7 +254,7 @@ def strip_duplicated_spans(docs: DataFrame, L: int, method: str = "rolling") -> 
     ``F.aggregate``, concatenating the kept segments between consecutive
     spans — no UDF, no explode back, one narrow join of docs against the
     per-doc span arrays (span counts are tiny relative to text)."""
-    spans = duplicated_spans(docs, L, method)
+    spans = duplicated_spans(docs, L)
     span_arr = spans.groupBy("doc_id").agg(
         F.array_sort(
             F.collect_list(F.struct(F.col("span_start").alias("s"), F.col("span_end").alias("e")))

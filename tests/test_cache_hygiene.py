@@ -70,3 +70,21 @@ def test_brute_force_guards(spark):
     # under the cap (and with the guard off) both still run
     assert embedding_near_pairs(emb, threshold=-1.0, max_rows=100).count() > 0
     assert cosine_topk(emb, emb.limit(2), k=3).count() > 0
+
+
+def test_suffix_queries_leave_no_persisted_rdds(spark):
+    """Each suffix driver query persists its dup-key sets and candidates;
+    after `release_caches()` no RDD that the query persisted is still listed
+    (compared as id sets: ids persisted before the query may be collected
+    meanwhile, so a count can move for unrelated reasons)."""
+    import __spark_entry__ as em
+
+    def ids() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    for name in ("suffix_dup_positions", "suffix_spans", "suffix_strip"):
+        release_caches()
+        before = ids()
+        em.queries()[name](spark, "/root/testdata/sf0.001").count()
+        release_caches()
+        assert ids() <= before, name

@@ -178,7 +178,7 @@ def test_cdc_new_cut_hashes_fast_matches_ref(fn):
 # RecordBatches must emit, for every document, the cuts of cdc_cuts_ref /
 # fsp_cuts / sb_spans plus the always-emitted tail, each chunk's weak32 from
 # adler32_checksum, and chunk bytes that tile the document — on every string
-# layout its zero-copy view reads and on the exotic-layout fallback.
+# layout `utf8_buffer_view` reads.
 # ---------------------------------------------------------------------------
 
 def _is_utf8(data: bytes) -> bool:
@@ -246,7 +246,7 @@ def test_arrow_batch_chunker_matches_scalar_walk(cfg):
         "sliced": (docs, strings([b"pad", *docs.values(), b"pad"]).slice(1, len(docs))),
         "large_string": (docs, strings(list(docs.values()), pa.large_binary(), pa.large_string())),
         "nulls": (with_nulls, strings(list(with_nulls.values()))),
-        # no zero-copy view of a dictionary column: the rebuilt-buffer fallback
+        # a dictionary column is decoded by `utf8_buffer_view` first
         "dictionary": (text, pa.array(list(text.values())).dictionary_encode()),
     }
     chunker = make_arrow_chunker(cfg)

@@ -7,6 +7,7 @@ from __future__ import annotations
 import tempfile
 
 import numpy as np
+import pyarrow as pa
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -23,7 +24,6 @@ from deduputil_spark.operators.minhash import (
     arrow_token_hashes,
     batch_kgram_sets,
     batch_oph_signatures,
-    batch_token_hashes,
     doc_kgram_hashes,
     lsh_bands,
     minhash_jaccard_estimate,
@@ -216,7 +216,7 @@ def test_docs_without_kgrams_cluster_together(spark):
 def test_batch_kernels_match_single_doc_kernels(texts, k, num_perm):
     """Spark-free: the batch k-gram sets and batch OPH equal the single-doc
     kernels on arbitrary batches (empty, short and whitespace-only docs)."""
-    keys, bounds = batch_kgram_sets(*batch_token_hashes(texts), k)
+    keys, bounds = batch_kgram_sets(*arrow_token_hashes(pa.array(texts, type=pa.string())), k)
     sigs = batch_oph_signatures(keys, bounds, num_perm).reshape(len(texts), num_perm)
     edges = oph_bin_edges(num_perm)
     assert len(bounds) == len(texts) + 1
@@ -279,8 +279,6 @@ def test_arrow_token_hashes_match_scalar_model(before, texts, after, large):
     """Spark-free: `arrow_token_hashes` on a sliced Arrow string array (a
     non-zero offset whenever `before` is non-empty; nulls are empty docs)
     takes the zero-copy buffer path and equals the scalar model."""
-    import pyarrow as pa
-
     arr = pa.array(before + texts + after, type=pa.large_string() if large else pa.string())
     arr = arr.slice(len(before), len(texts))
     assert utf8_buffer_view(arr) is not None

@@ -1,7 +1,9 @@
-"""Exact-substring pass (operators/suffixarray.py): both methods (rolling /
-direct) vs a Python brute force, cross-method equivalence, unicode
-char-position semantics, exactness at the gram length L, span merging and
-stripping."""
+"""Exact-substring pass (operators/suffixarray.py): the rolling-hash path vs
+a Python brute force (fixed docs, property tests over 1- to 4-byte UTF-8
+chars and nulls) and vs the DuckDB gram SQL at sf0.1, unicode
+char-position semantics, the hash values themselves, exactness at the gram
+length L, span merging and stripping.  The release of the pass's persists is
+checked in test_cache_hygiene."""
 
 from __future__ import annotations
 
@@ -48,11 +50,10 @@ def docs_df(spark):
     return spark.createDataFrame(DOCS, "doc_id int, text string").cache()
 
 
-@pytest.mark.parametrize("method", ["direct", "rolling"])
-@pytest.mark.parametrize("L", [3, 5, 8])
-def test_duplicated_positions_vs_brute(docs_df, method, L):
+@pytest.mark.parametrize("L", [3, 5, 8], ids=lambda L: f"{L}-rolling")
+def test_duplicated_positions_vs_brute(docs_df, L):
     exp = brute_dup_positions(DOCS, L)
-    got = {(r.doc_id, r.pos) for r in duplicated_positions(docs_df, L, method).collect()}
+    got = {(r.doc_id, r.pos) for r in duplicated_positions(docs_df, L).collect()}
     assert got == exp
 
 
@@ -63,9 +64,8 @@ def test_unicode_char_positions(spark):
     df = spark.createDataFrame(docs, "doc_id int, text string")
     exp = brute_dup_positions(docs, 3)
     assert exp  # the planted repeat exists
-    for method in ("direct", "rolling"):
-        got = {(r.doc_id, r.pos) for r in duplicated_positions(df, 3, method).collect()}
-        assert got == exp, method
+    got = {(r.doc_id, r.pos) for r in duplicated_positions(df, 3).collect()}
+    assert got == exp
 
 
 @settings(max_examples=8, deadline=None)
@@ -77,9 +77,26 @@ def test_property_methods_match_brute(spark, texts, L):
     docs = list(enumerate(texts))
     df = spark.createDataFrame(docs, "doc_id int, text string")
     exp = brute_dup_positions(docs, L)
-    for method in ("direct", "rolling"):
-        got = {(r.doc_id, r.pos) for r in duplicated_positions(df, L, method).collect()}
-        assert got == exp, (method, texts, L)
+    got = {(r.doc_id, r.pos) for r in duplicated_positions(df, L).collect()}
+    assert got == exp, (texts, L)
+
+
+@settings(max_examples=10, deadline=None)
+@given(
+    texts=st.lists(
+        st.one_of(st.none(), st.text(alphabet="aé中😀 ", max_size=30)), min_size=2, max_size=8
+    ),
+    L=st.integers(min_value=2, max_value=5),
+)
+def test_property_mixed_width_batches_match_brute(spark, texts, L):
+    """Several docs share one Arrow batch (one partition), mixing 1-, 2-, 3-
+    and 4-byte UTF-8 chars with null docs: positions stay exact character
+    offsets in every doc of the batch."""
+    docs = list(enumerate(texts))
+    df = spark.createDataFrame(docs, "doc_id int, text string").coalesce(1)
+    exp = brute_dup_positions([(i, t) for i, t in docs if t is not None], L)
+    got = {(r.doc_id, r.pos) for r in duplicated_positions(df, L).collect()}
+    assert got == exp, (texts, L)
 
 
 def test_spans_merge_and_split(spark):
@@ -90,7 +107,7 @@ def test_spans_merge_and_split(spark):
     df = spark.createDataFrame(docs, "doc_id int, text string")
     spans = {
         (r.doc_id, r.span_start, r.span_end)
-        for r in duplicated_spans(df, 4, "rolling").collect()
+        for r in duplicated_spans(df, 4).collect()
     }
     # brute: union of [p, p+4) over dup positions, merged with gap > 4 split
     exp_pos = brute_dup_positions(docs, 4)
@@ -116,11 +133,10 @@ def test_truncation_exact_at_L(spark):
     # L=5, NOT at L=6 — a gram must be compared over exactly L characters.
     docs = [(1, "abcdeXqq"), (2, "abcdeYqq")]
     df = spark.createDataFrame(docs, "doc_id int, text string")
-    for method in ("rolling", "direct"):
-        got5 = {(r.doc_id, r.pos) for r in duplicated_positions(df, 5, method).collect()}
-        assert got5 == {(1, 0), (2, 0)}, method
-        got6 = {(r.doc_id, r.pos) for r in duplicated_positions(df, 6, method).collect()}
-        assert got6 == set(), method
+    got5 = {(r.doc_id, r.pos) for r in duplicated_positions(df, 5).collect()}
+    assert got5 == {(1, 0), (2, 0)}
+    got6 = {(r.doc_id, r.pos) for r in duplicated_positions(df, 6).collect()}
+    assert got6 == set()
 
 
 def test_rolling_hash_no_false_negatives_on_runs(spark):
@@ -128,24 +144,24 @@ def test_rolling_hash_no_false_negatives_on_runs(spark):
     # rolling path must keep them all (hash groups huge, verify exact)
     docs = [(1, "a" * 30)]
     df = spark.createDataFrame(docs, "doc_id int, text string")
-    got = {(r.doc_id, r.pos) for r in duplicated_positions(df, 4, "rolling").collect()}
+    got = {(r.doc_id, r.pos) for r in duplicated_positions(df, 4).collect()}
     assert got == {(1, p) for p in range(27)}
 
 
 def test_lgram_hashes_equal_iff_gram_equal(spark):
-    # hash equality must hold for equal grams (guaranteed); verify on a doc
-    # set with repeats that hashes of equal grams coincide
-    docs = [(1, "hello world hello world")]
-    df = spark.createDataFrame(docs, "doc_id int, text string")
+    # every hash equals the polynomial of its gram's code points, sum of
+    # ord(c) * B^j mod 2^64, whatever the gram's position, byte widths or
+    # neighbours in the batch: equal grams hash equal within and across docs
+    from deduputil_spark.operators.suffixarray import _B
+
+    docs = [(1, "hello world hello world"), (2, "é中😀 hello é中😀 w")]
+    df = spark.createDataFrame(docs, "doc_id int, text string").coalesce(1)
     rows = lgram_hashes(df, 5).collect()
-    grams = {}
-    text = docs[0][1]
     for r in rows:
-        g = text[r.pos : r.pos + 5]
-        if g in grams:
-            assert grams[g] == r.h
-        grams[g] = r.h
-    assert len(rows) == len(text) - 5 + 1
+        g = dict(docs)[r.doc_id][r.pos : r.pos + 5]
+        h = sum(ord(c) * pow(_B, j, 1 << 64) for j, c in enumerate(g)) % (1 << 64)
+        assert r.h == h - (1 << 64) * (h >> 63), (r.doc_id, r.pos)
+    assert len(rows) == sum(len(t) - 5 + 1 for _, t in docs)
 
 
 def brute_clean(docs: list[tuple[int, str]], L: int) -> dict[int, str]:
@@ -163,11 +179,9 @@ def brute_clean(docs: list[tuple[int, str]], L: int) -> dict[int, str]:
 
 def test_strip_duplicated_spans_vs_brute(docs_df):
     exp = brute_clean(DOCS, 3)
-    for method in ("rolling", "direct"):
-        got = {r.doc_id: r.clean_text for r in strip_duplicated_spans(docs_df, 3, method).collect()}
-        assert got == exp, method
-    # n_stripped matches, original columns preserved
     rows = strip_duplicated_spans(docs_df, 3).collect()
+    assert {r.doc_id: r.clean_text for r in rows} == exp
+    # n_stripped matches, original columns preserved
     for r in rows:
         assert r.n_stripped == len(r.text) - len(r.clean_text)
 
@@ -181,7 +195,7 @@ def test_property_strip_matches_brute(spark, texts, L):
     docs = list(enumerate(texts))
     df = spark.createDataFrame(docs, "doc_id int, text string")
     exp = brute_clean(docs, L)
-    got = {r.doc_id: r.clean_text for r in strip_duplicated_spans(df, L, "rolling").collect()}
+    got = {r.doc_id: r.clean_text for r in strip_duplicated_spans(df, L).collect()}
     assert got == exp, (texts, L)
 
 
@@ -189,8 +203,7 @@ def test_all_unique_corpus_empty(spark):
     df = spark.createDataFrame(
         [(1, "abcdefgh"), (2, "ijklmnop")], "doc_id int, text string"
     )
-    for method in ("direct", "rolling"):
-        assert duplicated_positions(df, 4, method).count() == 0
+    assert duplicated_positions(df, 4).count() == 0
 
 
 def test_mega_gram_skew_plan_and_correctness(spark):
@@ -212,11 +225,11 @@ def test_mega_gram_skew_plan_and_correctness(spark):
     rows.append((2000, "".join(rng.choice(alpha) for _ in range(200))))
     df = spark.createDataFrame(rows, "doc_id int, text string")
     L = 20
-    dup = duplicated_positions(df, L, "rolling")
+    dup = duplicated_positions(df, L)
     plan = dup._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in plan, "skewed window form resurfaced in rolling path"
-    # dup keys were pre-counted into a checkpoint (the HashAggregate ran
-    # there) and came back as a broadcast probe — positions never shuffle
+    # dup keys were pre-counted into a persisted frame (the HashAggregate
+    # ran there) and came back as a broadcast probe — positions never shuffle
     assert "BroadcastHashJoin" in plan
     got = dup.count()
     # every hot-gram position in every doc is duplicated; pads are unique-ish
@@ -232,11 +245,10 @@ def test_mega_gram_skew_plan_and_correctness(spark):
 
 
 def test_rolling_parity_sf01_driver_table(spark):
-    """VERDICT r4 #7: certify the SCALE path (rolling) at the largest local
-    test size — sf0.1 documents (~1.5M chars), against the same DuckDB
-    direct-gram oracle the driver uses for suffix_dup_positions (which runs
-    the same rolling method at sf0.001 and sf0.01).  Exact set equality,
-    position-for-position."""
+    """VERDICT r4 #7: certify the pass at the largest local test size —
+    sf0.1 documents (~1.5M chars), against the same DuckDB gram oracle that
+    checks the driver's suffix_dup_positions at sf0.001 and sf0.01.  Exact
+    set equality, position-for-position."""
     import duckdb
 
     import __spark_entry__ as em
@@ -245,7 +257,7 @@ def test_rolling_parity_sf01_driver_table(spark):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
     got = {
         (r.doc_id, r.pos)
-        for r in duplicated_positions(docs, em.SUFFIX_L, "rolling").collect()
+        for r in duplicated_positions(docs, em.SUFFIX_L).collect()
     }
     con = duckdb.connect()
     con.execute(
